@@ -90,7 +90,7 @@ object AuthProfilePipeline {
     * session suppressor (repeat alerts EXTEND the quiet period rather
     * than re-emitting on a fixed cadence) stands in for that damping;
     * the faithful stateful form lives in [[stateAnalysis]] /
-    * `Streaming.authStateAnalyzeTws`. */
+    * `Streaming.authStateAnalyze`. */
   def analyze(lines: Dataset[String], aliases: DataFrame,
       resolver: GeoIp.GeoIpResolver, cfg: Config = Config()): DataFrame = {
     val auth = parsedAuthEnriched(lines, resolver)

@@ -373,8 +373,10 @@ object CustomsPipeline {
     * window-level second aggregation over the finalized window —
     * foreachBatch epilogue), and [[atRiskAlertStream]] (keyed
     * transformWithState, a different state family than windowed
-    * aggregates). Geo velocity composes via
-    * `Streaming.customsVelocityTws` when a resolver is available.
+    * aggregates). Geo velocity is not composed here: unlike
+    * [[analyzeFull]] this form takes no geo resolver, so it has no
+    * velocity branch; the keyed
+    * [[graft.streaming.Streaming.customsVelocity]] is a separate query.
     * StreamingSpec proves composed + siblings ≡ analyzeFull batch on
     * the same lines, with the late-event drop pinned. */
   def analyzeStreamFull(lines: Dataset[String],
@@ -629,7 +631,7 @@ object CustomsPipeline {
 
   /** Streaming at-risk login-failure chain — comparator flags and
     * login failures feed the keyed
-    * [[graft.streaming.Streaming.atRiskAccountsTws]] state kernel
+    * [[graft.streaming.Streaming.atRiskAccounts]] state kernel
     * (the reference's Datastore `ScannedByEntry` written by the
     * status comparator and read by the lfara transform). Sibling of
     * [[analyzeStreamFull]] because per-key transformWithState is a
@@ -650,7 +652,7 @@ object CustomsPipeline {
           .as("kind"))
       .filter(col("kind").isNotNull)
       .as[Streaming.AccountEvent]
-    streamAlert(Streaming.atRiskAccountsTws(ev).toDF(),
+    streamAlert(Streaming.atRiskAccounts(ev).toDF(),
       "login_failure_at_risk_account", "email", col("key"), lit(1),
       col("tsUs") / 1000)
   }

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{ListState, OutputMode,
+  StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode,
+  TimerValues, ValueState}
 
 /** Structured-Streaming forms of the engine's core operators
   * (SURVEY.md §2.4, §2.6). The batch forms (graft.operators) and these
@@ -14,7 +17,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - session_window ↔ ref 45-min-gap sessions (:151-163); the
   *    reference's accumulating early-fired panes map to update mode +
   *    downstream suppression (SURVEY.md §2.4 design note)
-  *  - flatMapGroupsWithState ↔ ref AlertSuppressor keyed ValueState +
+  *  - transformWithState ([[keyedScan]]: one [[ScanProcessor]] host,
+  *    one scan kernel per detector) ↔ ref keyed ValueState +
   *    processing-time Timer (s/alert/AlertSuppressor.java:53-143)
   *
   * Scale notes: all aggregations below are incremental — state is
@@ -473,6 +477,109 @@ object Streaming {
         lit("cfgtick").as("payload_type"),
         lit(configJson).as("value"))
 
+  // -- keyed state: one transformWithState host, one scan per detector ----
+
+  /** Native state TTL; 0 = none. */
+  private def ttlConfig(stateTtlSeconds: Long): TTLConfig =
+    if (stateTtlSeconds > 0)
+      TTLConfig(java.time.Duration.ofSeconds(stateTtlSeconds))
+    else TTLConfig.NONE
+
+  /** State TTL is a processing-time concept: the engine requires
+    * `TimeMode.ProcessingTime` whenever any state has a TTL. That mode
+    * keeps scheduling micro-batches on idle input — right for
+    * production, but it livelocks bounded replays that drain with
+    * `processAllAvailable` — so TTL is opt-in, and without it
+    * micro-batches stay purely data-driven. */
+  private def timeMode(stateTtlSeconds: Long): TimeMode =
+    if (stateTtlSeconds > 0) TimeMode.ProcessingTime() else TimeMode.None()
+
+  /** The keyed-state host every per-key detector runs on: Spark 4's
+    * `transformWithState`, the closest analog of the reference's keyed
+    * ValueState + expiry Timer (ref alert/AlertSuppressor.java:53-143).
+    * Per key it holds ONE named `ValueState[S]` with an optional native
+    * TTL (the store evicts idle keys itself, no timeout bookkeeping)
+    * and runs a pure per-micro-batch kernel
+    * `scan(key, state, rows) => (state', out)`; a `None` state' leaves
+    * the stored value untouched. When the query is seeded from a
+    * snapshot, `handleInitialState` writes the restored value once per
+    * key before any input row. Requires the RocksDB state store
+    * provider (`spark.sql.streaming.stateStore.providerClass =
+    * ...state.RocksDBStateStoreProvider`). */
+  class ScanProcessor[I, S, O](stateName: String, stateEncoder: Encoder[S],
+      stateTtlSeconds: Long,
+      scan: (String, Option[S], Seq[I]) => (Option[S], Seq[O]))
+      extends StatefulProcessorWithInitialState[String, I, O, S] {
+    @transient private var state: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[S](stateName, stateEncoder,
+        ttlConfig(stateTtlSeconds))
+
+    override def handleInitialState(key: String, initial: S,
+        timerValues: TimerValues): Unit = state.update(initial)
+
+    override def handleInputRows(key: String, rows: Iterator[I],
+        timerValues: TimerValues): Iterator[O] = {
+      val (next, out) = scan(key,
+        if (state.exists()) Some(state.get()) else None, rows.toSeq)
+      next.foreach(state.update)
+      out.iterator
+    }
+  }
+
+  /** Run `scan` per `key` on [[ScanProcessor]] in append mode. The
+    * state lives under `stateName`, the name [[snapshotTwsValueState]]
+    * reads it back by; `initial` seeds it from a restored snapshot
+    * ([[readStateSnapshot]]) so a new run continues exactly where a
+    * snapshotted one stopped (SURVEY §2.6 design point d: the
+    * reference's Datastore becomes Spark state plus parquet
+    * snapshots). Kernels get a micro-batch's rows in no defined order
+    * and sort them themselves; batches must arrive in event-time order
+    * for batch parity (the watermarked-source contract). */
+  def keyedScan[I, S: Encoder, O: Encoder](ds: Dataset[I], key: I => String,
+      stateName: String, stateTtlSeconds: Long = 0,
+      initial: Option[Dataset[(String, S)]] = None)(
+      scan: (String, Option[S], Seq[I]) => (Option[S], Seq[O])): Dataset[O] = {
+    val grouped = ds.groupByKey(key)(Encoders.STRING)
+    val processor = new ScanProcessor[I, S, O](stateName,
+      implicitly[Encoder[S]], stateTtlSeconds, scan)
+    val mode = timeMode(stateTtlSeconds)
+    initial match {
+      case None =>
+        grouped.transformWithState(processor, mode, OutputMode.Append())
+      case Some(init) =>
+        grouped.transformWithState(processor, mode, OutputMode.Append(),
+          init.groupByKey(_._1)(Encoders.STRING).mapValues(_._2))
+    }
+  }
+
+  /** SNAPSHOT half of the cross-run state design: read a (stopped)
+    * transformWithState query's named value state out of its
+    * checkpoint through Spark's state-store data source and land it
+    * as plain parquet — engine-neutral bytes a later run (or another
+    * system entirely, as with the reference's Datastore) can restore
+    * from. */
+  def snapshotTwsValueState(spark: SparkSession,
+      checkpointDir: String, stateVarName: String, outPath: String): Unit =
+    spark.read.format("statestore")
+      .option("path", checkpointDir)
+      .option("stateVarName", stateVarName)
+      .load()
+      .write.mode("overwrite").parquet(outPath)
+
+  /** RESTORE half: a [[snapshotTwsValueState]] parquet snapshot as the
+    * `(key, state)` dataset a detector's `initial =` seeds from; the
+    * stored `value` struct is cast to the state encoder's schema. */
+  def readStateSnapshot[S: Encoder](spark: SparkSession,
+      path: String): Dataset[(String, S)] = {
+    val enc = implicitly[Encoder[S]]
+    spark.read.parquet(path)
+      .select(col("key.value").as("_1"),
+        col("value").cast(enc.schema.catalogString).as("_2"))
+      .as(Encoders.tuple(Encoders.STRING, enc))
+  }
+
   // -- stateful suppression ---------------------------------------------
 
   case class Keyed(key: String, tsUs: Long)
@@ -482,209 +589,68 @@ object Streaming {
   case class EmittedCount(key: String, tsUs: Long, count: Long)
   case class CountState(lastEmitUs: Long, lastCount: Long)
 
-  /** Streaming AlertSuppressor: per key, emit the first element, then
-    * suppress until `expirySeconds` after the last emitted element;
-    * state carries one timestamp per key. With `stateTtlSeconds > 0`
-    * the state is dropped after that much processing-time silence (the
-    * reference's expiry+60s cleanup timer) — use it together with a
-    * processing-time trigger in production; the default (0 = no
-    * timeout) keeps micro-batches purely data-driven, which is what
-    * tests and bounded replays want (timeout timers make the engine
-    * schedule continuous empty batches). Within a micro-batch elements
-    * are processed in event-time order. */
+  /** Streaming AlertSuppressor (ref s/alert/AlertSuppressor.java:
+    * 53-143): per key, emit the first element, then suppress until
+    * strictly more than `expirySeconds` after the last emitted element
+    * (the reference's strict `isExpired`); state `lastEmit` is one
+    * timestamp per key. With `stateTtlSeconds > 0` the state is dropped
+    * after that much processing-time silence (the reference's
+    * expiry+60s cleanup timer) — use it with a processing-time trigger
+    * (see `timeMode`). Within a micro-batch elements are processed in
+    * event-time order. `initial` restores a `lastEmit` snapshot.
+    * StreamingSpec pins the expiry edge, TTL eviction and the
+    * snapshot → restore round trip; StatefulSpec pins the batch twin
+    * [[graft.operators.Stateful.suppress]]. */
   def suppress(ds: Dataset[Keyed], expirySeconds: Long,
-      stateTtlSeconds: Long = 0): Dataset[Emitted] = {
+      stateTtlSeconds: Long = 0,
+      initial: Option[Dataset[(String, SuppressState)]] = None)
+      : Dataset[Emitted] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val expiryUs = expirySeconds * 1000000L
-    val timeoutConf =
-      if (stateTtlSeconds > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[SuppressState, Emitted](
-        OutputMode.Append(), timeoutConf) {
-        (key: String, it: Iterator[Keyed], state: GroupState[SuppressState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var last =
-              if (state.exists) state.get.lastEmitUs else Long.MinValue
-            val out = Seq.newBuilder[Emitted]
-            it.toSeq.sortBy(_.tsUs).foreach { e =>
-              if (last == Long.MinValue || e.tsUs - last > expiryUs) {
-                last = e.tsUs
-                out += Emitted(key, e.tsUs)
-              }
-            }
-            if (last != Long.MinValue) {
-              state.update(SuppressState(last))
-              if (stateTtlSeconds > 0)
-                state.setTimeoutDuration(stateTtlSeconds * 1000)
-            }
-            out.result().iterator
-          }
-      }
-  }
-
-  /** AlertSuppressor on the Spark 4 `transformWithState` API — the
-    * modern replacement for `flatMapGroupsWithState`, and the closest
-    * Spark analog of the reference's keyed ValueState + expiry Timer
-    * (ref alert/AlertSuppressor.java:53-143): state is a named,
-    * per-key `ValueState` with a NATIVE TTL (`TTLConfig`), so the
-    * manual processing-time-timeout bookkeeping in `suppress`
-    * disappears — the store evicts idle keys itself.
-    *
-    * Semantics are identical to `suppress` (emit when strictly more
-    * than `expirySeconds` past the last emitted element per key — the
-    * reference's strict `isExpired`; in-batch
-    * elements processed in event-time order) — StreamingSpec pins the
-    * two implementations equal on the same input. Requires the RocksDB
-    * state store provider (the TTL/transformWithState backend):
-    * `spark.sql.streaming.stateStore.providerClass =
-    *  ...state.RocksDBStateStoreProvider`. */
-  class SuppressProcessor(expiryUs: Long, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, Keyed, Emitted] {
-    @transient private var last:
-      org.apache.spark.sql.streaming.ValueState[SuppressState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      last = getHandle.getValueState[SuppressState]("lastEmit",
-        org.apache.spark.sql.Encoders.product[SuppressState], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Keyed],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[Emitted] = {
-      var lastUs = if (last.exists()) last.get().lastEmitUs else Long.MinValue
+    keyedScan[Keyed, SuppressState, Emitted](ds, _.key, "lastEmit",
+        stateTtlSeconds, initial) { (key, st, events) =>
+      var last = st
       val out = Seq.newBuilder[Emitted]
-      rows.toSeq.sortBy(_.tsUs).foreach { e =>
-        if (lastUs == Long.MinValue || e.tsUs - lastUs > expiryUs) {
-          lastUs = e.tsUs
+      events.sortBy(_.tsUs).foreach { e =>
+        if (last.forall(s => e.tsUs - s.lastEmitUs > expiryUs)) {
+          last = Some(SuppressState(e.tsUs))
           out += Emitted(key, e.tsUs)
         }
       }
-      if (lastUs != Long.MinValue) last.update(SuppressState(lastUs))
-      out.result().iterator
+      (last, out.result())
     }
   }
 
-  /** [[SuppressProcessor]] seeded from an initial state dataset — the
-    * RESTORE half of the cross-run snapshot design (SURVEY §2.6
-    * design point d: the reference's Datastore is replaced by Spark
-    * state plus parquet snapshots; a new run must be able to pick up
-    * exactly where a snapshotted one stopped). `handleInitialState`
-    * runs once per seeded key before any input rows. */
-  class SuppressProcessorWithInit(expiryUs: Long, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        String, Keyed, Emitted, SuppressState] {
-    @transient private var last:
-      org.apache.spark.sql.streaming.ValueState[SuppressState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      last = getHandle.getValueState[SuppressState]("lastEmit",
-        org.apache.spark.sql.Encoders.product[SuppressState], ttl)
-    }
-
-    override def handleInitialState(key: String, st0: SuppressState,
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Unit =
-      last.update(st0)
-
-    override def handleInputRows(key: String, rows: Iterator[Keyed],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[Emitted] = {
-      var lastUs = if (last.exists()) last.get().lastEmitUs else Long.MinValue
-      val out = Seq.newBuilder[Emitted]
-      rows.toSeq.sortBy(_.tsUs).foreach { e =>
-        if (lastUs == Long.MinValue || e.tsUs - lastUs > expiryUs) {
-          lastUs = e.tsUs
-          out += Emitted(key, e.tsUs)
+  /** Count-aware suppressor (ref s/alert/AlertSuppressorCount.java:
+    * 27-35 + AlertSuppressor.java:96-143): like `suppress`, but an
+    * element whose count DIFFERS from the last-emitted count re-emits
+    * even inside the suppression window (the alert changed — bigger
+    * OR smaller — so it is news again); state `(ts, count)` is
+    * overwritten on every emission, including the expiry path, and
+    * left untouched by suppressed elements. StreamingSpec pins it
+    * against the batch twin [[graft.operators.Stateful.suppressCount]]. */
+  def suppressCount(ds: Dataset[KeyedCount],
+      expirySeconds: Long): Dataset[EmittedCount] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    val expiryUs = expirySeconds * 1000000L
+    keyedScan[KeyedCount, CountState, EmittedCount](ds, _.key,
+        "lastEmit") { (key, st0, events) =>
+      var st = st0
+      val out = Seq.newBuilder[EmittedCount]
+      // (ts, count) sort — same tie discipline as the batch twin
+      // (Stateful.suppressCount): equal-ts events replay smaller
+      // count first, so emit-on-change fires deterministically
+      events.sortBy(e => (e.tsUs, e.count)).foreach { e =>
+        if (st.forall(s => e.tsUs - s.lastEmitUs > expiryUs ||
+            e.count != s.lastCount)) {
+          st = Some(CountState(e.tsUs, e.count))
+          out += EmittedCount(key, e.tsUs, e.count)
         }
       }
-      if (lastUs != Long.MinValue) last.update(SuppressState(lastUs))
-      out.result().iterator
+      (st, out.result())
     }
-  }
-
-  /** `suppressTws` seeded from a restored state snapshot: semantics
-    * identical to an uninterrupted `suppressTws` run whose state at
-    * the snapshot point was `initial` (StreamingSpec pins the full
-    * stop → snapshot → restore → continue round-trip). */
-  def suppressTwsFrom(ds: Dataset[Keyed], expirySeconds: Long,
-      initial: Dataset[(String, SuppressState)],
-      stateTtlSeconds: Long = 0): Dataset[Emitted] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new SuppressProcessorWithInit(expirySeconds * 1000000L,
-          stateTtlSeconds * 1000L),
-        mode, OutputMode.Append(),
-        initial.groupByKey(_._1).mapValues(_._2))
-  }
-
-  /** SNAPSHOT half of the cross-run state design: read a (stopped)
-    * transformWithState query's named value state out of its
-    * checkpoint through Spark's state-store data source and land it
-    * as plain parquet — engine-neutral bytes a later run (or another
-    * system entirely, as with the reference's Datastore) can restore
-    * from. */
-  def snapshotTwsValueState(spark: org.apache.spark.sql.SparkSession,
-      checkpointDir: String, stateVarName: String, outPath: String): Unit =
-    spark.read.format("statestore")
-      .option("path", checkpointDir)
-      .option("stateVarName", stateVarName)
-      .load()
-      .write.mode("overwrite").parquet(outPath)
-
-  /** Restore a [[snapshotTwsValueState]] parquet snapshot of the
-    * suppressor's `lastEmit` state into the dataset shape
-    * [[suppressTwsFrom]] seeds from. */
-  def readSuppressSnapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String): Dataset[(String, SuppressState)] = {
-    import spark.implicits._
-    spark.read.parquet(path)
-      .select(col("key.value").as("_1"),
-        col("value").cast("struct<lastEmitUs:bigint>").as("_2"))
-      .as[(String, SuppressState)]
-  }
-
-  /** `suppress` on transformWithState (see SuppressProcessor). TTL is
-    * opt-in for the same reason as in `suppress`: it switches the query
-    * to processing-time scheduling, which keeps scheduling micro-batches
-    * on idle input — right for production, livelocks bounded-replay
-    * tests that drain with processAllAvailable. */
-  def suppressTws(ds: Dataset[Keyed], expirySeconds: Long,
-      stateTtlSeconds: Long = 0): Dataset[Emitted] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    // state TTL is a processing-time concept: the engine requires
-    // TimeMode.ProcessingTime whenever any state has a TTL configured
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new SuppressProcessor(expirySeconds * 1000000L,
-          stateTtlSeconds * 1000L),
-        mode,
-        OutputMode.Append())
   }
 
   // -- element-count early firing (assume-role correlation) --------------
@@ -723,27 +689,19 @@ object Streaming {
     *
     * The per-key buffer holds one row per distinct CloudTrail event
     * id inside one correlation window (2-4 rows in practice); TTL
-    * evicts idle shared ids. */
-  class AssumeRoleProcessor(gapUs: Long, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, CorrEvent, CorrPair] {
-    @transient private var halves:
-      org.apache.spark.sql.streaming.ListState[CorrEvent] = _
+    * evicts idle shared ids. The only keyed detector whose state is a
+    * `ListState` buffer rather than one value, so it keeps its own
+    * processor instead of [[ScanProcessor]]. */
+  class AssumeRoleProcessor(gapUs: Long, stateTtlSeconds: Long)
+      extends StatefulProcessor[String, CorrEvent, CorrPair] {
+    @transient private var halves: ListState[CorrEvent] = _
 
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       halves = getHandle.getListState[CorrEvent]("halves",
-        org.apache.spark.sql.Encoders.product[CorrEvent], ttl)
-    }
+        Encoders.product[CorrEvent], ttlConfig(stateTtlSeconds))
 
     override def handleInputRows(key: String, rows: Iterator[CorrEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[CorrPair] = {
+        timerValues: TimerValues): Iterator[CorrPair] = {
       val stored = scala.collection.mutable.ArrayBuffer.empty[CorrEvent]
       val it = halves.get()
       while (it.hasNext) stored += it.next()
@@ -768,21 +726,15 @@ object Streaming {
     }
   }
 
-  /** [[AssumeRoleProcessor]] behind the standard wrapper (see
-    * suppressTws for the TTL/TimeMode coupling). */
-  def assumeRoleCorrelateTws(ds: Dataset[CorrEvent], gapSeconds: Long,
+  /** [[AssumeRoleProcessor]] per shared id, in append mode. */
+  def assumeRoleCorrelate(ds: Dataset[CorrEvent], gapSeconds: Long,
       stateTtlSeconds: Long = 0): Dataset[CorrPair] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
     ds.groupByKey(_.key)
       .transformWithState(
-        new AssumeRoleProcessor(gapSeconds * 1000000L,
-          stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
+        new AssumeRoleProcessor(gapSeconds * 1000000L, stateTtlSeconds),
+        timeMode(stateTtlSeconds), OutputMode.Append())
   }
 
   /** Streaming near-duplicate pair detection — the stream-stream
@@ -850,88 +802,37 @@ object Streaming {
   case class AtRiskState(flaggedAtUs: Long)
   case class AtRiskAlert(key: String, tsUs: Long)
 
-  /** Per-batch at-risk scan, shared verbatim by the
-    * flatMapGroupsWithState and transformWithState forms. */
-  private def atRiskScan(key: String, flagged0: Long,
-      events: Seq[AccountEvent]): (Long, Seq[AtRiskAlert]) = {
-    var flagged = flagged0
+  /** Per-batch at-risk scan: a `flag` marks the account, any later
+    * `fail` while flagged alerts. */
+  private def atRiskScan(key: String, st: Option[AtRiskState],
+      events: Seq[AccountEvent]): (Option[AtRiskState], Seq[AtRiskAlert]) = {
+    var flagged = st.map(_.flaggedAtUs)
     val out = Seq.newBuilder[AtRiskAlert]
     events.sortBy(_.tsUs).foreach { e =>
       e.kind match {
-        case "flag" => flagged = e.tsUs
-        case "fail" if flagged != Long.MinValue && e.tsUs >= flagged =>
+        case "flag" => flagged = Some(e.tsUs)
+        case "fail" if flagged.exists(e.tsUs >= _) =>
           out += AtRiskAlert(key, e.tsUs)
         case _ => ()
       }
     }
-    (flagged, out.result())
+    (flagged.map(AtRiskState(_)), out.result())
   }
 
   /** At-risk account tracking (ref s/customs/CustomsAtRiskAccountState
     * + CustomsLoginFailureForAtRiskAccount.java): a `flag` event marks
     * the account at-risk; any later `fail` event while flagged emits
-    * an alert. State is one timestamp per flagged account. */
-  def atRiskAccounts(ds: Dataset[AccountEvent]): Dataset[AtRiskAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[AtRiskState, AtRiskAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[AccountEvent], state: GroupState[AtRiskState]) =>
-          val (flagged, out) = atRiskScan(key,
-            if (state.exists) state.get.flaggedAtUs else Long.MinValue,
-            it.toSeq)
-          if (flagged != Long.MinValue) state.update(AtRiskState(flagged))
-          out.iterator
-      }
-  }
-
-  /** At-risk tracking on transformWithState (see SuppressProcessor for
-    * the API rationale): the flagged-at timestamp is a named
-    * ValueState with optional native TTL — an account whose at-risk
-    * flag goes stale simply ages out of the store, which is exactly
-    * the reference's Datastore expiry semantics. Same kernel as
-    * `atRiskAccounts`; StreamingSpec pins the equivalence. */
-  class AtRiskProcessor(ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, AccountEvent, AtRiskAlert] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[AtRiskState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[AtRiskState]("flagged",
-        org.apache.spark.sql.Encoders.product[AtRiskState], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[AccountEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[AtRiskAlert] = {
-      val (flagged, out) = atRiskScan(key,
-        if (st.exists()) st.get().flaggedAtUs else Long.MinValue,
-        rows.toSeq)
-      if (flagged != Long.MinValue) st.update(AtRiskState(flagged))
-      out.iterator
-    }
-  }
-
-  /** `atRiskAccounts` on transformWithState (see AtRiskProcessor). */
-  def atRiskAccountsTws(ds: Dataset[AccountEvent],
+    * an alert. State `flagged` is one timestamp per flagged account;
+    * with a TTL a stale flag ages out of the store — the reference's
+    * Datastore expiry semantics. FullPipelineSpec pins it against the
+    * batch [[graft.operators.CustomsDetectors.loginFailureAtRiskAccount]]
+    * chain. */
+  def atRiskAccounts(ds: Dataset[AccountEvent],
       stateTtlSeconds: Long = 0): Dataset[AtRiskAlert] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(new AtRiskProcessor(stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
+    keyedScan[AccountEvent, AtRiskState, AtRiskAlert](ds, _.key, "flagged",
+      stateTtlSeconds)(atRiskScan)
   }
 
   case class SeqEvent(key: String, tsUs: Long, seq: Long,
@@ -939,9 +840,8 @@ object Streaming {
   case class SeqState(lastFirstUs: Long)
   case class SeqViolation(key: String, tsUs: Long)
 
-  /** Per-batch sequence-abuse kernel, shared verbatim by the
-    * flatMapGroupsWithState and transformWithState forms — the same
-    * last-first pairing as the batch analytic scan
+  /** Per-batch sequence-abuse kernel — the same last-first pairing as
+    * the batch analytic scan
     * ([[graft.operators.Heuristics.sequenceAbuse]], ref
     * s/httprequest/heuristics/EndpointSequenceAbuse.java:201-233):
     * events scan in (ts, firsts-before-seconds, seq) order; a
@@ -949,105 +849,42 @@ object Streaming {
     * test, so a same-timestamp first+second pairs); a second-half
     * event strictly inside `deltaUs` of the tracked last first emits
     * ONE violation — earlier firsts are superseded, never multiplied. */
-  private def seqAbuseScan(key: String, lastFirst0: Long, deltaUs: Long,
-      events: Seq[SeqEvent]): (Long, Seq[SeqViolation]) = {
-    var lastFirst = lastFirst0
+  private def seqAbuseScan(deltaUs: Long)(key: String, st: Option[SeqState],
+      events: Seq[SeqEvent]): (Option[SeqState], Seq[SeqViolation]) = {
+    var lastFirst = st.map(_.lastFirstUs)
     val out = Seq.newBuilder[SeqViolation]
     events.sortBy(e => (e.tsUs, !e.isFirst, e.seq)).foreach { e =>
-      if (e.isFirst) lastFirst = e.tsUs
-      if (e.isSecond && lastFirst != Long.MinValue &&
-        e.tsUs < lastFirst + deltaUs)
+      if (e.isFirst) lastFirst = Some(e.tsUs)
+      if (e.isSecond && lastFirst.exists(e.tsUs < _ + deltaUs))
         out += SeqViolation(key, e.tsUs)
     }
-    (lastFirst, out.result())
+    (lastFirst.map(SeqState(_)), out.result())
   }
 
-  /** Streaming last-first sequence abuse: per-key state is ONE
-    * timestamp (the latest first-half event seen), carried across
+  /** Streaming last-first sequence abuse: per-key state `lastFirst` is
+    * ONE timestamp (the latest first-half event seen), carried across
     * micro-batches. Violations emit as individual rows — the
     * count/threshold the batch form applies per key is a downstream
     * aggregation choice, exactly as the reference applies it inside
-    * its session windows. */
-  def sequenceAbuseStream(ds: Dataset[SeqEvent],
-      deltaMs: Long): Dataset[SeqViolation] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val deltaUs = deltaMs * 1000L
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[SeqState, SeqViolation](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[SeqEvent], state: GroupState[SeqState]) =>
-          val (lastFirst, out) = seqAbuseScan(key,
-            if (state.exists) state.get.lastFirstUs else Long.MinValue,
-            deltaUs, it.toSeq)
-          if (lastFirst != Long.MinValue) state.update(SeqState(lastFirst))
-          out.iterator
-      }
-  }
-
-  /** transformWithState twin of [[sequenceAbuseStream]] (see
-    * SuppressProcessor for the API rationale). Native TTL is lossless
-    * here when >= delta: a tracked first older than delta can never
-    * pair again, so aging it out of the store changes nothing. */
-  class SequenceAbuseProcessor(deltaUs: Long, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, SeqEvent, SeqViolation] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[SeqState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[SeqState]("lastFirst",
-        org.apache.spark.sql.Encoders.product[SeqState], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[SeqEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[SeqViolation] = {
-      val (lastFirst, out) = seqAbuseScan(key,
-        if (st.exists()) st.get().lastFirstUs else Long.MinValue,
-        deltaUs, rows.toSeq)
-      if (lastFirst != Long.MinValue) st.update(SeqState(lastFirst))
-      out.iterator
-    }
-  }
-
-  /** `sequenceAbuseStream` on transformWithState. */
-  def sequenceAbuseTws(ds: Dataset[SeqEvent], deltaMs: Long,
+    * its session windows. A TTL >= delta is lossless: a tracked first
+    * older than delta can never pair again. StreamingSpec pins the
+    * per-key counts against the batch scan. */
+  def sequenceAbuseStream(ds: Dataset[SeqEvent], deltaMs: Long,
       stateTtlSeconds: Long = 0): Dataset[SeqViolation] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new SequenceAbuseProcessor(deltaMs * 1000L, stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
+    keyedScan[SeqEvent, SeqState, SeqViolation](ds, _.key, "lastFirst",
+      stateTtlSeconds)(seqAbuseScan(deltaMs * 1000L))
   }
 
   case class GeoLogin(key: String, tsUs: Long, lat: Double, lon: Double)
   case class GeoState(tsUs: Long, lat: Double, lon: Double)
   case class TravelAlert(key: String, tsUs: Long, speedKmh: Long)
 
-  /** Streaming geo-velocity (ref s/authstate/AuthStateModel.java:
-    * 241-430 via Datastore; here the per-identity last-location lives
-    * in Spark state): each login is compared against the previous one
-    * for the same identity; impossible travel speed emits an alert and
-    * the state advances to the latest location. Within a micro-batch
-    * logins are processed in event-time order, matching the batch
-    * (lag-window) operator's semantics. */
-  /** Per-batch geo-velocity kernel, shared verbatim by the
-    * flatMapGroupsWithState and transformWithState forms so their
-    * equivalence holds by construction (and is still spec-pinned). */
-  private def geoVelocityScan(key: String, prev0: Option[GeoState],
-      events: Seq[GeoLogin], maxKmh: Double)
+  /** Per-batch geo-velocity kernel: each login against the identity's
+    * previous location, the state advancing to the latest. */
+  private def geoVelocityScan(maxKmh: Double)(key: String,
+      prev0: Option[GeoState], events: Seq[GeoLogin])
       : (Option[GeoState], Seq[TravelAlert]) = {
     var prev = prev0
     val out = Seq.newBuilder[TravelAlert]
@@ -1066,70 +903,21 @@ object Streaming {
     (prev, out.result())
   }
 
-  def geoVelocity(ds: Dataset[GeoLogin], maxKmh: Double): Dataset[TravelAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[GeoState, TravelAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[GeoLogin], state: GroupState[GeoState]) =>
-          val (next, out) = geoVelocityScan(key,
-            if (state.exists) Some(state.get) else None, it.toSeq, maxKmh)
-          next.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  /** Geo-velocity on the Spark 4 `transformWithState` API (see
-    * SuppressProcessor for the API rationale): the per-identity last
-    * location is a named `ValueState` with an optional NATIVE TTL —
-    * idle identities age out of the store without manual timeout
-    * bookkeeping, the semantics the reference gets from Datastore
-    * entry pruning (ref s/authstate/AuthStateModel.java:241-430).
-    * Same kernel as `geoVelocity`; StreamingSpec pins TWS ≡ fMGWS ≡
-    * batch on shared input. Requires the RocksDB state store. */
-  class GeoVelocityProcessor(maxKmh: Double, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, GeoLogin, TravelAlert] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[GeoState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[GeoState]("lastLoc",
-        org.apache.spark.sql.Encoders.product[GeoState], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[GeoLogin],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[TravelAlert] = {
-      val (next, out) = geoVelocityScan(key,
-        if (st.exists()) Some(st.get()) else None, rows.toSeq, maxKmh)
-      next.foreach(st.update)
-      out.iterator
-    }
-  }
-
-  /** `geoVelocity` on transformWithState (see GeoVelocityProcessor).
-    * TTL opt-in flips the query to processing-time scheduling — right
-    * for production, livelocks bounded-replay tests. */
-  def geoVelocityTws(ds: Dataset[GeoLogin], maxKmh: Double,
+  /** Streaming geo-velocity (ref s/authstate/AuthStateModel.java:
+    * 241-430 via Datastore; here the per-identity last location is the
+    * `lastLoc` state, and a TTL ages idle identities out like the
+    * reference's Datastore entry pruning): each login is compared
+    * against the previous one for the same identity; impossible
+    * travel speed emits an alert and the state advances to the latest
+    * location. Within a micro-batch logins are processed in event-time
+    * order. StreamingSpec pins the speed against the batch (lag-window)
+    * [[graft.operators.Stateful.geoVelocity]]. */
+  def geoVelocity(ds: Dataset[GeoLogin], maxKmh: Double,
       stateTtlSeconds: Long = 0): Dataset[TravelAlert] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new GeoVelocityProcessor(maxKmh, stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
+    keyedScan[GeoLogin, GeoState, TravelAlert](ds, _.key, "lastLoc",
+      stateTtlSeconds)(geoVelocityScan(maxKmh))
   }
 
   case class VelLogin(key: String, tsUs: Long, addr: String,
@@ -1139,21 +927,11 @@ object Streaming {
   case class VelAlert(key: String, tsUs: Long, addr: String,
       prevAddr: String, tdS: Long, kmCenti: Long)
 
-  /** Streaming CustomsVelocity (ref s/customs/CustomsVelocity.java:
-    * 93-351, where state is the Datastore AuthStateModel with
-    * PruningStrategyLatest): per uid, each address is considered once
-    * per dedupe window; a differing address is compared against the
-    * latest state entry (haversine distance, floored-epoch-second
-    * delta), alerting when implied speed exceeds `maxKmPerSecond` and
-    * the jump covers `minDistanceKm`. State per key = ONE latest
-    * entry + the current window's seen-address set; semantics equal
-    * the batch operator (CustomsDetectors.velocity), pinned by an
-    * equivalence spec. */
-  /** Per-batch velocity kernel, shared verbatim by the
-    * flatMapGroupsWithState and transformWithState forms. */
-  private def velocityScan(key: String, st0: Option[VelState],
-      events: Seq[VelLogin], windowUs: Long, maxCentiPerSec: Double,
-      minCenti: Double): (Option[VelState], Seq[VelAlert]) = {
+  /** Per-batch customs-velocity kernel: one latest entry plus the
+    * current dedupe window's seen-address set per uid. */
+  private def velocityScan(windowUs: Long, maxCentiPerSec: Double,
+      minCenti: Double)(key: String, st0: Option[VelState],
+      events: Seq[VelLogin]): (Option[VelState], Seq[VelAlert]) = {
     var st = st0
     val out = Seq.newBuilder[VelAlert]
     events.sortBy(e => (e.tsUs, e.addr)).foreach { e =>
@@ -1181,75 +959,24 @@ object Streaming {
     (st, out.result())
   }
 
+  /** Streaming CustomsVelocity (ref s/customs/CustomsVelocity.java:
+    * 93-351, where state is the Datastore AuthStateModel with
+    * PruningStrategyLatest): per uid, each address is considered once
+    * per dedupe window; a differing address is compared against the
+    * latest state entry (haversine distance, floored-epoch-second
+    * delta), alerting when implied speed exceeds `maxKmPerSecond` and
+    * the jump covers `minDistanceKm`. State `latest` per key = ONE
+    * latest entry + the current window's seen-address set; a TTL ages
+    * idle uids out. CustomsDetectorsSpec pins it against the batch
+    * [[graft.operators.CustomsDetectors.velocity]]. */
   def customsVelocity(ds: Dataset[VelLogin], maxKmPerSecond: Double,
-      minDistanceKm: Double,
-      dedupeWindowSeconds: Long = 300): Dataset[VelAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val windowUs = dedupeWindowSeconds * 1000000L
-    val maxCentiPerSec = maxKmPerSecond * 100
-    val minCenti = minDistanceKm * 100
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[VelState, VelAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[VelLogin], state: GroupState[VelState]) =>
-          val (st, out) = velocityScan(key,
-            if (state.exists) Some(state.get) else None,
-            it.toSeq, windowUs, maxCentiPerSec, minCenti)
-          st.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  /** CustomsVelocity on the Spark 4 `transformWithState` API (see
-    * SuppressProcessor): latest-entry state with optional native TTL
-    * — the reference's Datastore PruningStrategyLatest semantics.
-    * Same kernel as `customsVelocity`; spec-pinned equivalent. */
-  class VelocityProcessor(windowUs: Long, maxCentiPerSec: Double,
-      minCenti: Double, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, VelLogin, VelAlert] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[VelState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[VelState]("latest",
-        org.apache.spark.sql.Encoders.product[VelState], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[VelLogin],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[VelAlert] = {
-      val (next, out) = velocityScan(key,
-        if (st.exists()) Some(st.get()) else None,
-        rows.toSeq, windowUs, maxCentiPerSec, minCenti)
-      next.foreach(st.update)
-      out.iterator
-    }
-  }
-
-  /** `customsVelocity` on transformWithState (see VelocityProcessor). */
-  def customsVelocityTws(ds: Dataset[VelLogin], maxKmPerSecond: Double,
       minDistanceKm: Double, dedupeWindowSeconds: Long = 300,
       stateTtlSeconds: Long = 0): Dataset[VelAlert] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new VelocityProcessor(dedupeWindowSeconds * 1000000L,
-          maxKmPerSecond * 100, minDistanceKm * 100,
-          stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
+    keyedScan[VelLogin, VelState, VelAlert](ds, _.key, "latest",
+      stateTtlSeconds)(velocityScan(dedupeWindowSeconds * 1000000L,
+        maxKmPerSecond * 100, minDistanceKm * 100))
   }
 
   case class RelayEvent(key: String, tsUs: Long, seq: Long,
@@ -1258,16 +985,11 @@ object Streaming {
   case class RelayAlert(key: String, tsMs: Long, actual: String,
       expected: String)
 
-  /** Per-batch relay-forward kernel, shared by the
-    * flatMapGroupsWithState and transformWithState forms: every relay
-    * or RP event leaves the state's real address equal to its own
-    * hash, and a forward whose hash differs from the known previous
-    * value alerts — the reference's Datastore state walk
-    * (ref s/customs/PrivateRelayForward.java:114-263), and exactly
-    * the batch operator's lag(1) semantics
-    * ([[graft.operators.CustomsDetectors.privateRelayForward]],
-    * equivalence spec-pinned). State per uid = ONE (ts, seq, addr)
-    * entry — bounded regardless of traffic. */
+  /** Per-batch relay-forward kernel: every relay or RP event leaves the
+    * state's real address equal to its own hash, and a forward whose
+    * hash differs from the known previous value alerts — the
+    * reference's Datastore state walk
+    * (ref s/customs/PrivateRelayForward.java:114-263). */
   private def relayScan(key: String, st0: Option[RelayState],
       events: Seq[RelayEvent]): (Option[RelayState], Seq[RelayAlert]) = {
     import graft.operators.CustomsDetectors.{EmailRelay, FxaRpEvent}
@@ -1288,146 +1010,22 @@ object Streaming {
     (st, out.result())
   }
 
-  /** Streaming PrivateRelayForward (flatMapGroupsWithState form).
-    * Like the suppress/velocity family: within a micro-batch events
-    * are processed in (event-time, seq) order; batches must arrive in
-    * time order for cross-batch parity (the watermarked-source
-    * contract the other stateful detectors document). */
-  def privateRelayForwardStream(ds: Dataset[RelayEvent])
+  /** Streaming PrivateRelayForward: exactly the batch operator's lag(1)
+    * semantics ([[graft.operators.CustomsDetectors.privateRelayForward]]).
+    * State `lastAddr` per uid = ONE (ts, seq, addr) entry — bounded
+    * regardless of traffic — with an optional TTL (the reference's
+    * state-expiry cleanup). Within a micro-batch events are processed
+    * in (event-time, seq) order. `initial` restores a `lastAddr`
+    * snapshot. CustomsDetectorsSpec pins batch parity on real events
+    * and the snapshot → restore round trip. */
+  def privateRelayForwardStream(ds: Dataset[RelayEvent],
+      stateTtlSeconds: Long = 0,
+      initial: Option[Dataset[(String, RelayState)]] = None)
       : Dataset[RelayAlert] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[RelayState, RelayAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[RelayEvent],
-            state: GroupState[RelayState]) =>
-          val (st, out) = relayScan(key,
-            if (state.exists) Some(state.get) else None, it.toSeq)
-          st.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  /** PrivateRelayForward on the Spark 4 `transformWithState` API —
-    * same kernel, optional native TTL (the reference's state-expiry
-    * cleanup). */
-  class PrivateRelayProcessor(ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, RelayEvent, RelayAlert] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[RelayState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[RelayState]("lastAddr",
-        org.apache.spark.sql.Encoders.product[RelayState], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[RelayEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[RelayAlert] = {
-      val (next, out) = relayScan(key,
-        if (st.exists()) Some(st.get()) else None, rows.toSeq)
-      next.foreach(st.update)
-      out.iterator
-    }
-  }
-
-  /** [[privateRelayForwardStream]] on transformWithState (see
-    * PrivateRelayProcessor). TTL opt-in flips to processing-time
-    * scheduling — right for production, livelocks bounded-replay
-    * tests (the suppressTws note). */
-  def privateRelayForwardTws(ds: Dataset[RelayEvent],
-      stateTtlSeconds: Long = 0): Dataset[RelayAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new PrivateRelayProcessor(stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
-  }
-
-  /** [[PrivateRelayProcessor]] seeded from an initial state dataset —
-    * the RESTORE half of the cross-run snapshot design for the relay
-    * detector (the suppress/velocity/at-risk precedent: the
-    * reference's Datastore walk is replaced by Spark keyed state
-    * plus crash-safe parquet snapshots, so a new run picks up
-    * exactly where a snapshotted one stopped).
-    * `handleInitialState` runs once per seeded uid before any input
-    * rows. */
-  class PrivateRelayProcessorWithInit(ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        String, RelayEvent, RelayAlert, RelayState] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[RelayState] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[RelayState]("lastAddr",
-        org.apache.spark.sql.Encoders.product[RelayState], ttl)
-    }
-
-    override def handleInitialState(key: String, st0: RelayState,
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Unit =
-      st.update(st0)
-
-    override def handleInputRows(key: String, rows: Iterator[RelayEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[RelayAlert] = {
-      val (next, out) = relayScan(key,
-        if (st.exists()) Some(st.get()) else None, rows.toSeq)
-      next.foreach(st.update)
-      out.iterator
-    }
-  }
-
-  /** [[privateRelayForwardTws]] seeded from a restored state
-    * snapshot: semantics identical to an uninterrupted run whose
-    * state at the snapshot point was `initial` (StreamingSpec pins
-    * the full stop → snapshot → restore → continue round-trip, the
-    * suppressTwsFrom pattern). */
-  def privateRelayForwardTwsFrom(ds: Dataset[RelayEvent],
-      initial: Dataset[(String, RelayState)],
-      stateTtlSeconds: Long = 0): Dataset[RelayAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new PrivateRelayProcessorWithInit(stateTtlSeconds * 1000L),
-        mode, OutputMode.Append(),
-        initial.groupByKey(_._1).mapValues(_._2))
-  }
-
-  /** Restore a [[snapshotTwsValueState]] parquet snapshot of the
-    * relay detector's `lastAddr` state into the dataset shape
-    * [[privateRelayForwardTwsFrom]] seeds from. */
-  def readRelaySnapshot(spark: org.apache.spark.sql.SparkSession,
-      path: String): Dataset[(String, RelayState)] = {
-    import spark.implicits._
-    spark.read.parquet(path)
-      .select(col("key.value").as("_1"),
-        col("value")
-          .cast("struct<tsUs:bigint,seq:bigint,addr:string>").as("_2"))
-      .as[(String, RelayState)]
+    keyedScan[RelayEvent, RelayState, RelayAlert](ds, _.key, "lastAddr",
+      stateTtlSeconds, initial)(relayScan)
   }
 
   case class AuthLogin(key: String, tsUs: Long, addr: String,
@@ -1437,23 +1035,13 @@ object Streaming {
   case class AuthAction(key: String, tsUs: Long, addr: String,
       action: String, kmCenti: Option[Long], prevAddr: Option[String])
 
-  /** Streaming known-IP state analysis (ref s/authprofile/AuthProfile
-    * .java:568-660 + s/authstate/AuthStateModel.java:241-430, where
-    * the model lives in Datastore; here it is Spark-managed keyed
-    * state). State per identity = the full pruned address model —
-    * every source address previously seen with last-touch timestamp
-    * and location — NOT just the latest location: a user alternating
-    * between home and office must classify known_ip from both.
-    * Entry-age pruning (PruningStrategyEntryAge.java:31-44) bounds
-    * the state size; within a micro-batch events process in event-time
-    * order, matching the batch operator exactly. */
-  /** Per-batch known-IP model scan, shared verbatim by the
-    * flatMapGroupsWithState and transformWithState forms. */
-  private def authStateScan(key: String, model0: Seq[AuthEntry],
-      events: Seq[AuthLogin], pruneUs: Long, maxCenti: Double)
-      : (Seq[AuthEntry], Seq[AuthAction]) = {
+  /** Per-batch known-IP model scan: entry-age pruning, then known /
+    * unknown-within / unknown-outside / unknown-failure per login. */
+  private def authStateScan(pruneUs: Long, maxCenti: Double)(key: String,
+      model0: Option[AuthModel], events: Seq[AuthLogin])
+      : (Option[AuthModel], Seq[AuthAction]) = {
     val entries = scala.collection.mutable.HashMap.empty[String, AuthEntry]
-    model0.foreach(e => entries(e.addr) = e)
+    model0.foreach(_.entries.foreach(e => entries(e.addr) = e))
     val out = Seq.newBuilder[AuthAction]
     events.sortBy(e => (e.tsUs, e.addr)).foreach { e =>
       entries.filterInPlace((_, en) => e.tsUs - en.tsUs <= pruneUs)
@@ -1479,111 +1067,27 @@ object Streaming {
         }
       }
     }
-    (entries.values.toSeq.sortBy(_.addr), out.result())
+    (Some(AuthModel(entries.values.toSeq.sortBy(_.addr))), out.result())
   }
 
+  /** Streaming known-IP state analysis (ref s/authprofile/AuthProfile
+    * .java:568-660 + s/authstate/AuthStateModel.java:241-430, where
+    * the model lives in Datastore; here it is the `model` keyed
+    * state). State per identity = the full pruned address model —
+    * every source address previously seen with last-touch timestamp
+    * and location — NOT just the latest location: a user alternating
+    * between home and office must classify known_ip from both.
+    * Entry-age pruning (PruningStrategyEntryAge.java:31-44) bounds
+    * the state size; a TTL drops identities that stop logging in
+    * entirely. Within a micro-batch events process in event-time
+    * order. AuthStateSpec pins it across batches; the batch operator
+    * is [[graft.operators.AuthState.stateAnalyze]]. */
   def authStateAnalyze(ds: Dataset[AuthLogin], pruneAgeSeconds: Long,
-      maxKmStatic: Double): Dataset[AuthAction] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val pruneUs = pruneAgeSeconds * 1000000L
-    val maxCenti = maxKmStatic * 100
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[AuthModel, AuthAction](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[AuthLogin], state: GroupState[AuthModel]) =>
-          val (model, out) = authStateScan(key,
-            if (state.exists) state.get.entries else Nil,
-            it.toSeq, pruneUs, maxCenti)
-          state.update(AuthModel(model))
-          out.iterator
-      }
-  }
-
-  /** Known-IP state analysis on the Spark 4 `transformWithState` API
-    * (see SuppressProcessor): the per-identity pruned address model is
-    * a named `ValueState` with an optional NATIVE TTL, so identities
-    * that stop logging in age out of the store entirely — the
-    * reference gets this from Datastore entry pruning; entry-level
-    * age pruning inside a live model stays in the kernel. Same kernel
-    * as `authStateAnalyze`; StreamingSpec pins TWS ≡ fMGWS ≡ batch.
-    * Requires the RocksDB state store. */
-  class AuthStateProcessor(pruneUs: Long, maxCenti: Double, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, AuthLogin, AuthAction] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[AuthModel] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttl =
-        if (ttlMs > 0)
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(ttlMs))
-        else org.apache.spark.sql.streaming.TTLConfig.NONE
-      st = getHandle.getValueState[AuthModel]("model",
-        org.apache.spark.sql.Encoders.product[AuthModel], ttl)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[AuthLogin],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[AuthAction] = {
-      val (model, out) = authStateScan(key,
-        if (st.exists()) st.get().entries else Nil,
-        rows.toSeq, pruneUs, maxCenti)
-      st.update(AuthModel(model))
-      out.iterator
-    }
-  }
-
-  /** `authStateAnalyze` on transformWithState (see AuthStateProcessor). */
-  def authStateAnalyzeTws(ds: Dataset[AuthLogin], pruneAgeSeconds: Long,
       maxKmStatic: Double, stateTtlSeconds: Long = 0): Dataset[AuthAction] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val mode =
-      if (stateTtlSeconds > 0)
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new AuthStateProcessor(pruneAgeSeconds * 1000000L,
-          maxKmStatic * 100, stateTtlSeconds * 1000L),
-        mode, OutputMode.Append())
-  }
-
-  /** Count-aware suppressor (ref s/alert/AlertSuppressorCount.java:
-    * 27-35 + AlertSuppressor.java:96-143): like `suppress`, but an
-    * element whose count DIFFERS from the last-emitted count re-emits
-    * even inside the suppression window (the alert changed — bigger
-    * OR smaller — so it is news again); state `(ts, count)` is
-    * overwritten on every emission, including the expiry path, and
-    * left untouched by suppressed elements. */
-  def suppressCount(ds: Dataset[KeyedCount],
-      expirySeconds: Long): Dataset[EmittedCount] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val expiryUs = expirySeconds * 1000000L
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[CountState, EmittedCount](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[KeyedCount], state: GroupState[CountState]) =>
-          var st = if (state.exists) state.get
-            else CountState(Long.MinValue, Long.MinValue)
-          val out = Seq.newBuilder[EmittedCount]
-          // (ts, count) sort — same tie discipline as the batch twin
-          // (Stateful.suppressCount): equal-ts events replay smaller
-          // count first, so emit-on-change fires deterministically
-          it.toSeq.sortBy(e => (e.tsUs, e.count)).foreach { e =>
-            val expired =
-              st.lastEmitUs == Long.MinValue || e.tsUs - st.lastEmitUs > expiryUs
-            if (expired || e.count != st.lastCount) {
-              st = CountState(e.tsUs, e.count)
-              out += EmittedCount(key, e.tsUs, e.count)
-            }
-          }
-          if (st.lastEmitUs != Long.MinValue) state.update(st)
-          out.result().iterator
-      }
+    keyedScan[AuthLogin, AuthModel, AuthAction](ds, _.key, "model",
+      stateTtlSeconds)(authStateScan(pruneAgeSeconds * 1000000L,
+        maxKmStatic * 100))
   }
 }

@@ -91,71 +91,32 @@ class AuthStateSpec extends AnyFunSuite {
   test("streaming auth state matches batch semantics across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val t = 1700000000L
-    val in = MemoryStream[Streaming.AuthLogin]
-    val q = Streaming.authStateAnalyze(in.toDS(), pruneAgeSeconds = 864000L,
-        maxKmStatic = 1000)
-      .writeStream.format("memory").queryName("authstate")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(
-        Streaming.AuthLogin("u1", t * 1000000L, "1.1.1.1", London._1, London._2),
-        Streaming.AuthLogin("u1", (t + 100) * 1000000L, "1.1.1.1", London._1, London._2))
-      q.processAllAvailable()
-      // state persists across micro-batches: 1.1.1.1 still known,
-      // Sydney classifies outside-geo against the London entry
-      in.addData(
-        Streaming.AuthLogin("u1", (t + 200) * 1000000L, "1.1.1.1", London._1, London._2),
-        Streaming.AuthLogin("u1", (t + 300) * 1000000L, "9.9.9.9", Sydney._1, Sydney._2))
-      q.processAllAvailable()
-      val got = spark.table("authstate").as[Streaming.AuthAction]
-        .collect().sortBy(_.tsUs).map(a => (a.addr, a.action)).toSeq
-      assert(got == Seq(
-        ("1.1.1.1", AuthState.UnknownGeoFailure),
-        ("1.1.1.1", AuthState.KnownIp),
-        ("1.1.1.1", AuthState.KnownIp),
-        ("9.9.9.9", AuthState.UnknownOutsideGeo)))
-    } finally q.stop()
-  }
-
-  test("transformWithState auth state matches flatMapGroupsWithState across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prevConf = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val t = 1700000000L
-    val in = MemoryStream[Streaming.AuthLogin]
-    val q = Streaming.authStateAnalyzeTws(in.toDS(), pruneAgeSeconds = 864000L,
-        maxKmStatic = 1000)
-      .writeStream.format("memory").queryName("authstate_tws")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // identical input + expectations as the fMGWS test above: the
-      // two forms share the per-batch kernel, this pins the plumbing
-      in.addData(
-        Streaming.AuthLogin("u1", t * 1000000L, "1.1.1.1", London._1, London._2),
-        Streaming.AuthLogin("u1", (t + 100) * 1000000L, "1.1.1.1", London._1, London._2))
-      q.processAllAvailable()
-      in.addData(
-        Streaming.AuthLogin("u1", (t + 200) * 1000000L, "1.1.1.1", London._1, London._2),
-        Streaming.AuthLogin("u1", (t + 300) * 1000000L, "9.9.9.9", Sydney._1, Sydney._2))
-      q.processAllAvailable()
-      val got = spark.table("authstate_tws").as[Streaming.AuthAction]
-        .collect().sortBy(_.tsUs).map(a => (a.addr, a.action)).toSeq
-      assert(got == Seq(
-        ("1.1.1.1", AuthState.UnknownGeoFailure),
-        ("1.1.1.1", AuthState.KnownIp),
-        ("1.1.1.1", AuthState.KnownIp),
-        ("9.9.9.9", AuthState.UnknownOutsideGeo)))
-    } finally {
-      q.stop()
-      prevConf match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    SparkTestSession.withRocksDb(spark) {
+      val t = 1700000000L
+      val in = MemoryStream[Streaming.AuthLogin]
+      val q = Streaming.authStateAnalyze(in.toDS(), pruneAgeSeconds = 864000L,
+          maxKmStatic = 1000)
+        .writeStream.format("memory").queryName("authstate")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        in.addData(
+          Streaming.AuthLogin("u1", t * 1000000L, "1.1.1.1", London._1, London._2),
+          Streaming.AuthLogin("u1", (t + 100) * 1000000L, "1.1.1.1", London._1, London._2))
+        q.processAllAvailable()
+        // state persists across micro-batches: 1.1.1.1 still known,
+        // Sydney classifies outside-geo against the London entry
+        in.addData(
+          Streaming.AuthLogin("u1", (t + 200) * 1000000L, "1.1.1.1", London._1, London._2),
+          Streaming.AuthLogin("u1", (t + 300) * 1000000L, "9.9.9.9", Sydney._1, Sydney._2))
+        q.processAllAvailable()
+        val got = spark.table("authstate").as[Streaming.AuthAction]
+          .collect().sortBy(_.tsUs).map(a => (a.addr, a.action)).toSeq
+        assert(got == Seq(
+          ("1.1.1.1", AuthState.UnknownGeoFailure),
+          ("1.1.1.1", AuthState.KnownIp),
+          ("1.1.1.1", AuthState.KnownIp),
+          ("9.9.9.9", AuthState.UnknownOutsideGeo)))
+      } finally q.stop()
     }
   }
 

@@ -129,76 +129,15 @@ class CustomsDetectorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.Streaming
     implicit val sqlCtx = spark.sqlContext
-    val t = 1700000000L
-    // London -> Sydney fast (alert), repeat addr (quiet), near hop
-    // below min distance (quiet), all split across two micro-batches
-    val logins = Seq(
-      (t, "u1", "1.1.1.1", 51.5, -0.1),
-      (t + 60, "u1", "2.2.2.2", -33.9, 151.2),
-      (t + 120, "u1", "2.2.2.2", -33.9, 151.2),
-      (t + 180, "u1", "3.3.3.3", -33.8, 151.3))
-    val batch = CustomsDetectors.velocity(
-      logins.toDF("t", "uid", "addr", "lat", "lon")
-        .withColumn("ts", timestamp_seconds(col("t")))
-        .withColumn("email", concat(col("uid"), lit("@x.com"))),
-      col("ts"), col("t"), col("uid"), col("email"), col("addr"),
-      col("lat"), col("lon"), maxKmPerSecond = 0.2778,
-      minDistanceKm = 100)
-      .select("addr", "prev_addr", "td_s", "km_centi")
-      .as[(String, String, Long, Long)].collect().toSet
-
-    val in = MemoryStream[Streaming.VelLogin]
-    val q = Streaming.customsVelocity(in.toDS(),
-        maxKmPerSecond = 0.2778, minDistanceKm = 100)
-      .writeStream.format("memory").queryName("velstream")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      val rows = logins.map { case (tt, k, a, la, lo) =>
-        Streaming.VelLogin(k, tt * 1000000L, a, s"$k@x.com", la, lo) }
-      in.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      in.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("velstream").as[Streaming.VelAlert]
-        .collect().map(a => (a.addr, a.prevAddr, a.tdS, a.kmCenti)).toSet
-      assert(streamed == batch)
-      assert(batch.map(_._1) == Set("2.2.2.2")) // only the Sydney jump
-    } finally q.stop()
-  }
-
-  test("transformWithState customs velocity matches fMGWS and batch") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Streaming
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val t = 1700000000L
-    // identical input to the fMGWS test above (shared kernel)
-    val logins = Seq(
-      (t, "u1", "1.1.1.1", 51.5, -0.1),
-      (t + 60, "u1", "2.2.2.2", -33.9, 151.2),
-      (t + 120, "u1", "2.2.2.2", -33.9, 151.2),
-      (t + 180, "u1", "3.3.3.3", -33.8, 151.3))
-    val in = MemoryStream[Streaming.VelLogin]
-    val q = Streaming.customsVelocityTws(in.toDS(),
-        maxKmPerSecond = 0.2778, minDistanceKm = 100)
-      .writeStream.format("memory").queryName("velstream_tws")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      val rows = logins.map { case (tt, k, a, la, lo) =>
-        Streaming.VelLogin(k, tt * 1000000L, a, s"$k@x.com", la, lo) }
-      in.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      in.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("velstream_tws").as[Streaming.VelAlert]
-        .collect().map(a => (a.addr, a.prevAddr, a.tdS, a.kmCenti)).toSet
-      assert(streamed.map(_._1) == Set("2.2.2.2"))
-      // same rows as the batch operator computes on the same logins
+    SparkTestSession.withRocksDb(spark) {
+      val t = 1700000000L
+      // London -> Sydney fast (alert), repeat addr (quiet), near hop
+      // below min distance (quiet), all split across two micro-batches
+      val logins = Seq(
+        (t, "u1", "1.1.1.1", 51.5, -0.1),
+        (t + 60, "u1", "2.2.2.2", -33.9, 151.2),
+        (t + 120, "u1", "2.2.2.2", -33.9, 151.2),
+        (t + 180, "u1", "3.3.3.3", -33.8, 151.3))
       val batch = CustomsDetectors.velocity(
         logins.toDF("t", "uid", "addr", "lat", "lon")
           .withColumn("ts", timestamp_seconds(col("t")))
@@ -208,15 +147,25 @@ class CustomsDetectorsSpec extends AnyFunSuite {
         minDistanceKm = 100)
         .select("addr", "prev_addr", "td_s", "km_centi")
         .as[(String, String, Long, Long)].collect().toSet
-      assert(streamed == batch)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+
+      val in = MemoryStream[Streaming.VelLogin]
+      val q = Streaming.customsVelocity(in.toDS(),
+          maxKmPerSecond = 0.2778, minDistanceKm = 100)
+        .writeStream.format("memory").queryName("velstream")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+        .start()
+      try {
+        val rows = logins.map { case (tt, k, a, la, lo) =>
+          Streaming.VelLogin(k, tt * 1000000L, a, s"$k@x.com", la, lo) }
+        in.addData(rows.take(2): _*)
+        q.processAllAvailable()
+        in.addData(rows.drop(2): _*)
+        q.processAllAvailable()
+        val streamed = spark.table("velstream").as[Streaming.VelAlert]
+          .collect().map(a => (a.addr, a.prevAddr, a.tdS, a.kmCenti)).toSet
+        assert(streamed == batch)
+        assert(batch.map(_._1) == Set("2.2.2.2")) // only the Sydney jump
+      } finally q.stop()
     }
   }
 
@@ -227,9 +176,6 @@ class CustomsDetectorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.Streaming
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // q46's exact derivation on the real table
     val e = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .filter(col("event_type").isin("signup", "view", "click"))
@@ -253,35 +199,19 @@ class CustomsDetectorsSpec extends AnyFunSuite {
         Streaming.RelayEvent(k, us, sq, et, a) }
       .sortBy(r => (r.tsUs, r.seq))
     val thirds = rows.grouped((rows.length + 2) / 3).toSeq
-    def runStream(name: String,
-        mk: org.apache.spark.sql.Dataset[Streaming.RelayEvent] =>
-          org.apache.spark.sql.Dataset[Streaming.RelayAlert]): Set[(String, Long, String, String)] = {
+    SparkTestSession.withRocksDb(spark) {
       val in = MemoryStream[Streaming.RelayEvent]
-      val q = mk(in.toDS()).writeStream.format("memory")
-        .queryName(name)
+      val q = Streaming.privateRelayForwardStream(in.toDS())
+        .writeStream.format("memory").queryName("relaystream")
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
         .start()
-      try {
+      val streamed = try {
         thirds.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).as[Streaming.RelayAlert].collect()
+        spark.table("relaystream").as[Streaming.RelayAlert].collect()
           .map(a => (a.key, a.tsMs, a.actual, a.expected)).toSet
       } finally q.stop()
-    }
-    try {
-      val fmgws = runStream("relaystream",
-        Streaming.privateRelayForwardStream)
-      val tws = runStream("relaystream_tws",
-        ds => Streaming.privateRelayForwardTws(ds))
-      assert(fmgws == batch && batch.nonEmpty,
-        s"fMGWS ${fmgws.size} vs batch ${batch.size}")
-      assert(tws == batch, s"TWS ${tws.size} vs batch ${batch.size}")
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      assert(streamed == batch && batch.nonEmpty,
+        s"streamed ${streamed.size} vs batch ${batch.size}")
     }
   }
 
@@ -293,74 +223,67 @@ class CustomsDetectorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     import graft.streaming.Streaming
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val root = java.nio.file.Files
-      .createTempDirectory("relay_snapshot_rt").toString
-    val relay = CustomsDetectors.EmailRelay
-    val rp = CustomsDetectors.FxaRpEvent
-    val batch1 = Seq(
-      Streaming.RelayEvent("u1", 1000000L, 1L, rp, "h1"),
-      Streaming.RelayEvent("u1", 2000000L, 2L, relay, "h1"), // matches: quiet
-      Streaming.RelayEvent("u2", 3000000L, 3L, rp, "h5"))
-    val batch2 = Seq(
-      // alerts ONLY if the restored state remembers u1 -> h1
-      Streaming.RelayEvent("u1", 10000000L, 4L, relay, "h9"),
-      Streaming.RelayEvent("u2", 11000000L, 5L, relay, "h5")) // quiet
-    def alerts(name: String) = spark.table(name)
-      .as[Streaming.RelayAlert].collect()
-      .map(a => (a.key, a.tsMs, a.actual, a.expected)).toSet
-    try {
-      // run 1: checkpointed, then stopped
-      val in1 = MemoryStream[Streaming.RelayEvent]
-      val q1 = Streaming.privateRelayForwardTws(in1.toDS())
-        .writeStream.format("memory").queryName("relay_snap1")
-        .option("checkpointLocation", s"$root/ckpt1")
-        .outputMode(OutputMode.Append()).start()
-      try { in1.addData(batch1: _*); q1.processAllAvailable() }
-      finally q1.stop()
-      assert(alerts("relay_snap1") == Set.empty)
-
-      // state -> parquet -> restored dataset, exact content pinned
-      Streaming.snapshotTwsValueState(spark, s"$root/ckpt1", "lastAddr",
-        s"$root/snap")
-      val restored = Streaming.readRelaySnapshot(spark, s"$root/snap")
-      assert(restored.collect().toSet == Set(
-        ("u1", Streaming.RelayState(2000000L, 2L, "h1")),
-        ("u2", Streaming.RelayState(3000000L, 3L, "h5"))))
-
-      // run 2: a FRESH query seeded from the snapshot
-      val in2 = MemoryStream[Streaming.RelayEvent]
-      val q2 = Streaming.privateRelayForwardTwsFrom(in2.toDS(),
-          initial = restored)
-        .writeStream.format("memory").queryName("relay_snap2")
-        .option("checkpointLocation", s"$root/ckpt2")
-        .outputMode(OutputMode.Append()).start()
-      try { in2.addData(batch2: _*); q2.processAllAvailable() }
-      finally q2.stop()
-      // u1's alert exists only because the restored state carries h1
-      assert(alerts("relay_snap2") == Set(("u1", 10000L, "h9", "h1")))
-
-      // stitched == one uninterrupted run over both batches
-      val in3 = MemoryStream[Streaming.RelayEvent]
-      val q3 = Streaming.privateRelayForwardTws(in3.toDS())
-        .writeStream.format("memory").queryName("relay_snap_unbroken")
-        .outputMode(OutputMode.Append()).start()
+    SparkTestSession.withRocksDb(spark) {
+      val root = java.nio.file.Files
+        .createTempDirectory("relay_snapshot_rt").toString
+      val relay = CustomsDetectors.EmailRelay
+      val rp = CustomsDetectors.FxaRpEvent
+      val batch1 = Seq(
+        Streaming.RelayEvent("u1", 1000000L, 1L, rp, "h1"),
+        Streaming.RelayEvent("u1", 2000000L, 2L, relay, "h1"), // matches: quiet
+        Streaming.RelayEvent("u2", 3000000L, 3L, rp, "h5"))
+      val batch2 = Seq(
+        // alerts ONLY if the restored state remembers u1 -> h1
+        Streaming.RelayEvent("u1", 10000000L, 4L, relay, "h9"),
+        Streaming.RelayEvent("u2", 11000000L, 5L, relay, "h5")) // quiet
+      def alerts(name: String) = spark.table(name)
+        .as[Streaming.RelayAlert].collect()
+        .map(a => (a.key, a.tsMs, a.actual, a.expected)).toSet
       try {
-        in3.addData(batch1: _*); q3.processAllAvailable()
-        in3.addData(batch2: _*); q3.processAllAvailable()
-      } finally q3.stop()
-      assert(alerts("relay_snap1") ++ alerts("relay_snap2") ==
-        alerts("relay_snap_unbroken"))
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+        // run 1: checkpointed, then stopped
+        val in1 = MemoryStream[Streaming.RelayEvent]
+        val q1 = Streaming.privateRelayForwardStream(in1.toDS())
+          .writeStream.format("memory").queryName("relay_snap1")
+          .option("checkpointLocation", s"$root/ckpt1")
+          .outputMode(OutputMode.Append()).start()
+        try { in1.addData(batch1: _*); q1.processAllAvailable() }
+        finally q1.stop()
+        assert(alerts("relay_snap1") == Set.empty)
+
+        // state -> parquet -> restored dataset, exact content pinned
+        Streaming.snapshotTwsValueState(spark, s"$root/ckpt1", "lastAddr",
+          s"$root/snap")
+        val restored = Streaming.readStateSnapshot[Streaming.RelayState](
+          spark, s"$root/snap")
+        assert(restored.collect().toSet == Set(
+          ("u1", Streaming.RelayState(2000000L, 2L, "h1")),
+          ("u2", Streaming.RelayState(3000000L, 3L, "h5"))))
+
+        // run 2: a FRESH query seeded from the snapshot
+        val in2 = MemoryStream[Streaming.RelayEvent]
+        val q2 = Streaming.privateRelayForwardStream(in2.toDS(),
+            initial = Some(restored))
+          .writeStream.format("memory").queryName("relay_snap2")
+          .option("checkpointLocation", s"$root/ckpt2")
+          .outputMode(OutputMode.Append()).start()
+        try { in2.addData(batch2: _*); q2.processAllAvailable() }
+        finally q2.stop()
+        // u1's alert exists only because the restored state carries h1
+        assert(alerts("relay_snap2") == Set(("u1", 10000L, "h9", "h1")))
+
+        // stitched == one uninterrupted run over both batches
+        val in3 = MemoryStream[Streaming.RelayEvent]
+        val q3 = Streaming.privateRelayForwardStream(in3.toDS())
+          .writeStream.format("memory").queryName("relay_snap_unbroken")
+          .outputMode(OutputMode.Append()).start()
+        try {
+          in3.addData(batch1: _*); q3.processAllAvailable()
+          in3.addData(batch2: _*); q3.processAllAvailable()
+        } finally q3.stop()
+        assert(alerts("relay_snap1") ++ alerts("relay_snap2") ==
+          alerts("relay_snap_unbroken"))
+      } finally
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
 

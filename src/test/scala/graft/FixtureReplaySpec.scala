@@ -1236,39 +1236,41 @@ class FixtureReplaySpec extends AnyFunSuite {
   }
 
   test("customs_status_comparator: streaming at-risk twin flags then alerts across batches (ref TestCustoms#statusComparatorTest)") {
-    val spark2 = spark
-    import spark2.implicits._
-    // the same fixture content through the streaming at-risk state op:
-    // batch 1 = comparator hits (flags), batch 2 = login failures
-    val monitored = fixture("customs_status_comparator_address_list.txt").toDS()
-    val b1 = parsedFxa(lines("customs_status_comparator1.txt"))
-    val flagged = CustomsDetectors.statusComparator(
-      b1.filter(col("summary").isin("accountStatusCheckSuccess",
-        "accountStatusCheckBlocked")),
-      col("timestamp"), col("src"), col("email"), monitored)
-      .collect().map(r => graft.streaming.Streaming.AccountEvent(
-        r.getAs[String]("email"), r.getAs[Long]("ts_ms") * 1000L, "flag"))
-    val fails = parsedFxa(lines("customs_status_comparator2.txt"))
-      .filter(col("summary") === "loginFailure").collect()
-      .map(r => graft.streaming.Streaming.AccountEvent(
-        r.getAs[String]("email"),
-        r.getAs[java.sql.Timestamp]("timestamp").getTime * 1000L, "fail"))
-    implicit val sqlCtx = spark2.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.Streaming.AccountEvent]
-    val q = graft.streaming.Streaming.atRiskAccounts(in.toDS())
-      .writeStream.format("memory").queryName("atrisk_replay")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    try {
-      in.addData(flagged.toIndexedSeq: _*)
-      q.processAllAvailable()
-      in.addData(fails.toIndexedSeq: _*)
-      q.processAllAvailable()
-      val got = spark2.table("atrisk_replay")
-        .as[graft.streaming.Streaming.AtRiskAlert].collect()
-      assert(got.length == 1)
-      assert(got.head.key == "spock@mozilla.com")
-    } finally q.stop()
+    SparkTestSession.withRocksDb(spark) {
+      val spark2 = spark
+      import spark2.implicits._
+      // the same fixture content through the streaming at-risk state op:
+      // batch 1 = comparator hits (flags), batch 2 = login failures
+      val monitored = fixture("customs_status_comparator_address_list.txt").toDS()
+      val b1 = parsedFxa(lines("customs_status_comparator1.txt"))
+      val flagged = CustomsDetectors.statusComparator(
+        b1.filter(col("summary").isin("accountStatusCheckSuccess",
+          "accountStatusCheckBlocked")),
+        col("timestamp"), col("src"), col("email"), monitored)
+        .collect().map(r => graft.streaming.Streaming.AccountEvent(
+          r.getAs[String]("email"), r.getAs[Long]("ts_ms") * 1000L, "flag"))
+      val fails = parsedFxa(lines("customs_status_comparator2.txt"))
+        .filter(col("summary") === "loginFailure").collect()
+        .map(r => graft.streaming.Streaming.AccountEvent(
+          r.getAs[String]("email"),
+          r.getAs[java.sql.Timestamp]("timestamp").getTime * 1000L, "fail"))
+      implicit val sqlCtx = spark2.sqlContext
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[graft.streaming.Streaming.AccountEvent]
+      val q = graft.streaming.Streaming.atRiskAccounts(in.toDS())
+        .writeStream.format("memory").queryName("atrisk_replay")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
+      try {
+        in.addData(flagged.toIndexedSeq: _*)
+        q.processAllAvailable()
+        in.addData(fails.toIndexedSeq: _*)
+        q.processAllAvailable()
+        val got = spark2.table("atrisk_replay")
+          .as[graft.streaming.Streaming.AtRiskAlert].collect()
+        assert(got.length == 1)
+        assert(got.head.key == "spock@mozilla.com")
+      } finally q.stop()
+    }
   }
 
   test("authprof_geovelocity buffers: impossible travel Milton→London alerts, the slow return does not") {

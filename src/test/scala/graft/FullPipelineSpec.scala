@@ -209,7 +209,8 @@ class FullPipelineSpec extends AnyFunSuite {
       Streaming.AccountEvent("flagged@x.com", (t + 200) * 1000000L, "fail"),
       Streaming.AccountEvent("other@x.com", (t + 100) * 1000000L, "fail")
     ).toDS()
-    val streamed = Streaming.atRiskAccounts(ev).collect()
+    val streamed = SparkTestSession.withRocksDb(spark)(
+      Streaming.atRiskAccounts(ev).collect())
     assert(streamed.map(a => (a.key, a.tsUs / 1000)).toSet ==
       atRisk.map(r => (r.getAs[String]("key"),
         r.getAs[Long]("alert_ts_ms"))).toSet)

@@ -27,56 +27,24 @@ class MultiplexSpec extends AnyFunSuite {
   test("at-risk accounts: flag then later failure alerts; unflagged failures don't") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Streaming.AccountEvent]
-    val q = Streaming.atRiskAccounts(in.toDS())
-      .writeStream.format("memory").queryName("atrisk")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    try {
-      in.addData(
-        Streaming.AccountEvent("a", 100L, "flag"),
-        Streaming.AccountEvent("b", 100L, "fail"))  // not flagged
-      q.processAllAvailable()
-      in.addData(
-        Streaming.AccountEvent("a", 200L, "fail"),  // flagged earlier -> alert
-        Streaming.AccountEvent("b", 300L, "fail"))  // still not flagged
-      q.processAllAvailable()
-      val got = spark.table("atrisk").as[(String, Long)].collect().toSet
-      assert(got == Set(("a", 200L)))
-    } finally q.stop()
-  }
-
-  test("transformWithState at-risk twin matches flatMapGroupsWithState across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Streaming.AccountEvent]
-    val q = Streaming.atRiskAccountsTws(in.toDS())
-      .writeStream.format("memory").queryName("atrisk_tws")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    try {
-      // identical input + expectations as the fMGWS test above
-      in.addData(
-        Streaming.AccountEvent("a", 100L, "flag"),
-        Streaming.AccountEvent("b", 100L, "fail"))
-      q.processAllAvailable()
-      in.addData(
-        Streaming.AccountEvent("a", 200L, "fail"),
-        Streaming.AccountEvent("b", 300L, "fail"))
-      q.processAllAvailable()
-      val got = spark.table("atrisk_tws").as[(String, Long)].collect().toSet
-      assert(got == Set(("a", 200L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    SparkTestSession.withRocksDb(spark) {
+      val in = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[Streaming.AccountEvent]
+      val q = Streaming.atRiskAccounts(in.toDS())
+        .writeStream.format("memory").queryName("atrisk")
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
+      try {
+        in.addData(
+          Streaming.AccountEvent("a", 100L, "flag"),
+          Streaming.AccountEvent("b", 100L, "fail"))  // not flagged
+        q.processAllAvailable()
+        in.addData(
+          Streaming.AccountEvent("a", 200L, "fail"),  // flagged earlier -> alert
+          Streaming.AccountEvent("b", 300L, "fail"))  // still not flagged
+        q.processAllAvailable()
+        val got = spark.table("atrisk").as[(String, Long)].collect().toSet
+        assert(got == Set(("a", 200L)))
+      } finally q.stop()
     }
   }
 

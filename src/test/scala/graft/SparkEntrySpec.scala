@@ -18,6 +18,22 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Runs `body` on the RocksDB state store (transformWithState needs
+    * it, in batch and streaming alike), restoring the previous
+    * provider setting afterwards. */
+  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.getOption(StateStoreProvider)
+    spark.conf.set(StateStoreProvider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(StateStoreProvider, p)
+      case None => spark.conf.unset(StateStoreProvider)
+    }
+  }
 }
 
 class SparkEntrySpec extends AnyFunSuite {

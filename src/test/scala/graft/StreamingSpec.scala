@@ -399,137 +399,132 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming suppress: first emits, later suppressed, re-emits after expiry across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Streaming.Keyed]
-    val q = Streaming.suppress(in.toDS(), expirySeconds = 600)
-      .writeStream.format("memory").queryName("supp")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(Streaming.Keyed("a", 0L), Streaming.Keyed("a", 10000000L),
-        Streaming.Keyed("b", 5000000L))
-      q.processAllAvailable()
-      // batch 2: a at exactly 600s (still suppressed — the reference's
-      // isExpired is strict >) and 601s (re-emit)
-      in.addData(Streaming.Keyed("a", 600000000L), Streaming.Keyed("a", 601000000L))
-      q.processAllAvailable()
-      val got = spark.table("supp").as[(String, Long)].collect().toSet
-      assert(got == Set(("a", 0L), ("b", 5000000L), ("a", 601000000L)))
-    } finally q.stop()
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[Streaming.Keyed]
+      val q = Streaming.suppress(in.toDS(), expirySeconds = 600)
+        .writeStream.format("memory").queryName("supp")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        in.addData(Streaming.Keyed("a", 0L), Streaming.Keyed("a", 10000000L),
+          Streaming.Keyed("b", 5000000L))
+        q.processAllAvailable()
+        // batch 2: a at exactly 600s (still suppressed — the reference's
+        // isExpired is strict >) and 601s (re-emit)
+        in.addData(Streaming.Keyed("a", 600000000L), Streaming.Keyed("a", 601000000L))
+        q.processAllAvailable()
+        val got = spark.table("supp").as[(String, Long)].collect().toSet
+        assert(got == Set(("a", 0L), ("b", 5000000L), ("a", 601000000L)))
+      } finally q.stop()
+    }
   }
 
-  test("transformWithState suppressor matches flatMapGroupsWithState semantics") {
+  test("suppress state TTL: an idle key's state expires, so its next element re-emits inside the expiry window") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // transformWithState + native TTL require the RocksDB state store
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Streaming.Keyed]
-    // ttl=0 (TimeMode.None): a TTL flips the query to processing-time
-    // scheduling, which livelocks processAllAvailable in bounded tests
-    // (same pitfall as GroupStateTimeout.ProcessingTimeTimeout)
-    val q = Streaming.suppressTws(in.toDS(), expirySeconds = 600)
-      .writeStream.format("memory").queryName("supp_tws")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(Streaming.Keyed("a", 0L), Streaming.Keyed("a", 10000000L),
-        Streaming.Keyed("b", 5000000L))
-      q.processAllAvailable()
-      in.addData(Streaming.Keyed("a", 600000000L), Streaming.Keyed("a", 601000000L))
-      q.processAllAvailable()
-      val got = spark.table("supp_tws").as[(String, Long)].collect().toSet
-      // identical output to the flatMapGroupsWithState form above
-      assert(got == Set(("a", 0L), ("b", 5000000L), ("a", 601000000L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[Streaming.Keyed]
+      // a TTL puts the query on processing time, which keeps scheduling
+      // micro-batches, so processAllAvailable never returns: poll the
+      // sink against a deadline instead
+      val q = Streaming.suppress(in.toDS(), expirySeconds = 600,
+          stateTtlSeconds = 1)
+        .writeStream.format("memory").queryName("supp_ttl")
+        .trigger(org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("200 milliseconds"))
+        .outputMode(OutputMode.Append()).start()
+      def awaitRows(n: Int): Set[(String, Long)] = {
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        var got = Set.empty[(String, Long)]
+        while (got.size < n && q.isActive && System.nanoTime() < deadline) {
+          Thread.sleep(100)
+          got = spark.table("supp_ttl").as[(String, Long)].collect().toSet
+        }
+        got
       }
+      try {
+        in.addData(Streaming.Keyed("a", 0L))
+        assert(awaitRows(1) == Set(("a", 0L)))
+        Thread.sleep(2500) // idle well past the 1 s TTL
+        // 10 s after the last emit, far inside the 600 s expiry: only
+        // the evicted state lets it through (without a TTL the suppress
+        // spec above pins it as suppressed)
+        in.addData(Streaming.Keyed("a", 10000000L))
+        assert(awaitRows(2) == Set(("a", 0L), ("a", 10000000L)))
+      } finally q.stop()
     }
   }
 
   test("assume-role correlation fires on element count, not watermark — and matches batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Streaming.CorrEvent]
-    val q = Streaming.assumeRoleCorrelateTws(in.toDS(), gapSeconds = 120)
-      .writeStream.format("memory").queryName("corr_tws")
-      .outputMode(OutputMode.Append()).start()
-    def rows() = spark.table("corr_tws")
-      .as[(String, Long, String)].collect().toSet
-    try {
-      // batch 1: only the trusted half of e1 — nothing can fire
-      in.addData(Streaming.CorrEvent("e1", 1000000L, "dkT", fixup = false,
-        cross = true, user = "alice"))
-      q.processAllAvailable()
-      assert(rows().isEmpty, "half a pair must not fire")
-      // batch 2: the trusting half arrives — the pair fires IN THIS
-      // BATCH (element count 2), with no watermark on the query at all
-      in.addData(Streaming.CorrEvent("e1", 3000000L, "dkF", fixup = true,
-        cross = false, user = "ignored"))
-      q.processAllAvailable()
-      assert(rows() == Set(("e1", 3000L, "alice")), "second half must fire immediately")
-      // batch 3: re-delivery of the trusting half (same dedupe key,
-      // shifted ts) must neither re-fire nor shift the pairing
-      in.addData(Streaming.CorrEvent("e1", 9000000L, "dkF", fixup = true,
-        cross = false, user = "ignored"))
-      q.processAllAvailable()
-      assert(rows() == Set(("e1", 3000L, "alice")), "re-delivery must not re-fire")
-      // batch 4: both halves of e2 in ONE batch (either order) fire
-      // together; out-of-gap e3 never fires; non-cross trusted of e4
-      // never pairs
-      in.addData(
-        Streaming.CorrEvent("e2", 10000000L, "t2", fixup = true,
-          cross = false, user = "x"),
-        Streaming.CorrEvent("e2", 9000000L, "d2", fixup = false,
-          cross = true, user = "bob"),
-        Streaming.CorrEvent("e3", 0L, "t3", fixup = true,
-          cross = false, user = "x"),
-        Streaming.CorrEvent("e3", 500000000L, "d3", fixup = false,
-          cross = true, user = "carol"),
-        Streaming.CorrEvent("e4", 0L, "t4", fixup = true,
-          cross = false, user = "x"),
-        Streaming.CorrEvent("e4", 1000000L, "d4", fixup = false,
-          cross = false, user = "dave"))
-      q.processAllAvailable()
-      assert(rows() == Set(("e1", 3000L, "alice"), ("e2", 10000L, "bob")))
-      // batch-equivalence: the batch operator on the same (in-order)
-      // rows emits the same pair set
-      val batchIn = Seq(
-        ("e1", 1000000L, "dkT", false, true, "alice"),
-        ("e1", 3000000L, "dkF", true, false, "ignored"),
-        ("e2", 10000000L, "t2", true, false, "x"),
-        ("e2", 9000000L, "d2", false, true, "bob"),
-        ("e3", 0L, "t3", true, false, "x"),
-        ("e3", 500000000L, "d3", false, true, "carol"),
-        ("e4", 0L, "t4", true, false, "x"),
-        ("e4", 1000000L, "d4", false, false, "dave"))
-        .toDF("sid", "ts_us", "dk", "fixup", "cross", "user")
-        .withColumn("ts", org.apache.spark.sql.functions
-          .timestamp_micros(org.apache.spark.sql.functions.col("ts_us")))
-      val batch = graft.operators.AuthState.assumeRoleCorrelate(batchIn,
-        org.apache.spark.sql.functions.col("sid"),
-        org.apache.spark.sql.functions.col("ts"),
-        org.apache.spark.sql.functions.col("dk"),
-        org.apache.spark.sql.functions.col("fixup"),
-        org.apache.spark.sql.functions.col("cross"),
-        org.apache.spark.sql.functions.col("user"), gapSeconds = 120)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-        .toSet
-      assert(batch == rows(), "streaming early-fire set == batch set")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[Streaming.CorrEvent]
+      val q = Streaming.assumeRoleCorrelate(in.toDS(), gapSeconds = 120)
+        .writeStream.format("memory").queryName("corr_tws")
+        .outputMode(OutputMode.Append()).start()
+      def rows() = spark.table("corr_tws")
+        .as[(String, Long, String)].collect().toSet
+      try {
+        // batch 1: only the trusted half of e1 — nothing can fire
+        in.addData(Streaming.CorrEvent("e1", 1000000L, "dkT", fixup = false,
+          cross = true, user = "alice"))
+        q.processAllAvailable()
+        assert(rows().isEmpty, "half a pair must not fire")
+        // batch 2: the trusting half arrives — the pair fires IN THIS
+        // BATCH (element count 2), with no watermark on the query at all
+        in.addData(Streaming.CorrEvent("e1", 3000000L, "dkF", fixup = true,
+          cross = false, user = "ignored"))
+        q.processAllAvailable()
+        assert(rows() == Set(("e1", 3000L, "alice")), "second half must fire immediately")
+        // batch 3: re-delivery of the trusting half (same dedupe key,
+        // shifted ts) must neither re-fire nor shift the pairing
+        in.addData(Streaming.CorrEvent("e1", 9000000L, "dkF", fixup = true,
+          cross = false, user = "ignored"))
+        q.processAllAvailable()
+        assert(rows() == Set(("e1", 3000L, "alice")), "re-delivery must not re-fire")
+        // batch 4: both halves of e2 in ONE batch (either order) fire
+        // together; out-of-gap e3 never fires; non-cross trusted of e4
+        // never pairs
+        in.addData(
+          Streaming.CorrEvent("e2", 10000000L, "t2", fixup = true,
+            cross = false, user = "x"),
+          Streaming.CorrEvent("e2", 9000000L, "d2", fixup = false,
+            cross = true, user = "bob"),
+          Streaming.CorrEvent("e3", 0L, "t3", fixup = true,
+            cross = false, user = "x"),
+          Streaming.CorrEvent("e3", 500000000L, "d3", fixup = false,
+            cross = true, user = "carol"),
+          Streaming.CorrEvent("e4", 0L, "t4", fixup = true,
+            cross = false, user = "x"),
+          Streaming.CorrEvent("e4", 1000000L, "d4", fixup = false,
+            cross = false, user = "dave"))
+        q.processAllAvailable()
+        assert(rows() == Set(("e1", 3000L, "alice"), ("e2", 10000L, "bob")))
+        // batch-equivalence: the batch operator on the same (in-order)
+        // rows emits the same pair set
+        val batchIn = Seq(
+          ("e1", 1000000L, "dkT", false, true, "alice"),
+          ("e1", 3000000L, "dkF", true, false, "ignored"),
+          ("e2", 10000000L, "t2", true, false, "x"),
+          ("e2", 9000000L, "d2", false, true, "bob"),
+          ("e3", 0L, "t3", true, false, "x"),
+          ("e3", 500000000L, "d3", false, true, "carol"),
+          ("e4", 0L, "t4", true, false, "x"),
+          ("e4", 1000000L, "d4", false, false, "dave"))
+          .toDF("sid", "ts_us", "dk", "fixup", "cross", "user")
+          .withColumn("ts", org.apache.spark.sql.functions
+            .timestamp_micros(org.apache.spark.sql.functions.col("ts_us")))
+        val batch = graft.operators.AuthState.assumeRoleCorrelate(batchIn,
+          org.apache.spark.sql.functions.col("sid"),
+          org.apache.spark.sql.functions.col("ts"),
+          org.apache.spark.sql.functions.col("dk"),
+          org.apache.spark.sql.functions.col("fixup"),
+          org.apache.spark.sql.functions.col("cross"),
+          org.apache.spark.sql.functions.col("user"), gapSeconds = 120)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+          .toSet
+        assert(batch == rows(), "streaming early-fire set == batch set")
+      } finally q.stop()
     }
   }
 
@@ -621,92 +616,98 @@ class StreamingSpec extends AnyFunSuite {
   test("suppressCount re-emits inside the window when the count changes") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Streaming.KeyedCount]
-    val q = Streaming.suppressCount(in.toDS(), expirySeconds = 600)
-      .writeStream.format("memory").queryName("suppc")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(
-        Streaming.KeyedCount("a", 0L, 5),        // emits (first)
-        Streaming.KeyedCount("a", 10000000L, 5), // suppressed (count unchanged)
-        Streaming.KeyedCount("a", 20000000L, 9)) // re-emits (count changed)
-      q.processAllAvailable()
-      in.addData(Streaming.KeyedCount("a", 30000000L, 9)) // suppressed
-      q.processAllAvailable()
-      val got = spark.table("suppc").as[(String, Long, Long)].collect().toSet
-      assert(got == Set(("a", 0L, 5L), ("a", 20000000L, 9L)))
-    } finally q.stop()
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[Streaming.KeyedCount]
+      val q = Streaming.suppressCount(in.toDS(), expirySeconds = 600)
+        .writeStream.format("memory").queryName("suppc")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        in.addData(
+          Streaming.KeyedCount("a", 0L, 5),        // emits (first)
+          Streaming.KeyedCount("a", 10000000L, 5), // suppressed (count unchanged)
+          Streaming.KeyedCount("a", 20000000L, 9)) // re-emits (count changed)
+        q.processAllAvailable()
+        in.addData(Streaming.KeyedCount("a", 30000000L, 9)) // suppressed
+        q.processAllAvailable()
+        val got = spark.table("suppc").as[(String, Long, Long)].collect().toSet
+        assert(got == Set(("a", 0L, 5L), ("a", 20000000L, 9L)))
+      } finally q.stop()
+    }
   }
 
   test("suppressCount re-emits on count DECREASE (ref emit-on-change, 10→3→5 all emit)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_micros}
     implicit val sqlCtx = spark.sqlContext
-    // the reference's shouldSuppress re-emits whenever the new count
-    // DIFFERS from the stored one (AlertSuppressorCount.java:31) and
-    // overwrites state on every emission — so counts 10 → 3 → 5
-    // inside one expiry window must emit all three (a max-ratchet
-    // would emit only the 10)
-    val evs = Seq(
-      Streaming.KeyedCount("a", 0L, 10),
-      Streaming.KeyedCount("a", 10000000L, 3),
-      Streaming.KeyedCount("a", 20000000L, 5))
-    val in = MemoryStream[Streaming.KeyedCount]
-    val q = Streaming.suppressCount(in.toDS(), expirySeconds = 600)
-      .writeStream.format("memory").queryName("suppc_dec")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      in.addData(evs.head); q.processAllAvailable()
-      in.addData(evs.tail: _*); q.processAllAvailable()
-      val streamed = spark.table("suppc_dec")
-        .as[(String, Long, Long)].collect().toSet
-      assert(streamed == Set(("a", 0L, 10L), ("a", 10000000L, 3L),
-        ("a", 20000000L, 5L)))
-      val batch = graft.operators.Stateful.suppressCount(evs.toDF(),
-          timestamp_micros(col("tsUs")), col("key"), col("count"),
-          expirySeconds = 600)
-        .as[(String, Long, Long)].collect().toSet
-      assert(batch == streamed)
-    } finally q.stop()
+    SparkTestSession.withRocksDb(spark) {
+      // the reference's shouldSuppress re-emits whenever the new count
+      // DIFFERS from the stored one (AlertSuppressorCount.java:31) and
+      // overwrites state on every emission — so counts 10 → 3 → 5
+      // inside one expiry window must emit all three (a max-ratchet
+      // would emit only the 10)
+      val evs = Seq(
+        Streaming.KeyedCount("a", 0L, 10),
+        Streaming.KeyedCount("a", 10000000L, 3),
+        Streaming.KeyedCount("a", 20000000L, 5))
+      val in = MemoryStream[Streaming.KeyedCount]
+      val q = Streaming.suppressCount(in.toDS(), expirySeconds = 600)
+        .writeStream.format("memory").queryName("suppc_dec")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        in.addData(evs.head); q.processAllAvailable()
+        in.addData(evs.tail: _*); q.processAllAvailable()
+        val streamed = spark.table("suppc_dec")
+          .as[(String, Long, Long)].collect().toSet
+        assert(streamed == Set(("a", 0L, 10L), ("a", 10000000L, 3L),
+          ("a", 20000000L, 5L)))
+        val batch = graft.operators.Stateful.suppressCount(evs.toDF(),
+            timestamp_micros(col("tsUs")), col("key"), col("count"),
+            expirySeconds = 600)
+          .as[(String, Long, Long)].collect().toSet
+        assert(batch == streamed)
+      } finally q.stop()
+    }
   }
 
   test("suppressCount streaming form makes the batch twin's decisions (q141 semantics)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_micros}
     implicit val sqlCtx = spark.sqlContext
-    // three keys, varying counts, expiry crossing several gaps — and
-    // delivery split across micro-batches (per-key ts order held, as
-    // the windowed-count producer guarantees)
-    val evs = for {
-      (k, ki) <- Seq("a", "b", "c").zipWithIndex
-      i <- 0 until 24
-    } yield Streaming.KeyedCount(k, i * 100000000L,
-      ((i * (ki + 3)) % 7 + 1).toLong)
-    val in = MemoryStream[Streaming.KeyedCount]
-    val q = Streaming.suppressCount(in.toDS(), expirySeconds = 250)
-      .writeStream.format("memory").queryName("suppc_eq")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (b1, b2) = evs.splitAt(30)
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("suppc_eq")
-        .as[(String, Long, Long)].collect().toSet
-      val batch = graft.operators.Stateful.suppressCount(evs.toDF(),
-          timestamp_micros(col("tsUs")), col("key"), col("count"),
-          expirySeconds = 250)
-        .as[(String, Long, Long)].collect().toSet
-      assert(batch.nonEmpty && streamed == batch)
-      // and emit-on-change actually fired somewhere: some emission
-      // happened strictly inside an expiry window
-      val sorted = batch.toSeq.sorted
-      val insideWindow = sorted.sliding(2).exists {
-        case Seq((k1, t1, _), (k2, t2, _)) =>
-          k1 == k2 && t2 - t1 < 250000000L
-        case _ => false
-      }
-      assert(insideWindow, "fixture never exercised emit-on-change")
-    } finally q.stop()
+    SparkTestSession.withRocksDb(spark) {
+      // three keys, varying counts, expiry crossing several gaps — and
+      // delivery split across micro-batches (per-key ts order held, as
+      // the windowed-count producer guarantees)
+      val evs = for {
+        (k, ki) <- Seq("a", "b", "c").zipWithIndex
+        i <- 0 until 24
+      } yield Streaming.KeyedCount(k, i * 100000000L,
+        ((i * (ki + 3)) % 7 + 1).toLong)
+      val in = MemoryStream[Streaming.KeyedCount]
+      val q = Streaming.suppressCount(in.toDS(), expirySeconds = 250)
+        .writeStream.format("memory").queryName("suppc_eq")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        val (b1, b2) = evs.splitAt(30)
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val streamed = spark.table("suppc_eq")
+          .as[(String, Long, Long)].collect().toSet
+        val batch = graft.operators.Stateful.suppressCount(evs.toDF(),
+            timestamp_micros(col("tsUs")), col("key"), col("count"),
+            expirySeconds = 250)
+          .as[(String, Long, Long)].collect().toSet
+        assert(batch.nonEmpty && streamed == batch)
+        // and emit-on-change actually fired somewhere: some emission
+        // happened strictly inside an expiry window
+        val sorted = batch.toSeq.sorted
+        val insideWindow = sorted.sliding(2).exists {
+          case Seq((k1, t1, _), (k2, t2, _)) =>
+            k1 == k2 && t2 - t1 < 250000000L
+          case _ => false
+        }
+        assert(insideWindow, "fixture never exercised emit-on-change")
+      } finally q.stop()
+    }
   }
 
   test("suppressCount ties on (key, ts) replay deterministically: smaller count first") {
@@ -758,82 +759,39 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming geo-velocity: impossible travel across micro-batches, state advances") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Streaming.GeoLogin]
-    val q = Streaming.geoVelocity(in.toDS(), maxKmh = 300.0)
-      .writeStream.format("memory").queryName("geovel")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // batch 1: alice logs in from London
-      in.addData(Streaming.GeoLogin("alice", 0L, 51.5074, -0.1278))
-      q.processAllAvailable()
-      // batch 2: alice from Tokyo an hour later (state carried across
-      // batches) -> ~9600 km/h alert; bob's first login never alerts
-      in.addData(
-        Streaming.GeoLogin("alice", 3600000000L, 35.68, 139.69),
-        Streaming.GeoLogin("bob", 3600000000L, 35.68, 139.69))
-      q.processAllAvailable()
-      // batch 3: alice stays in Tokyo -> no alert
-      in.addData(Streaming.GeoLogin("alice", 7200000000L, 35.69, 139.70))
-      q.processAllAvailable()
-      val got = spark.table("geovel").as[(String, Long, Long)].collect()
-      assert(got.length == 1)
-      assert(got(0)._1 == "alice" && got(0)._2 == 3600000000L)
-      assert(got(0)._3 > 5000)
-      // agrees with the batch operator on the same data
-      val batchGot = graft.operators.Stateful.geoVelocity(
-        Seq(("alice", new Timestamp(0), 51.5074, -0.1278),
-          ("alice", new Timestamp(3600000L), 35.68, 139.69),
-          ("alice", new Timestamp(7200000L), 35.69, 139.70),
-          ("bob", new Timestamp(3600000L), 35.68, 139.69))
-          .toDF("k", "t", "lat", "lon"),
-        col("t"), col("k"), col("lat"), col("lon"), 300.0).collect()
-      assert(batchGot.length == 1)
-      assert(batchGot(0).getAs[Long]("speed_kmh") == got(0)._3)
-    } finally q.stop()
-  }
-
-  test("transformWithState geo-velocity matches flatMapGroupsWithState and batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Streaming.GeoLogin]
-    val q = Streaming.geoVelocityTws(in.toDS(), maxKmh = 300.0)
-      .writeStream.format("memory").queryName("geovel_tws")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // identical input to the fMGWS test: London, then Tokyo an hour
-      // later (cross-batch state), then staying put
-      in.addData(Streaming.GeoLogin("alice", 0L, 51.5074, -0.1278))
-      q.processAllAvailable()
-      in.addData(
-        Streaming.GeoLogin("alice", 3600000000L, 35.68, 139.69),
-        Streaming.GeoLogin("bob", 3600000000L, 35.68, 139.69))
-      q.processAllAvailable()
-      in.addData(Streaming.GeoLogin("alice", 7200000000L, 35.69, 139.70))
-      q.processAllAvailable()
-      val got = spark.table("geovel_tws").as[(String, Long, Long)].collect()
-      assert(got.length == 1)
-      assert(got(0)._1 == "alice" && got(0)._2 == 3600000000L)
-      // same speed as the batch (lag-window) operator computes
-      val batchGot = graft.operators.Stateful.geoVelocity(
-        Seq(("alice", new Timestamp(0), 51.5074, -0.1278),
-          ("alice", new Timestamp(3600000L), 35.68, 139.69),
-          ("alice", new Timestamp(7200000L), 35.69, 139.70),
-          ("bob", new Timestamp(3600000L), 35.68, 139.69))
-          .toDF("k", "t", "lat", "lon"),
-        col("t"), col("k"), col("lat"), col("lon"), 300.0).collect()
-      assert(batchGot.length == 1)
-      assert(batchGot(0).getAs[Long]("speed_kmh") == got(0)._3)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[Streaming.GeoLogin]
+      val q = Streaming.geoVelocity(in.toDS(), maxKmh = 300.0)
+        .writeStream.format("memory").queryName("geovel")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // batch 1: alice logs in from London
+        in.addData(Streaming.GeoLogin("alice", 0L, 51.5074, -0.1278))
+        q.processAllAvailable()
+        // batch 2: alice from Tokyo an hour later (state carried across
+        // batches) -> ~9600 km/h alert; bob's first login never alerts
+        in.addData(
+          Streaming.GeoLogin("alice", 3600000000L, 35.68, 139.69),
+          Streaming.GeoLogin("bob", 3600000000L, 35.68, 139.69))
+        q.processAllAvailable()
+        // batch 3: alice stays in Tokyo -> no alert
+        in.addData(Streaming.GeoLogin("alice", 7200000000L, 35.69, 139.70))
+        q.processAllAvailable()
+        val got = spark.table("geovel").as[(String, Long, Long)].collect()
+        assert(got.length == 1)
+        assert(got(0)._1 == "alice" && got(0)._2 == 3600000000L)
+        assert(got(0)._3 > 5000)
+        // agrees with the batch operator on the same data
+        val batchGot = graft.operators.Stateful.geoVelocity(
+          Seq(("alice", new Timestamp(0), 51.5074, -0.1278),
+            ("alice", new Timestamp(3600000L), 35.68, 139.69),
+            ("alice", new Timestamp(7200000L), 35.69, 139.70),
+            ("bob", new Timestamp(3600000L), 35.68, 139.69))
+            .toDF("k", "t", "lat", "lon"),
+          col("t"), col("k"), col("lat"), col("lon"), 300.0).collect()
+        assert(batchGot.length == 1)
+        assert(batchGot(0).getAs[Long]("speed_kmh") == got(0)._3)
+      } finally q.stop()
     }
   }
 
@@ -1035,136 +993,99 @@ class StreamingSpec extends AnyFunSuite {
   test("TWS state → parquet snapshot → restore → continuation ≡ uninterrupted run") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val root = java.nio.file.Files.createTempDirectory("snapshot_rt").toString
-    val batch1 = Seq(Streaming.Keyed("alice", 0L),
-      Streaming.Keyed("alice", 100000000L), // suppressed (inside expiry)
-      Streaming.Keyed("bob", 50000000L))
-    val batch2 = Seq(
-      Streaming.Keyed("alice", 1800000000L), // still inside alice's expiry
-      Streaming.Keyed("alice", 4000000000L), // past expiry -> emits
-      Streaming.Keyed("bob", 7200000000L)) // past expiry -> emits
-    try {
-      // run 1: two keys through the suppressor, checkpointed, stopped
-      val in1 = MemoryStream[Streaming.Keyed]
-      val q1 = Streaming.suppressTws(in1.toDS(), expirySeconds = 3600)
-        .writeStream.format("memory").queryName("snap_run1")
-        .option("checkpointLocation", s"$root/ckpt1")
-        .outputMode(OutputMode.Append()).start()
+    SparkTestSession.withRocksDb(spark) {
+      val root = java.nio.file.Files.createTempDirectory("snapshot_rt").toString
+      val batch1 = Seq(Streaming.Keyed("alice", 0L),
+        Streaming.Keyed("alice", 100000000L), // suppressed (inside expiry)
+        Streaming.Keyed("bob", 50000000L))
+      val batch2 = Seq(
+        Streaming.Keyed("alice", 1800000000L), // still inside alice's expiry
+        Streaming.Keyed("alice", 4000000000L), // past expiry -> emits
+        Streaming.Keyed("bob", 7200000000L)) // past expiry -> emits
       try {
-        in1.addData(batch1: _*)
-        q1.processAllAvailable()
-      } finally q1.stop()
-      val out1 = spark.table("snap_run1").as[Streaming.Emitted]
-        .collect().toSet
-      assert(out1 == Set(Streaming.Emitted("alice", 0L),
-        Streaming.Emitted("bob", 50000000L)))
+        // run 1: two keys through the suppressor, checkpointed, stopped
+        val in1 = MemoryStream[Streaming.Keyed]
+        val q1 = Streaming.suppress(in1.toDS(), expirySeconds = 3600)
+          .writeStream.format("memory").queryName("snap_run1")
+          .option("checkpointLocation", s"$root/ckpt1")
+          .outputMode(OutputMode.Append()).start()
+        try {
+          in1.addData(batch1: _*)
+          q1.processAllAvailable()
+        } finally q1.stop()
+        val out1 = spark.table("snap_run1").as[Streaming.Emitted]
+          .collect().toSet
+        assert(out1 == Set(Streaming.Emitted("alice", 0L),
+          Streaming.Emitted("bob", 50000000L)))
 
-      // snapshot the stopped query's state to parquet, then restore
-      Streaming.snapshotTwsValueState(spark, s"$root/ckpt1", "lastEmit",
-        s"$root/snap")
-      val restored = Streaming.readSuppressSnapshot(spark, s"$root/snap")
-      assert(restored.collect().toSet ==
-        Set(("alice", Streaming.SuppressState(0L)),
-          ("bob", Streaming.SuppressState(50000000L))))
+        // snapshot the stopped query's state to parquet, then restore
+        Streaming.snapshotTwsValueState(spark, s"$root/ckpt1", "lastEmit",
+          s"$root/snap")
+        val restored = Streaming.readStateSnapshot[Streaming.SuppressState](
+          spark, s"$root/snap")
+        assert(restored.collect().toSet ==
+          Set(("alice", Streaming.SuppressState(0L)),
+            ("bob", Streaming.SuppressState(50000000L))))
 
-      // run 2: a FRESH query (new checkpoint) seeded from the snapshot
-      val in2 = MemoryStream[Streaming.Keyed]
-      val q2 = Streaming.suppressTwsFrom(in2.toDS(), expirySeconds = 3600,
-          initial = restored)
-        .writeStream.format("memory").queryName("snap_run2")
-        .option("checkpointLocation", s"$root/ckpt2")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        in2.addData(batch2: _*)
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val out2 = spark.table("snap_run2").as[Streaming.Emitted]
-        .collect().toSet
-      // alice@1800s suppressed ONLY because the restored state knows
-      // about her emit at t=0 from run 1
-      assert(out2 == Set(Streaming.Emitted("alice", 4000000000L),
-        Streaming.Emitted("bob", 7200000000L)))
+        // run 2: a FRESH query (new checkpoint) seeded from the snapshot
+        val in2 = MemoryStream[Streaming.Keyed]
+        val q2 = Streaming.suppress(in2.toDS(), expirySeconds = 3600,
+            initial = Some(restored))
+          .writeStream.format("memory").queryName("snap_run2")
+          .option("checkpointLocation", s"$root/ckpt2")
+          .outputMode(OutputMode.Append()).start()
+        try {
+          in2.addData(batch2: _*)
+          q2.processAllAvailable()
+        } finally q2.stop()
+        val out2 = spark.table("snap_run2").as[Streaming.Emitted]
+          .collect().toSet
+        // alice@1800s suppressed ONLY because the restored state knows
+        // about her emit at t=0 from run 1
+        assert(out2 == Set(Streaming.Emitted("alice", 4000000000L),
+          Streaming.Emitted("bob", 7200000000L)))
 
-      // the stitched output equals one uninterrupted run over both
-      // batches through the same operator
-      val in3 = MemoryStream[Streaming.Keyed]
-      val q3 = Streaming.suppressTws(in3.toDS(), expirySeconds = 3600)
-        .writeStream.format("memory").queryName("snap_unbroken")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        in3.addData(batch1: _*)
-        q3.processAllAvailable()
-        in3.addData(batch2: _*)
-        q3.processAllAvailable()
-      } finally q3.stop()
-      val unbroken = spark.table("snap_unbroken").as[Streaming.Emitted]
-        .collect().toSet
-      assert((out1 ++ out2) == unbroken)
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+        // the stitched output equals one uninterrupted run over both
+        // batches through the same operator
+        val in3 = MemoryStream[Streaming.Keyed]
+        val q3 = Streaming.suppress(in3.toDS(), expirySeconds = 3600)
+          .writeStream.format("memory").queryName("snap_unbroken")
+          .outputMode(OutputMode.Append()).start()
+        try {
+          in3.addData(batch1: _*)
+          q3.processAllAvailable()
+          in3.addData(batch2: _*)
+          q3.processAllAvailable()
+        } finally q3.stop()
+        val unbroken = spark.table("snap_unbroken").as[Streaming.Emitted]
+          .collect().toSet
+        assert((out1 ++ out2) == unbroken)
+      } finally
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
   }
 
   test("streaming sequence abuse: last-first pairing across micro-batches ≡ batch scan") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Streaming.SeqEvent]
-    val q = Streaming.sequenceAbuseStream(in.toDS(), deltaMs = 3600000L)
-      .writeStream.format("memory").queryName("seqabuse")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      seqEvents.foreach { batch =>
-        in.addData(batch: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("seqabuse").as[(String, Long)].collect().toSeq
-      assert(got == Seq(("alice", 1800000000L)))
-      // per-key count of streamed violations == the batch operator
-      val streamAgg = got.groupBy(_._1).map { case (k, vs) =>
-        (k, vs.size.toLong, vs.map(_._2).max / 1000L)
-      }.toSet
-      assert(streamAgg == seqBatchExpected)
-    } finally q.stop()
-  }
-
-  test("transformWithState sequence abuse matches fMGWS and batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Streaming.SeqEvent]
-    val q = Streaming.sequenceAbuseTws(in.toDS(), deltaMs = 3600000L)
-      .writeStream.format("memory").queryName("seqabuse_tws")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      seqEvents.foreach { batch =>
-        in.addData(batch: _*)
-        q.processAllAvailable()
-      }
-      val got = spark.table("seqabuse_tws").as[(String, Long)].collect().toSeq
-      assert(got == Seq(("alice", 1800000000L)))
-      val streamAgg = got.groupBy(_._1).map { case (k, vs) =>
-        (k, vs.size.toLong, vs.map(_._2).max / 1000L)
-      }.toSet
-      assert(streamAgg == seqBatchExpected)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[Streaming.SeqEvent]
+      val q = Streaming.sequenceAbuseStream(in.toDS(), deltaMs = 3600000L)
+        .writeStream.format("memory").queryName("seqabuse")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        seqEvents.foreach { batch =>
+          in.addData(batch: _*)
+          q.processAllAvailable()
+        }
+        val got = spark.table("seqabuse").as[(String, Long)].collect().toSeq
+        assert(got == Seq(("alice", 1800000000L)))
+        // per-key count of streamed violations == the batch operator
+        val streamAgg = got.groupBy(_._1).map { case (k, vs) =>
+          (k, vs.size.toLong, vs.map(_._2).max / 1000L)
+        }.toSet
+        assert(streamAgg == seqBatchExpected)
+      } finally q.stop()
     }
   }
 
@@ -1285,16 +1206,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming pipeline restart under the RocksDB state store (the at-scale provider)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runRestartScenario()
-    finally prev match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    SparkTestSession.withRocksDb(spark)(runRestartScenario())
   }
 
   test("continuous httprequest pipeline e2e: the full per-resource fan-out — NAT-gated hard limit + error rate + session limit + cfgtick in ONE query, threshold as the sibling mean-join stream — equals the batch pipeline; a late event is dropped by the watermark") {
@@ -1814,77 +1726,70 @@ class StreamingSpec extends AnyFunSuite {
         "3.3.3.3"))
 
     // the at-risk sibling runs on transformWithState -> RocksDB store
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[(String, String)]
-    val mux = in.toDF().toDF("resource", "value")
-    val lines = graft.sources.Multiplex.branch(mux, "fxa")
-    val q = CustomsPipeline.analyzeStreamFull(lines, cfg,
-        watermarkDelay = "30 seconds")
-      .writeStream.format("memory").queryName("customse2e")
-      .outputMode(OutputMode.Append()).start()
-    val enumRows =
-      scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
-    val eq = CustomsPipeline.enumerationAlertStream(lines, cfg,
-        watermarkDelay = "30 seconds") { df =>
-      val rows = df.select(col("subcategory"), col("key"), col("count"),
-          coalesce(col("alert_ts_ms"), lit(-1L)))
-        .as[(String, String, Long, Long)].collect()
-      enumRows.synchronized { enumRows ++= rows }
-    }.start()
-    val aq = CustomsPipeline.atRiskAlertStream(lines, cfg)
-      .writeStream.format("memory").queryName("customsatrisk")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      Seq(batch1, batch2, batch3).foreach { b =>
-        in.addData(b.map(l => ("fxa", l)) :+
-          (("other", authLine(t, "/v1/account/login", 400,
-            "leak@x.com", "u8", "8.8.4.4", errno = 103))): _*)
-        q.processAllAvailable()
-        eq.processAllAvailable()
-        aq.processAllAvailable()
-      }
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("subcategory"), col("key"), col("count"),
+    SparkTestSession.withRocksDb(spark) {
+      val in = MemoryStream[(String, String)]
+      val mux = in.toDF().toDF("resource", "value")
+      val lines = graft.sources.Multiplex.branch(mux, "fxa")
+      val q = CustomsPipeline.analyzeStreamFull(lines, cfg,
+          watermarkDelay = "30 seconds")
+        .writeStream.format("memory").queryName("customse2e")
+        .outputMode(OutputMode.Append()).start()
+      val enumRows =
+        scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
+      val eq = CustomsPipeline.enumerationAlertStream(lines, cfg,
+          watermarkDelay = "30 seconds") { df =>
+        val rows = df.select(col("subcategory"), col("key"), col("count"),
             coalesce(col("alert_ts_ms"), lit(-1L)))
-          .as[(String, String, Long, Long)].collect().toSet
-      val gotAlerts = rows(spark.table("customse2e")) ++
-        rows(spark.table("customsatrisk")) ++
-        enumRows.synchronized(enumRows.toSet)
+          .as[(String, String, Long, Long)].collect()
+        enumRows.synchronized { enumRows ++= rows }
+      }.start()
+      val aq = CustomsPipeline.atRiskAlertStream(lines, cfg)
+        .writeStream.format("memory").queryName("customsatrisk")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        Seq(batch1, batch2, batch3).foreach { b =>
+          in.addData(b.map(l => ("fxa", l)) :+
+            (("other", authLine(t, "/v1/account/login", 400,
+              "leak@x.com", "u8", "8.8.4.4", errno = 103))): _*)
+          q.processAllAvailable()
+          eq.processAllAvailable()
+          aq.processAllAvailable()
+        }
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select(col("subcategory"), col("key"), col("count"),
+              coalesce(col("alert_ts_ms"), lit(-1L)))
+            .as[(String, String, Long, Long)].collect().toSet
+        val gotAlerts = rows(spark.table("customse2e")) ++
+          rows(spark.table("customsatrisk")) ++
+          enumRows.synchronized(enumRows.toSet)
 
-      // equivalence with the batch suite over the lines the stream
-      // accepted (everything but the late row), across all SIX
-      // detector families of the fan-out
-      val accepted = (batch1 ++ batch2 ++ batch3).filterNot(_ == lateLine)
-      val batchAlerts = rows(CustomsPipeline.analyzeFull(
-        accepted.toDS(), cfg))
-      assert(gotAlerts == batchAlerts)
-      // the specific shape
-      assert(gotAlerts.map(a => (a._1, a._2)) == Set(
-        ("account_enumeration", "6.6.6.6"),
-        ("source_login_failure_distributed", "victim@x.com"),
-        ("status_comparator", "4.4.4.4"),
-        ("activity_monitor", "mon@x.com"),
-        ("login_failure_at_risk_account", "a@x.com"),
-        ("summary", "login_failure"), ("summary", "login_success")))
-      // late-drop pinned: with the late line, batch counts 4 sources
-      val withLate = CustomsPipeline.analyzeFull(
-          (batch1 ++ batch2 ++ batch3).toDS(), cfg)
-        .filter(col("subcategory") === "source_login_failure_distributed")
-        .select(col("count")).as[Long].collect().toSet
-      assert(withLate == Set(4L))
-      assert(gotAlerts.collect {
-        case ("source_login_failure_distributed", _, n, _) => n } == Set(3L))
-      // the other resource's traffic never leaked into this branch
-      assert(!gotAlerts.exists(_._2 == "leak@x.com"))
-    } finally {
-      q.stop(); eq.stop(); aq.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        // equivalence with the batch suite over the lines the stream
+        // accepted (everything but the late row), across all SIX
+        // detector families of the fan-out
+        val accepted = (batch1 ++ batch2 ++ batch3).filterNot(_ == lateLine)
+        val batchAlerts = rows(CustomsPipeline.analyzeFull(
+          accepted.toDS(), cfg))
+        assert(gotAlerts == batchAlerts)
+        // the specific shape
+        assert(gotAlerts.map(a => (a._1, a._2)) == Set(
+          ("account_enumeration", "6.6.6.6"),
+          ("source_login_failure_distributed", "victim@x.com"),
+          ("status_comparator", "4.4.4.4"),
+          ("activity_monitor", "mon@x.com"),
+          ("login_failure_at_risk_account", "a@x.com"),
+          ("summary", "login_failure"), ("summary", "login_success")))
+        // late-drop pinned: with the late line, batch counts 4 sources
+        val withLate = CustomsPipeline.analyzeFull(
+            (batch1 ++ batch2 ++ batch3).toDS(), cfg)
+          .filter(col("subcategory") === "source_login_failure_distributed")
+          .select(col("count")).as[Long].collect().toSet
+        assert(withLate == Set(4L))
+        assert(gotAlerts.collect {
+          case ("source_login_failure_distributed", _, n, _) => n } == Set(3L))
+        // the other resource's traffic never leaked into this branch
+        assert(!gotAlerts.exists(_._2 == "leak@x.com"))
+      } finally {
+        q.stop(); eq.stop(); aq.stop()
       }
     }
   }
