@@ -190,19 +190,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set at session build: the default generated-
-      // class cache (100 entries) thrashes across 61 queries x several
-      // codegen stages each, recompiling every plan on the timed pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // a full bench log carries ~50 WindowExec "No Partition Defined"
     // WARNs, ALL from deliberately tiny frames (budgetSelect's
     // |distinct scores| rollup, systematicPps' <= B bucket prefix
@@ -220,14 +208,9 @@ object Bench {
     // iteration convenience). Parse throughput is skipped in filtered
     // mode — the probe corpora have no events table.
     val qFilter = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = qFilter match {
-      case Some(f) =>
-        val missing = f.diff(SparkEntry.queries.keySet)
-        require(missing.isEmpty, s"unknown queries in filter: $missing")
-        SparkEntry.queries.filter(kv => f(kv._1))
-      case None => SparkEntry.queries
-    }
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+    val selected = SparkEntry.select(qFilter.getOrElse(Nil))
 
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)

@@ -1,24 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the optimized physical plan of every SparkEntry query to
   * stdout — the .explain audit loop: check pushdown reaches the scan,
   * small joins broadcast, codegen spans are wide, no accidental
   * shuffles. Run: sbt "runMain graft.PlanAudit [queryName...]" */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val selected = SparkEntry.select(args.toSeq)
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
-    val names = if (args.nonEmpty) args.toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = if (args.nonEmpty) args.toSeq else selected.keys.toSeq.sorted
     for (n <- names) {
       println(s"\n===== $n =====")
-      try SparkEntry.queries(n)(spark, dir).explain("formatted")
+      try selected(n)(spark, dir).explain("formatted")
       catch { case e: Throwable => println(s"ERROR: ${e.getMessage}") }
     }
     spark.stop()

@@ -124,15 +124,7 @@ object ScaleGen {
     require(args.length == 3 || args.length == 4,
       "usage: ScaleGen <srcSfDir> <outDir> <k> [embK|depth|length|skew]")
     val (srcDir, outDir, kStr) = (args(0), args(1), args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val depth = args.length == 4 && args(3) == "depth"
     val docLength = args.length == 4 && args(3) == "length"
     val skew = args.length == 4 && args(3) == "skew"

@@ -39,17 +39,9 @@ object SkewProbe {
     val k = args(1).toInt
     val salts = if (args.length > 2) args(2).toInt else 32
     val runs = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the probe's premise: the profile side does NOT broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    // the probe's premise: the profile side does NOT broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try probe(spark, sfDir, k, salts, runs)
     finally spark.stop()
   }

@@ -50,6 +50,17 @@ object SparkEntry {
   private def cents(c: org.apache.spark.sql.Column) =
     round(c * 100).cast("long")
 
+  /** The named subset of [[queries]] (every query when `names` is
+    * empty). An unknown name fails loudly: a typo must not shrink a
+    * run to nothing and still exit 0. */
+  def select(names: Seq[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else all.filter(kv => names.contains(kv._1))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.3 grouped aggregation w/ partial (map-side) combine + pushdown

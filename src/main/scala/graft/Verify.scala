@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,29 +7,14 @@ object Verify {
     // args: <sfDir> <outDir> [comma-separated query names] — the filter
     // is a local-iteration convenience; the driver always passes 2 args.
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf: default 100-entry generated-class cache thrashes
-      // across 61 query plans (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(
+      if (args.length > 2) args(2).split(",").toSeq else Nil)
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Per-query failures go into a manifest IN the output dir, not just
     // stderr: round 7's loader breakage silently shrank the dump from 84
     // to 29 queries and absence was the only failure signal.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -51,11 +35,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val oracleSel = only match {
-      case Some(names) => SparkEntry.oracleSql.filter(kv => names(kv._1))
-      case None => SparkEntry.oracleSql
-    }
-    val json = oracleSel
+    val json = SparkEntry.oracleSql.filter(kv => selected.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = s"""{"expected": ${selected.size}, "dumped": ${selected.size - failures.size}, "failed": ${

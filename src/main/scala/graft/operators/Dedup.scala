@@ -56,23 +56,31 @@ object Dedup {
     * at MEMORY_AND_DISK (spills, never OOMs). At 100 TB pass
     * `StorageLevel.NONE` to recompute per branch instead — the scan +
     * explode is cheap relative to holding the exploded corpus — or
-    * checkpoint it to a table between stages. */
+    * checkpoint it to a table between stages.
+    *
+    * `carry` columns must be functionally dependent on the id (a
+    * per-doc flag): they ride through the fan-out, the explode and
+    * the dedup unchanged, after doc_id and before s, so a consumer
+    * never joins the shingle set back to the doc frame for them. */
   def explodedShingles(df: DataFrame, id: Column, text: Column, n: Int,
       storage: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      carry: Seq[Column] = Nil): DataFrame = {
     // fanOutBy(doc_id): tokenize+explode+dedup all run at full
     // parallelism even from a one-row-group file, and the doc_id hash
     // partitioning already satisfies dropDuplicates(doc_id, s) — no
     // second shuffle
     val src = graft.sources.Tables.fanOutBy(
-      df.select(id.as("doc_id"), text.as("doc_text")), col("doc_id"))
-    val sh = src.select(col("doc_id"), tokens(col("doc_text")).as("ws"))
+      df.select(id.as("doc_id") +: text.as("doc_text") +: carry: _*),
+      col("doc_id"))
+    val keep = col("doc_id") +: src.columns.drop(2).toSeq.map(col)
+    val sh = src.select(keep :+ tokens(col("doc_text")).as("ws"): _*)
       .filter(size(col("ws")) >= n)
-      .select(col("doc_id"), col("ws"),
-        explode(sequence(lit(1), size(col("ws")) - (n - 1))).as("i"))
-      .select(col("doc_id"),
-        concat_ws(" ", (0 until n).map(k => element_at(col("ws"), col("i") + k)): _*)
-          .as("s"))
+      .select(keep ++ Seq(col("ws"),
+        explode(sequence(lit(1), size(col("ws")) - (n - 1))).as("i")): _*)
+      .select(keep :+ concat_ws(" ",
+          (0 until n).map(k => element_at(col("ws"), col("i") + k)): _*)
+        .as("s"): _*)
       .dropDuplicates("doc_id", "s")
     if (storage == org.apache.spark.storage.StorageLevel.NONE) sh
     else sh.persist(storage)

@@ -258,24 +258,14 @@ object TextAnalysis {
     * grams and are out of scope (no row). */
   def ngramNovelty(df: DataFrame, id: Column, text: Column,
       isRef: Column, n: Int = 3): DataFrame = {
-    val base = df.select(id.as("doc_id"), text.as("t"),
-      isRef.cast("boolean").as("is_ref"))
-    // the explodedShingles idiom with is_ref carried THROUGH the
-    // explode: the former join of the exploded (doc_id, s) frame back
-    // to the doc frame shuffled the whole shingle set a second time
-    // just to re-attach a flag that is functionally dependent on
-    // doc_id (guide §2.4 — is_ref rides the dropDuplicates rows
-    // unchanged, fanOutBy's doc_id partitioning already satisfies it)
-    val src = graft.sources.Tables.fanOutBy(base, col("doc_id"))
-    val sh = src.select(col("doc_id"), col("is_ref"),
-        Dedup.tokens(col("t")).as("ws"))
-      .filter(size(col("ws")) >= n)
-      .select(col("doc_id"), col("is_ref"), col("ws"),
-        explode(sequence(lit(1), size(col("ws")) - (n - 1))).as("i"))
-      .select(col("doc_id"), col("is_ref"), concat_ws(" ",
-        (0 until n).map(k => element_at(col("ws"), col("i") + k)): _*)
-        .as("s"))
-      .dropDuplicates("doc_id", "s")
+    // is_ref is carried THROUGH the explode: joining the exploded
+    // (doc_id, s) frame back to the doc frame would shuffle the whole
+    // shingle set a second time just to re-attach a flag that is
+    // functionally dependent on doc_id (guide §2.4). NONE: the two
+    // branches below recompute the shingles rather than hold them.
+    val sh = Dedup.explodedShingles(df, id, text, n,
+      org.apache.spark.storage.StorageLevel.NONE,
+      carry = Seq(isRef.cast("boolean").as("is_ref")))
     val refGrams = sh.filter(col("is_ref")).select(col("s")).distinct()
       .withColumn("seen", lit(true))
     sh.filter(!col("is_ref"))

@@ -39,15 +39,19 @@ object CustomsPipeline {
     Parser.parse(lines.filter(Parser.fastFilter("fxaauth"))).toDF()
       .filter(col("payloadType") === "fxaauth")
 
-  private def alert(df: DataFrame, subcategory: String, keyKind: String): DataFrame =
-    df.select(
-      lit("customs").as("category"),
+  /** The one Customs alert-row projection, shared by the batch and
+    * streaming forms: (category, subcategory, severity, key_kind, key,
+    * count, alert_ts_ms). */
+  private def alert(df: DataFrame, subcategory: String, keyKind: String,
+      key: Column = col("key"), n: Column = col("n"),
+      windowMs: Column = col("window_start_ms")): DataFrame =
+    df.select(lit("customs").as("category"),
       lit(subcategory).as("subcategory"),
       lit("warn").as("severity"),
       lit(keyKind).as("key_kind"),
-      col("key").cast("string").as("key"),
-      col("n").cast("long").as("count"),
-      col("window_start_ms").as("alert_ts_ms"))
+      key.cast("string").as("key"),
+      n.cast("long").as("count"),
+      windowMs.cast("long").as("alert_ts_ms"))
 
   def analyze(lines: Dataset[String], cfg: Config = Config()): DataFrame = {
     val fxa = parsedFxa(lines)
@@ -225,16 +229,6 @@ object CustomsPipeline {
         col("normalized.geo.latitude").as("lat"),
         col("normalized.geo.longitude").as("lon"))
 
-    def alert(df: DataFrame, subcategory: String, keyKind: String,
-        key: Column, n: Column, windowMs: Column): DataFrame =
-      df.select(lit("customs").as("category"),
-        lit(subcategory).as("subcategory"),
-        lit("warn").as("severity"),
-        lit(keyKind).as("key_kind"),
-        key.cast("string").as("key"),
-        n.cast("long").as("count"),
-        windowMs.cast("long").as("alert_ts_ms"))
-
     val isStatusCheck = col("summary").isin(
       "accountStatusCheckSuccess", "accountStatusCheckBlocked")
     val variance = CustomsDetectors.contentServerVariance(
@@ -343,16 +337,6 @@ object CustomsPipeline {
         element_at(col("fields"), "event_summary").as("summary"),
         col("normalized.sourceAddress").as("src"))
 
-  private def streamAlert(df: DataFrame, subcategory: String,
-      keyKind: String, key: Column, n: Column, wms: Column): DataFrame =
-    df.select(lit("customs").as("category"),
-      lit(subcategory).as("subcategory"),
-      lit("warn").as("severity"),
-      lit(keyKind).as("key_kind"),
-      key.cast("string").as("key"),
-      n.cast("long").as("count"),
-      wms.cast("long").as("alert_ts_ms"))
-
   /** The continuous form of [[analyzeFull]]: the reference's streaming
     * Customs deployment runs every detector off ONE parse
     * (ref s/customs/Customs.java:601-702 wires ~12 transforms over one
@@ -396,7 +380,7 @@ object CustomsPipeline {
     val fxa = fxaStreamFields(lines)
       .withWatermark("timestamp", watermarkDelay)
 
-    val summary = streamAlert(
+    val summary = alert(
       fxa.withColumn("class",
           when(col("summary") === "loginFailure", "login_failure")
             .when(col("summary") === "accountCreateSuccess",
@@ -417,7 +401,7 @@ object CustomsPipeline {
     // attacker-controlled: cfg.distinctStateCap bounds it (exact
     // below the cap, saturating at it — gate decisions unchanged
     // while cap >= threshold, which the require pins)
-    val srcFailDist = streamAlert(
+    val srcFailDist = alert(
       fxa.filter(col("summary") === "loginFailure" && col("email").isNotNull)
         .groupBy(window(col("timestamp"), cfg.window), col("email"))
         .agg(count(lit(1)).as("n_failures"),
@@ -427,14 +411,14 @@ object CustomsPipeline {
       "source_login_failure_distributed", "email", col("email"),
       col("n_src"), unix_millis(col("window.start")))
 
-    val comparator = streamAlert(CustomsDetectors.statusComparator(
+    val comparator = alert(CustomsDetectors.statusComparator(
         fxa.filter(col("summary") === "accountStatusCheckSuccess"),
         col("timestamp"), col("src"), col("email"),
         spark.createDataset(cfg.monitoredAddrs)),
       "status_comparator", "sourceaddress", col("src"), lit(1),
       col("ts_ms"))
 
-    val monitored = streamAlert(CustomsDetectors.monitoredActivity(
+    val monitored = alert(CustomsDetectors.monitoredActivity(
         fxa.filter(col("summary").isin("loginSuccess", "loginFailure")),
         col("timestamp"), col("email"), col("src"), col("summary"),
         spark.createDataset(cfg.monitoredAccounts)),
@@ -571,7 +555,7 @@ object CustomsPipeline {
           .agg(countDistinct(col("src")).as("n_clients"))
           .filter(col("n_clients") >= cfg.minVarianceClients)
           .select(col("window_start_ms"))
-        val alerts = streamAlert(
+        val alerts = alert(
           b.filter(col("has_content") === 0 &&
               col("n_checks") >= cfg.enumerationThreshold &&
               col("single_path") &&
@@ -652,7 +636,7 @@ object CustomsPipeline {
           .as("kind"))
       .filter(col("kind").isNotNull)
       .as[Streaming.AccountEvent]
-    streamAlert(Streaming.atRiskAccounts(ev).toDF(),
+    alert(Streaming.atRiskAccounts(ev).toDF(),
       "login_failure_at_risk_account", "email", col("key"), lit(1),
       col("tsUs") / 1000)
   }

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.filter.EventFilter
 import graft.operators.{Heuristics, Sessionize}
@@ -84,6 +84,9 @@ object HttpRequestPipeline {
       .filter(EventFilter.compile(Seq(EventFilter.Rule(
         wantNormalizedTypes = Seq("HTTP_REQUEST")))))
 
+  /** The one HTTP alert-row projection, shared by the batch and
+    * streaming forms: (summary, category, subcategory, severity,
+    * sourceaddress, count, window_start_ms). */
   private def alert(df: DataFrame, subcategory: String, severity: String,
       countCol: String): DataFrame =
     df.select(
@@ -348,17 +351,9 @@ object HttpRequestPipeline {
   def analyzeStream(lines: Dataset[String], cfg: Config = Config(),
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val parsed = parsedHttp(lines) // watermark applied by windowedHardLimit
-    graft.streaming.Streaming.windowedHardLimit(parsed, "timestamp",
+    alert(graft.streaming.Streaming.windowedHardLimit(parsed, "timestamp",
         col("normalized.sourceAddress"), cfg.window, watermarkDelay,
-        cfg.hardLimit)
-      .select(
-        lit("hard_limit_exceeded").as("summary"),
-        lit("httprequest").as("category"),
-        lit("hard_limit").as("subcategory"),
-        lit("warn").as("severity"),
-        col("key").as("sourceaddress"),
-        col("n").cast("long").as("count"),
-        col("window_start_ms"))
+        cfg.hardLimit), "hard_limit", "warn", "n")
   }
 
   /** The composed production shape as ONE streaming query (ref
@@ -419,38 +414,23 @@ object HttpRequestPipeline {
     val natFlag = col("n_ua") >= cfg.natMinDistinctUserAgents ||
       (if (cfg.knownGateways.isEmpty) lit(false)
        else col("key").isin(cfg.knownGateways: _*))
-    def alertRows(pred: Column, subcategory: String, countCol: Column) =
-      perClient.filter(pred).select(
-        lit(s"${subcategory}_exceeded").as("summary"),
-        lit("httprequest").as("category"),
-        lit(subcategory).as("subcategory"),
-        lit("warn").as("severity"),
-        col("key").as("sourceaddress"),
-        countCol.cast("long").as("count"),
-        col("window_start_ms"))
-    val hard = alertRows(col("n") > cfg.hardLimit && !natFlag,
-      "hard_limit", col("n"))
-    val errors = alertRows(col("errors") > cfg.errorMaxCount,
-      "error_rate", col("errors"))
+    val hard = alert(perClient.filter(col("n") > cfg.hardLimit && !natFlag),
+      "hard_limit", "warn", "n")
+    val errors = alert(perClient.filter(col("errors") > cfg.errorMaxCount),
+      "error_rate", "warn", "errors")
     // session-limit branch: its own keyed session_window state over
     // the same parsed stream; a session emits once the watermark
     // passes its gap (final pane), mirroring the batch
     // Sessionize.sessionLimit >= bound
-    val sessions = parsed
+    val sessions = alert(parsed
       .withWatermark("timestamp", watermarkDelay)
       .groupBy(session_window(col("timestamp"),
           s"${cfg.sessionGapSeconds} seconds"),
         col("normalized.sourceAddress").as("key"))
       .agg(count(lit(1)).as("n_events"))
       .filter(col("n_events") >= cfg.maxSessionEvents)
-      .select(
-        lit("session_limit_exceeded").as("summary"),
-        lit("httprequest").as("category"),
-        lit("session_limit").as("subcategory"),
-        lit("critical").as("severity"),
-        col("key").as("sourceaddress"),
-        col("n_events").cast("long").as("count"),
-        lit(null).cast("long").as("window_start_ms"))
+      .withColumn("window_start_ms", lit(null).cast("long")),
+      "session_limit", "critical", "n_events")
     // second branch over the same source: the cfgtick fast-keyword
     // pushdown prunes non-tick lines before this branch's parse, so
     // the double scan costs one substring probe per line, not two
@@ -502,17 +482,9 @@ object HttpRequestPipeline {
         val natFlag = col("n_ua") >= cfg.natMinDistinctUserAgents ||
           (if (cfg.knownGateways.isEmpty) lit(false)
            else col("key").isin(cfg.knownGateways: _*))
-        onAlerts(b.join(broadcast(mean), Seq("window_start_ms"))
+        onAlerts(alert(b.join(broadcast(mean), Seq("window_start_ms"))
           .filter(col("n") >= col("mean_n") * cfg.thresholdModifier &&
-            !natFlag)
-          .select(
-            lit("threshold_exceeded").as("summary"),
-            lit("httprequest").as("category"),
-            lit("threshold").as("subcategory"),
-            lit("warn").as("severity"),
-            col("key").as("sourceaddress"),
-            col("n").cast("long").as("count"),
-            col("window_start_ms")))
+            !natFlag), "threshold", "warn", "n"))
       }
   }
 }

@@ -5,17 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's ChecksumCheckpointFileManager deadlocks closing
-      // state-store delta files in local test runs — disable checksums
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(4)
+    // Spark 4.1's ChecksumCheckpointFileManager deadlocks closing
+    // state-store delta files in local test runs — disable checksums
+    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     s
   }
 
@@ -49,9 +42,44 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("the test session carries Session.local(4)'s config") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+  }
+
+  test("select: known names pick their queries, an empty list picks " +
+      "all, an unknown name fails naming it") {
+    val two = Seq("q01_pricing_summary", "q40_approx_distinct")
+    assert(SparkEntry.select(two).keySet == two.toSet)
+    assert(SparkEntry.select(Nil).keySet == SparkEntry.queries.keySet)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q01_pricing_summary", "q999_typo")))
+    assert(e.getMessage.contains("q999_typo"))
+    assert(!e.getMessage.contains("q01_pricing_summary"))
+  }
+
+  /** One pass per query: each frame is built once, then its physical
+    * plan and its rows are both checked.
+    *
+    * The plan check is a fleet-wide floor: no CartesianProduct,
+    * anywhere, ever. Every join in this engine is either keyed
+    * (hash/sort-merge on an equi-key) or an explicit `broadcast()` of
+    * a provably small side (which plans as BroadcastHashJoin or, for
+    * singleton/cross shapes, BroadcastNestedLoopJoin — bounded by the
+    * broadcast side's size). A CartesianProduct means a join lost its
+    * keys or its broadcast hint somewhere in a refactor; at corpus
+    * scale that is a corpus²-row stage. Per-query audits in
+    * PlanAuditSpec pin stronger, shape-specific properties (exchange
+    * payloads, broadcast directions, no-Window). */
   for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name runs non-empty at sf0.001") {
-      assert(SparkEntry.queries(name)(spark, sf).count() > 0)
+      val df = SparkEntry.queries(name)(spark, sf)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("CartesianProduct"),
+        s"$name planned a cartesian join:\n$p")
+      assert(df.count() > 0)
     }
   }
 
