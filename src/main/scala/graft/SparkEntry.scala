@@ -541,12 +541,12 @@ object SparkEntry {
             col("event_type") === "click")
         .withColumn("path", when(col("is_sc"), "/v1/account/status")
           .otherwise(concat(lit("/p/"), col("event_type"))))
-      val variance = CustomsDetectors.contentServerVariance(
-        ev.filter(col("event_type") === "signup" && col("user_id") % 2 === 0),
-        col("ts"), col("src"), "1 day")
+      val content = ev
+        .filter(col("event_type") === "signup" && col("user_id") % 2 === 0)
+        .select(col("ts"), col("src"))
       CustomsDetectors.accountEnumeration(ev, col("ts"), col("src"),
           col("email"), col("path"), col("is_sc"), "1 day", threshold = 8,
-          variance = Some(variance), minVarianceClients = 3)
+          content = Some(content), minVarianceClients = 3)
         .orderBy(col("window_start_ms"), col("src"))
     }),
 

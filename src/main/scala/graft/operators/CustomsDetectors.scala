@@ -140,26 +140,18 @@ object CustomsDetectors {
     }
   }
 
-  /** ContentServerVariance presence view: distinct source addresses
-    * seen in content-server events per window
-    * (ContentServerVarianceDetector.PresenceBased). */
-  def contentServerVariance(df: DataFrame, ts: Column, addr: Column,
-      window: String = "10 minutes"): DataFrame =
-    df.filter(addr.isNotNull)
-      .select(windowStartMs(ts, window).as("window_start_ms"),
-        addr.as("src"))
-      .dropDuplicates("window_start_ms", "src")
-
   /** CustomsAccountEnumeration: alert when one source address
     * status-checks `threshold`+ distinct accounts inside a window,
     * touched no endpoint other than the status-check path, and — when
-    * a variance view is supplied — does not appear in content-server
-    * traffic for a window with at least `minVarianceClients` distinct
-    * clients (a window below that floor produces no alerts at all,
-    * exactly like the reference's side-input size gate).
+    * content-server events are supplied — does not appear in
+    * content-server traffic for a window with at least
+    * `minVarianceClients` distinct clients (a window below that floor
+    * produces no alerts at all, exactly like the reference's
+    * side-input size gate; ContentServerVarianceDetector.java:37-93).
     *
-    * `variance` must have columns (window_start_ms, src) as produced
-    * by [[contentServerVariance]].
+    * `content` must have columns (ts, src). Batch form of
+    * [[enumerationEvents]] → [[enumerationPerSource]] →
+    * [[enumerationGate]]; the stream runs the same three.
     *
     * `latest_ts_ms` is the latest qualifying status-check event in the
     * window — the reference stamps the alert with it
@@ -173,36 +165,69 @@ object CustomsDetectors {
   def accountEnumeration(df: DataFrame, ts: Column, addr: Column,
       email: Column, path: Column, isStatusCheck: Column,
       window: String, threshold: Long,
-      variance: Option[DataFrame] = None,
-      minVarianceClients: Long = 0L): DataFrame = {
-    val base = df.select(ts.as("ts"), addr.as("src"), email.as("email"),
-        path.as("path"), isStatusCheck.as("is_sc"))
+      content: Option[DataFrame] = None,
+      minVarianceClients: Long = 0L): DataFrame =
+    enumerationGate(threshold, content.map(_ => minVarianceClients))(
+      enumerationPerSource(enumerationEvents(df, ts, addr, email, path,
+        isStatusCheck, content), window))
+
+  /** The enumeration's event rows: auth events as (ts, src, email,
+    * path, is_sc) plus content-server (ts, src) rows flagged
+    * `is_content`, null sources dropped. A row present in both frames
+    * counts once on each side. */
+  def enumerationEvents(auth: DataFrame, ts: Column, addr: Column,
+      email: Column, path: Column, isStatusCheck: Column,
+      content: Option[DataFrame]): DataFrame = {
+    val a = auth.select(ts.as("ts"), addr.as("src"), email.as("email"),
+      path.as("path"), isStatusCheck.as("is_sc"), lit(false).as("is_content"))
+    content.fold(a)(c => a.unionByName(c.select(col("ts"), col("src"),
+        lit(null).cast("string").as("email"),
+        lit(null).cast("string").as("path"),
+        lit(false).as("is_sc"), lit(true).as("is_content"))))
       .filter(col("src").isNotNull)
-      .withColumn("window_start_ms", windowStartMs(col("ts"), window))
-    val perAddr = base.groupBy(col("window_start_ms"), col("src"))
-      .agg(
-        count(when(col("is_sc"), 1)).as("n_checks"),
-        countDistinct(col("path")).as("n_paths"),
-        countDistinct(when(col("is_sc"), col("email"))).as("n_emails"),
-        unix_millis(max(when(col("is_sc"), col("ts"))))
-          .as("latest_ts_ms"))
-      .filter(col("n_checks") >= threshold && col("n_paths") === 1 &&
-        col("n_emails") >= threshold)
-      .drop("n_checks", "n_paths")
-    variance match {
-      case None => perAddr
-      case Some(v) =>
-        val clients = v.groupBy(col("window_start_ms"))
-          .agg(countDistinct(col("src")).as("n_clients"))
-          .filter(col("n_clients") >= minVarianceClients)
-          .drop("n_clients")
-        // clients (distinct windows) is tiny — always broadcast; the
-        // variance view itself can be wide at scale, so leave that
-        // join un-hinted and let AQE pick broadcast vs shuffle
-        perAddr
-          .join(broadcast(clients), Seq("window_start_ms"), "left_semi")
-          .join(v, Seq("window_start_ms", "src"), "left_anti")
-    }
+  }
+
+  /** Per-(window, src) enumeration aggregate over [[enumerationEvents]]:
+    * `n_checks`, `single_path` (countDistinct(path) = 1, answered
+    * exactly in constant state as >= 1 non-null path with min ==
+    * max), `n_emails` (distinct status-checked accounts, counted by
+    * `distinct`: exact in batch, the bounded counter on a stream),
+    * `has_content` and `latest_ts_ms`. */
+  def enumerationPerSource(events: DataFrame, window: String,
+      distinct: Column => Column = countDistinct(_)): DataFrame =
+    Heuristics.windowedAgg(events, col("ts"), window, Seq(col("src")))(
+      count(when(col("is_sc"), 1)).as("n_checks"),
+      (count(col("path")) > 0 && min(col("path")) === max(col("path")))
+        .as("single_path"),
+      distinct(when(col("is_sc"), col("email"))).as("n_emails"),
+      max(when(col("is_content"), 1).otherwise(0)).as("has_content"),
+      unix_millis(max(when(col("is_sc"), col("ts")))).as("latest_ts_ms"))
+
+  /** The enumeration's finalized-window gate over [[enumerationPerSource]]
+    * rows: both thresholds, the single-endpoint gate, no content-server
+    * presence, and with `minVarianceClients` set, the window-client
+    * floor. The floor is a second, per-window aggregate, so a stream
+    * applies this gate in its `foreachBatch` epilogue, where append
+    * mode delivers each finalized window whole. Output:
+    * (window_start_ms, src, n_emails, latest_ts_ms). */
+  def enumerationGate(threshold: Long, minVarianceClients: Option[Long])
+      : DataFrame => DataFrame = perSrc => {
+    val alerts = perSrc.filter(col("has_content") === 0 &&
+      col("n_checks") >= threshold && col("single_path") &&
+      col("n_emails") >= threshold)
+    minVarianceClients.fold(alerts) { floor =>
+        // rows are unique per (window, src): a row count is the
+        // window's distinct content clients. One row per window, so
+        // the side always broadcasts
+        val clients = perSrc.filter(col("has_content") === 1)
+          .groupBy(col("window_start_ms"))
+          .agg(count(lit(1)).as("n_clients"))
+          .filter(col("n_clients") >= floor)
+          .select(col("window_start_ms"))
+        alerts.join(broadcast(clients), Seq("window_start_ms"), "left_semi")
+      }
+      .select(col("window_start_ms"), col("src"), col("n_emails"),
+        col("latest_ts_ms"))
   }
 
   /** CustomsStatusComparator: status-check events whose source address
@@ -256,24 +281,21 @@ object CustomsDetectors {
   /** CustomsSummary: per-class event counts over fixed windows. */
   def summary(df: DataFrame, ts: Column, cls: Column,
       window: String = "15 minutes"): DataFrame =
-    df.filter(cls.isNotNull)
-      .groupBy(windowStartMs(ts, window).as("window_start_ms"),
-        cls.as("class"))
-      .agg(count(lit(1)).as("n"))
+    Heuristics.windowedAgg(df.filter(cls.isNotNull), ts, window,
+      Seq(cls.as("class")))(count(lit(1)).as("n"))
 
   /** SourceLoginFailureDist: one account failing logins from
     * `threshold`+ distinct source addresses within a window (total
     * failure count must also meet the threshold, matching the
-    * reference's cheap pre-gate). */
+    * reference's cheap pre-gate). `distinct` counts the sources:
+    * exact in batch, the bounded counter on a stream. */
   def sourceLoginFailureDist(df: DataFrame, ts: Column, email: Column,
       addr: Column, isFailure: Column, window: String,
-      threshold: Long): DataFrame =
-    df.filter(isFailure && email.isNotNull)
-      .select(windowStartMs(ts, window).as("window_start_ms"),
-        email.as("email"), addr.as("src"))
-      .groupBy(col("window_start_ms"), col("email"))
-      .agg(count(lit(1)).as("n_failures"),
-        countDistinct(col("src")).as("n_src"))
+      threshold: Long, distinct: Column => Column = countDistinct(_))
+      : DataFrame =
+    Heuristics.windowedAgg(df.filter(isFailure && email.isNotNull), ts,
+        window, Seq(email.as("email")))(
+        count(lit(1)).as("n_failures"), distinct(addr).as("n_src"))
       .filter(col("n_failures") >= threshold && col("n_src") >= threshold)
       .drop("n_failures")
 

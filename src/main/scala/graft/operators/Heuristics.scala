@@ -34,29 +34,100 @@ object Heuristics {
   private def windowStartMs(ts: Column, duration: String): Column =
     unix_millis(window(ts, duration).getField("start"))
 
-  /** Count events per (window, key); alert where count > limit. */
+  /** The windowed-aggregate shape every detector builder shares: group
+    * on the `window(ts, duration)` struct plus `keys`, then project the
+    * struct's start as epoch-millis `window_start_ms`. Grouping on the
+    * window itself is what lets a watermarked stream finalize the
+    * window in append mode; on a static frame the rows equal grouping
+    * on the projected start. Output: window_start_ms, the keys, the
+    * aggregates. */
+  def windowedAgg(df: DataFrame, ts: Column, duration: String,
+      keys: Seq[Column])(aggs: Column*): DataFrame = {
+    val g = df.groupBy(window(ts, duration) +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    g.select(unix_millis(col("window.start")).as("window_start_ms") +:
+      g.columns.toSeq.tail.map(col): _*)
+  }
+
+  /** Count events per (window, key); alert where count > limit. On a
+    * watermarked stream this is the streaming hard limit as well. */
   def hardLimit(df: DataFrame, ts: Column, key: Column, duration: String,
       limit: Long): DataFrame =
-    df.groupBy(windowStartMs(ts, duration).as("window_start_ms"),
-        key.as("key"))
-      .agg(count(lit(1)).as("n"))
+    windowedAgg(df, ts, duration, Seq(key.as("key")))(count(lit(1)).as("n"))
       .filter(col("n") > limit)
 
   /** Per-(window,key) count vs per-window mean of those counts:
-    * alert where count >= mean * modifier. The per-window mean is the
-    * reference's singleton side input; here it is an aggregate over the
-    * already-aggregated per-key counts (tiny) joined back broadcast. */
+    * alert where count >= mean * modifier ([[thresholdGate]]). */
   def thresholdAnalysis(df: DataFrame, ts: Column, key: Column,
-      duration: String, modifier: Double, minCount: Long = 1): DataFrame = {
-    val perKey = df
-      .groupBy(windowStartMs(ts, duration).as("window_start_ms"),
-        key.as("key"))
-      .agg(count(lit(1)).as("n"))
+      duration: String, modifier: Double, minCount: Long = 1): DataFrame =
+    thresholdGate(modifier, minCount)(
+        windowedAgg(df, ts, duration, Seq(key.as("key")))(
+          count(lit(1)).as("n")))
+      .select(col("window_start_ms"), col("key"), col("n"), col("mean_n"))
+
+  /** The threshold decision over finalized per-(window, key) rows with
+    * a count `n`: keep rows where n >= mean * modifier and n >=
+    * minCount, the mean taken over every row of the window. The mean
+    * is the reference's singleton side input; here an aggregate over
+    * the already-aggregated rows (tiny), joined back broadcast. Input
+    * columns pass through, plus `mean_n`; a caller that suppresses
+    * some keys (the NAT gate) filters after this gate, so suppressed
+    * keys still count toward the mean.
+    *
+    * Batch applies it to the whole aggregate. A stream applies it in
+    * a `foreachBatch` epilogue of an append-mode aggregate: when the
+    * watermark passes a window, all of that window's keys finalize in
+    * the same micro-batch. (A chained agg→agg→stream-join form is
+    * accepted by Spark 4, but the join treats the aggregate's output,
+    * whose event time lags the watermark by construction, as late and
+    * drops it.) */
+  def thresholdGate(modifier: Double, minCount: Long = 1)
+      : DataFrame => DataFrame = perKey => {
     val perWindow = perKey.groupBy(col("window_start_ms"))
       .agg(avg(col("n")).as("mean_n"))
     perKey.join(broadcast(perWindow), Seq("window_start_ms"))
       .filter(col("n") >= col("mean_n") * modifier && col("n") >= minCount)
-      .select(col("window_start_ms"), col("key"), col("n"), col("mean_n"))
+  }
+
+  /** The HTTP per-(window, client) aggregate the hard-limit,
+    * error-rate, threshold and NAT decisions all read: request count
+    * `n`, 4xx count `errors` and distinct user agents `n_ua`. The
+    * distinct counter is the caller's: exact `countDistinct` in batch;
+    * a stream passes a sketch, since Structured Streaming has no
+    * distinct aggregate. */
+  def perClient(df: DataFrame, ts: Column, key: Column, userAgent: Column,
+      status: Column, duration: String,
+      distinct: Column => Column = countDistinct(_)): DataFrame =
+    windowedAgg(df, ts, duration, Seq(key.as("key")))(
+      count(lit(1)).as("n"),
+      count(when(status.between(400, 499), 1)).as("errors"),
+      distinct(userAgent).as("n_ua"))
+
+  /** The NAT gate as a row predicate over [[perClient]] rows: true where
+    * the client is NOT a gateway, i.e. it carries fewer than
+    * `minUserAgents` distinct agents in the window (ref
+    * DetectNat.java:123-124) and is not a known gateway (ref
+    * DetectNat.withKnownGateways). A null key is never a gateway. */
+  def notGateway(minUserAgents: Long, knownGateways: Seq[String]): Column = {
+    val known =
+      if (knownGateways.isEmpty) lit(false)
+      else col("key").isin(knownGateways: _*)
+    col("key").isNull || !(col("n_ua") >= minUserAgents || known)
+  }
+
+  /** Hard-limit and error-rate decisions over [[perClient]] rows:
+    * (window_start_ms, key, subcategory, count), "hard_limit" where
+    * n > hardLimit and `notGateway` holds (HardLimitAnalysis.java:
+    * 88-128 takes the NAT view), "error_rate" where errors > maxErrors
+    * (ErrorRateAnalysis takes none). Row filters only, so a stream
+    * applies it inline. */
+  def rateGate(hardLimit: Long, maxErrors: Long, notGateway: Column)
+      : DataFrame => DataFrame = perClient => {
+    def rows(keep: Column, subcategory: String, n: String) =
+      perClient.filter(keep).select(col("window_start_ms"), col("key"),
+        lit(subcategory).as("subcategory"), col(n).as("count"))
+    rows(col("n") > hardLimit && notGateway, "hard_limit", "n")
+      .unionByName(rows(col("errors") > maxErrors, "error_rate", "errors"))
   }
 
   /** Count matching events (e.g. 4xx) per (window, key); alert where

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.Functions
 import graft.parse.Parser
-import graft.operators.CustomsDetectors
+import graft.operators.{CustomsDetectors, Heuristics}
 
 /** The Customs pipeline (ref EP3, s/customs/Customs.java:601-702):
   * FxA auth events keyed three ways — source address, email,
@@ -80,14 +80,11 @@ object CustomsPipeline {
       df.join(broadcast(nominal), Seq("window_start_ms", "key"),
         "left_anti")
 
-    def windowed(pred: org.apache.spark.sql.Column,
-        key: org.apache.spark.sql.Column, minN: Long,
-        distinctOf: Option[org.apache.spark.sql.Column] = None): DataFrame =
-      fxa.filter(pred)
-        .groupBy(unix_millis(window(col("timestamp"), cfg.window)
-          .getField("start")).as("window_start_ms"), key.as("key"))
-        .agg(distinctOf.map(countDistinct(_))
-          .getOrElse(count(lit(1))).as("n"))
+    def windowed(pred: Column, key: Column, minN: Long,
+        distinctOf: Option[Column] = None): DataFrame =
+      Heuristics.windowedAgg(fxa.filter(pred), col("timestamp"), cfg.window,
+          Seq(key.as("key")))(
+          distinctOf.map(countDistinct(_)).getOrElse(count(lit(1))).as("n"))
         .filter(col("n") >= minN)
 
     // count = failures carrying an account (ref SourceLoginFailure
@@ -193,13 +190,85 @@ object CustomsPipeline {
     * DISTINCT raw values (no hashing — the k smallest distinct
     * elements of a set count the set exactly below k), so
     * size(items) == min(cap, true distinct) and state is bounded by
-    * construction. Nulls are not set members in either form. */
-  private def distinctCount(v: Column, cap: Int): Column =
-    if (cap <= 0) size(collect_set(v)).cast("long")
-    else {
-      val kmin = udaf(new graft.functions.KMinValuesAggregator(cap))
-      size(kmin(v).getField("items")).cast("long")
-    }
+    * construction. Nulls are not set members in either form. The cap
+    * must not sit below the gate's threshold, or a saturated count
+    * could no longer decide it. */
+  private def distinctCount(cfg: FullConfig, threshold: Long,
+      thresholdName: String): Column => Column = {
+    val cap = cfg.resolvedDistinctStateCap
+    require(cap == 0 || cap >= threshold,
+      s"distinctStateCap=$cap below $thresholdName=$threshold: a " +
+        "saturated count could no longer decide the gate")
+    v =>
+      if (cap <= 0) size(collect_set(v)).cast("long")
+      else {
+        val kmin = udaf(new graft.functions.KMinValuesAggregator(cap))
+        size(kmin(v).getField("items")).cast("long")
+      }
+  }
+
+  private val StatusChecks =
+    Seq("accountStatusCheckSuccess", "accountStatusCheckBlocked")
+
+  /** The parsed fxa-auth events projected to the detector fields. */
+  private def fxaFields(parsed: DataFrame, extra: Column*): DataFrame =
+    parsed.select(Seq(col("timestamp"),
+      element_at(col("fields"), "email").as("email"),
+      element_at(col("fields"), "uid").as("uid"),
+      element_at(col("fields"), "path").as("path"),
+      element_at(col("fields"), "event_summary").as("summary"),
+      col("normalized.sourceAddress").as("src")) ++ extra: _*)
+
+  /** Enumeration event rows (see [[CustomsDetectors.enumerationEvents]])
+    * over fxa fields plus the content-server events of `parsedAll`. */
+  private def enumerationEvents(fxa: DataFrame,
+      parsedAll: DataFrame): DataFrame =
+    CustomsDetectors.enumerationEvents(fxa, col("timestamp"), col("src"),
+      col("email"), col("path"), col("summary").isin(StatusChecks: _*),
+      Some(parsedAll.filter(col("payloadType") === "fxacontent")
+        .select(col("timestamp").as("ts"),
+          col("normalized.sourceAddress").as("src"))))
+
+  private def summaryAlerts(fxa: DataFrame): DataFrame =
+    alert(CustomsDetectors.summary(fxa, col("timestamp"),
+        when(col("summary") === "loginFailure", "login_failure")
+          .when(col("summary") === "accountCreateSuccess",
+            "account_create_success")
+          .when(col("summary") === "loginSuccess", "login_success"),
+        "15 minutes"),
+      "summary", "class", col("class"))
+
+  private def srcFailDistAlerts(fxa: DataFrame, cfg: FullConfig,
+      distinct: Column => Column): DataFrame =
+    alert(CustomsDetectors.sourceLoginFailureDist(fxa, col("timestamp"),
+        col("email"), col("src"), col("summary") === "loginFailure",
+        cfg.window, cfg.srcFailDistThreshold, distinct),
+      "source_login_failure_distributed", "email", col("email"),
+      col("n_src"))
+
+  /** Status-comparator hits: also the at-risk account state. */
+  private def comparatorHits(fxa: DataFrame, cfg: FullConfig): DataFrame = {
+    val spark = fxa.sparkSession
+    import spark.implicits._
+    CustomsDetectors.statusComparator(
+      fxa.filter(col("summary") === "accountStatusCheckSuccess"),
+      col("timestamp"), col("src"), col("email"),
+      spark.createDataset(cfg.monitoredAddrs))
+  }
+
+  private def comparatorAlerts(hits: DataFrame): DataFrame =
+    alert(hits, "status_comparator", "sourceaddress", col("src"), lit(1),
+      col("ts_ms"))
+
+  private def monitoredAlerts(fxa: DataFrame, cfg: FullConfig): DataFrame = {
+    val spark = fxa.sparkSession
+    import spark.implicits._
+    alert(CustomsDetectors.monitoredActivity(
+        fxa.filter(col("summary").isin("loginSuccess", "loginFailure")),
+        col("timestamp"), col("email"), col("src"), col("summary"),
+        spark.createDataset(cfg.monitoredAccounts)),
+      "activity_monitor", "email", col("email"), lit(1), col("ts_ms"))
+  }
 
   /** The full customs suite over ONE parsed+cached frame — the Spark
     * form of the reference's ~12-transform wiring (ref Customs.java:
@@ -211,29 +280,16 @@ object CustomsPipeline {
     */
   def analyzeFull(lines: Dataset[String], cfg: FullConfig = FullConfig(),
       geo: Option[graft.parse.GeoIp.GeoIpResolver] = None): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
     val candidates = lines.filter(
       Parser.fastFilter("fxaauth") || Parser.fastFilter("fxacontent"))
     val parsedAll = (geo match {
       case Some(r) => graft.parse.GeoIp.enrich(Parser.parse(candidates), r)
       case None => Parser.parse(candidates)
     }).toDF().cache()
-    val fxa = parsedAll.filter(col("payloadType") === "fxaauth")
-      .select(col("timestamp"), col("id"),
-        element_at(col("fields"), "email").as("email"),
-        element_at(col("fields"), "uid").as("uid"),
-        element_at(col("fields"), "path").as("path"),
-        element_at(col("fields"), "event_summary").as("summary"),
-        col("normalized.sourceAddress").as("src"),
-        col("normalized.geo.latitude").as("lat"),
-        col("normalized.geo.longitude").as("lon"))
+    val fxa = fxaFields(parsedAll.filter(col("payloadType") === "fxaauth"),
+      col("id"), col("normalized.geo.latitude").as("lat"),
+      col("normalized.geo.longitude").as("lon"))
 
-    val isStatusCheck = col("summary").isin(
-      "accountStatusCheckSuccess", "accountStatusCheckBlocked")
-    val variance = CustomsDetectors.contentServerVariance(
-      parsedAll.filter(col("payloadType") === "fxacontent"),
-      col("timestamp"), col("normalized.sourceAddress"), cfg.window)
     // the reference gates enumeration alerts with
     // AlertSuppressorCount(600L) keyed on the source address
     // (CustomsAccountEnumeration.java:153): a later window's alert
@@ -248,55 +304,25 @@ object CustomsPipeline {
     // sit strictly past the 600s bar, silently suppressing same-count
     // alerts the reference re-emits.
     val enumeration = graft.operators.Stateful.suppressCountGate(
-      alert(CustomsDetectors.accountEnumeration(
-          fxa, col("timestamp"), col("src"), col("email"), col("path"),
-          isStatusCheck, cfg.window, cfg.enumerationThreshold,
-          variance = Some(variance),
-          minVarianceClients = cfg.minVarianceClients),
+      alert(CustomsDetectors.enumerationGate(cfg.enumerationThreshold,
+          Some(cfg.minVarianceClients))(CustomsDetectors.enumerationPerSource(
+          enumerationEvents(fxa, parsedAll), cfg.window)),
         "account_enumeration", "sourceaddress", col("src"),
         col("n_emails"), col("latest_ts_ms")),
       timestamp_millis(col("alert_ts_ms")), col("key"),
       col("count"), expirySeconds = 600)
-
-    val srcFailDist = alert(CustomsDetectors.sourceLoginFailureDist(
-        fxa, col("timestamp"), col("email"), col("src"),
-        col("summary") === "loginFailure", cfg.window,
-        cfg.srcFailDistThreshold),
-      "source_login_failure_distributed", "email", col("email"),
-      col("n_src"), col("window_start_ms"))
-
-    val summary = alert(CustomsDetectors.summary(fxa, col("timestamp"),
-        when(col("summary") === "loginFailure", "login_failure")
-          .when(col("summary") === "accountCreateSuccess",
-            "account_create_success")
-          .when(col("summary") === "loginSuccess", "login_success"),
-        "15 minutes"),
-      "summary", "class", col("class"), col("n"), col("window_start_ms"))
 
     // the comparator's hit set doubles as the at-risk account state
     // that CustomsLoginFailureForAtRiskAccount reads (ref
     // CustomsStatusComparator.java:155-166 writes the Datastore entry
     // the lfara transform looks up) — compute it once, alert on it,
     // and feed it to the login-failure join
-    val comparatorHits = CustomsDetectors.statusComparator(
-      fxa.filter(col("summary") === "accountStatusCheckSuccess"),
-      col("timestamp"), col("src"), col("email"),
-      spark.createDataset(cfg.monitoredAddrs))
-    val comparator = alert(comparatorHits,
-      "status_comparator", "sourceaddress", col("src"), lit(1),
-      col("ts_ms"))
-
+    val hits = comparatorHits(fxa, cfg)
     val atRisk = alert(CustomsDetectors.loginFailureAtRiskAccount(
         fxa.filter(col("summary") === "loginFailure"),
-        col("timestamp"), col("email"), col("src"), comparatorHits),
+        col("timestamp"), col("email"), col("src"), hits),
       "login_failure_at_risk_account", "email", col("email"), lit(1),
       col("ts_ms"))
-
-    val monitored = alert(CustomsDetectors.monitoredActivity(
-        fxa.filter(col("summary").isin("loginSuccess", "loginFailure")),
-        col("timestamp"), col("email"), col("src"), col("summary"),
-        spark.createDataset(cfg.monitoredAccounts)),
-      "activity_monitor", "email", col("email"), lit(1), col("ts_ms"))
 
     val velocity = geo match {
       case None => None
@@ -320,8 +346,10 @@ object CustomsPipeline {
             col("ts_ms").cast("long").as("alert_ts_ms")))
     }
 
-    val base = enumeration.unionByName(srcFailDist).unionByName(summary)
-      .unionByName(comparator).unionByName(atRisk).unionByName(monitored)
+    val base = enumeration
+      .unionByName(srcFailDistAlerts(fxa, cfg, countDistinct(_)))
+      .unionByName(summaryAlerts(fxa)).unionByName(comparatorAlerts(hits))
+      .unionByName(atRisk).unionByName(monitoredAlerts(fxa, cfg))
     velocity.fold(base)(base.unionByName(_))
   }
 
@@ -329,13 +357,7 @@ object CustomsPipeline {
     * shared by every streaming branch: one fast-match-pruned parse,
     * the streaming analogue of analyzeFull's cached batch frame. */
   private def fxaStreamFields(lines: Dataset[String]): DataFrame =
-    parsedFxa(lines)
-      .select(col("timestamp"),
-        element_at(col("fields"), "email").as("email"),
-        element_at(col("fields"), "uid").as("uid"),
-        element_at(col("fields"), "path").as("path"),
-        element_at(col("fields"), "event_summary").as("summary"),
-        col("normalized.sourceAddress").as("src"))
+    fxaFields(parsedFxa(lines))
 
   /** The continuous form of [[analyzeFull]]: the reference's streaming
     * Customs deployment runs every detector off ONE parse
@@ -366,102 +388,57 @@ object CustomsPipeline {
   def analyzeStreamFull(lines: Dataset[String],
       cfg: FullConfig = FullConfig(),
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    require(cfg.resolvedDistinctStateCap == 0 ||
-      cfg.resolvedDistinctStateCap >= cfg.srcFailDistThreshold,
-      s"distinctStateCap=${cfg.resolvedDistinctStateCap} below " +
-        s"srcFailDistThreshold=${cfg.srcFailDistThreshold}: a saturated " +
-        "count could no longer decide the gate")
-    val spark = lines.sparkSession
-    import spark.implicits._
+    val distinct = distinctCount(cfg, cfg.srcFailDistThreshold,
+      "srcFailDistThreshold")
     // the watermark is assigned on the UNFILTERED parsed stream, so
     // every event of the resource advances it — a watermark placed
     // after a branch's filter would stall the whole query's (global,
     // min-of-branches) watermark whenever that event class goes quiet
     val fxa = fxaStreamFields(lines)
       .withWatermark("timestamp", watermarkDelay)
-
-    val summary = alert(
-      fxa.withColumn("class",
-          when(col("summary") === "loginFailure", "login_failure")
-            .when(col("summary") === "accountCreateSuccess",
-              "account_create_success")
-            .when(col("summary") === "loginSuccess", "login_success"))
-        .filter(col("class").isNotNull)
-        .groupBy(window(col("timestamp"), "15 minutes"), col("class"))
-        .agg(count(lit(1)).as("n")),
-      "summary", "class", col("class"), col("n"),
-      unix_millis(col("window.start")))
-
-    // EXACT distinct sources (collect_set), not HLL++: the alert's
-    // count column and the >= threshold gate must agree with the
-    // batch twin's countDistinct at the boundary (Spark's HLL++ has
-    // no sparse mode, so even single-digit cardinalities can carry
-    // error). State per (window, email) is the distinct-src set —
-    // linear in the attack fan-out being measured, which is
-    // attacker-controlled: cfg.distinctStateCap bounds it (exact
-    // below the cap, saturating at it — gate decisions unchanged
-    // while cap >= threshold, which the require pins)
-    val srcFailDist = alert(
-      fxa.filter(col("summary") === "loginFailure" && col("email").isNotNull)
-        .groupBy(window(col("timestamp"), cfg.window), col("email"))
-        .agg(count(lit(1)).as("n_failures"),
-          distinctCount(col("src"), cfg.resolvedDistinctStateCap).as("n_src"))
-        .filter(col("n_failures") >= cfg.srcFailDistThreshold &&
-          col("n_src") >= cfg.srcFailDistThreshold),
-      "source_login_failure_distributed", "email", col("email"),
-      col("n_src"), unix_millis(col("window.start")))
-
-    val comparator = alert(CustomsDetectors.statusComparator(
-        fxa.filter(col("summary") === "accountStatusCheckSuccess"),
-        col("timestamp"), col("src"), col("email"),
-        spark.createDataset(cfg.monitoredAddrs)),
-      "status_comparator", "sourceaddress", col("src"), lit(1),
-      col("ts_ms"))
-
-    val monitored = alert(CustomsDetectors.monitoredActivity(
-        fxa.filter(col("summary").isin("loginSuccess", "loginFailure")),
-        col("timestamp"), col("email"), col("src"), col("summary"),
-        spark.createDataset(cfg.monitoredAccounts)),
-      "activity_monitor", "email", col("email"), lit(1), col("ts_ms"))
-
-    summary.unionByName(srcFailDist).unionByName(comparator)
-      .unionByName(monitored)
+    summaryAlerts(fxa).unionByName(srcFailDistAlerts(fxa, cfg, distinct))
+      .unionByName(comparatorAlerts(comparatorHits(fxa, cfg)))
+      .unionByName(monitoredAlerts(fxa, cfg))
   }
 
   /** Streaming account enumeration with the content-server variance
-    * gate — the sibling query of [[analyzeStreamFull]] (the gate is a
-    * second, window-level aggregation over the finalized windows, so
-    * it runs as a foreachBatch epilogue exactly like the HTTP
-    * threshold stream's mean join). Auth and content events merge
-    * into ONE keyed aggregate (the per-src content-presence flag
-    * rides the same state as the enumeration counters); distinct
-    * emails are counted exactly BELOW `cfg.resolvedDistinctStateCap`
-    * and saturate AT it (the bounded k-min counter; 0 opts back into
-    * unbounded exact collect_set) and the single-endpoint gate runs
-    * as a constant-state min==max equality, so every gate decides
-    * identically to the batch twin at the threshold boundary, and the
-    * emitted count agrees with it for any key under the cap.
-    * `onAlerts` receives each finalized batch's alert rows.
+    * gate — the sibling query of [[analyzeStreamFull]]. It runs the
+    * batch form's three steps: [[CustomsDetectors.enumerationEvents]]
+    * (auth and content events in ONE keyed aggregate, the per-src
+    * content-presence flag riding the same state as the counters),
+    * [[CustomsDetectors.enumerationPerSource]] on the watermarked rows,
+    * and [[CustomsDetectors.enumerationGate]] (a second, window-level
+    * aggregation) as a foreachBatch epilogue over the finalized
+    * windows. Distinct emails are counted exactly BELOW
+    * `cfg.resolvedDistinctStateCap` and saturate AT it (the bounded
+    * k-min counter; 0 opts back into unbounded exact collect_set), so
+    * every gate decides identically to the batch twin at the
+    * threshold boundary, and the emitted count agrees with it for any
+    * key under the cap. `onAlerts` receives each finalized batch's
+    * alert rows.
     *
     * `statePath`, when set, makes the suppression gate RESTART-SAFE:
     * the (key → lastTs, lastCount) map is snapshotted to parquet
     * after every batch that changes it and restored when a new query
     * is built over the same path — matching the reference, where
     * AlertSuppressorCount's per-key Beam state is durable in Dataflow
-    * and keeps suppressing across worker restarts. Without a
-    * statePath the map is query-scoped (decisions reset on restart,
-    * WEAKER than the reference — use a statePath in production). */
+    * and keeps suppressing across worker restarts. Delivery is
+    * at-least-once: a batch's decisions commit, in memory and to the
+    * snapshot, only after `onAlerts` returns, so a batch that fails
+    * in between is replayed from the checkpoint against the state it
+    * started from and re-emits. Without a statePath the map is
+    * query-scoped (decisions reset on restart, WEAKER than the
+    * reference — use a statePath in production). */
   def enumerationAlertStream(lines: Dataset[String],
       cfg: FullConfig = FullConfig(),
       watermarkDelay: String = "30 seconds",
       statePath: Option[String] = None)(onAlerts: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.streaming.OutputMode
-    require(cfg.resolvedDistinctStateCap == 0 ||
-      cfg.resolvedDistinctStateCap >= cfg.enumerationThreshold,
-      s"distinctStateCap=${cfg.resolvedDistinctStateCap} below " +
-        s"enumerationThreshold=${cfg.enumerationThreshold}: a saturated " +
-        "count could no longer decide the gate")
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    val distinct = distinctCount(cfg, cfg.enumerationThreshold,
+      "enumerationThreshold")
     // AlertSuppressorCount(600) state (ref
     // CustomsAccountEnumeration.java:153): one (lastTs, lastCount)
     // pair per source that has ALERTED — bounded by the alert volume,
@@ -470,97 +447,39 @@ object CustomsPipeline {
     // rows: alerts are already thresholded window aggregates (a
     // handful per batch by design), the same documented
     // bounded-summary class as budgetSelect's boundary row.
-    val suppressState =
-      scala.collection.mutable.Map[String, (Long, Long)]()
-    statePath.foreach { p =>
-      // heal-then-read through the path's Hadoop FS (hdfs/s3a/local
-      // alike) with the declared schema — an absent or half-swapped
-      // snapshot restores as empty, never as a construction failure
+    // heal-then-read through the path's Hadoop FS (hdfs/s3a/local
+    // alike) with the declared schema — an absent or half-swapped
+    // snapshot restores as empty, never as a construction failure
+    val restored = statePath.fold(Map.empty[String, (Long, Long)]) { p =>
       graft.sinks.Sinks.readSnapshotOr(lines.sparkSession, p,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("last_ts_ms",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("last_count",
-              org.apache.spark.sql.types.LongType))))
-        .collect().foreach { r =>
-          suppressState(r.getAs[String]("key")) =
-            (r.getAs[Long]("last_ts_ms"), r.getAs[Long]("last_count"))
-        }
+          StructType(Seq(StructField("key", StringType),
+            StructField("last_ts_ms", LongType),
+            StructField("last_count", LongType))))
+        .collect().map(r => r.getAs[String]("key") ->
+          (r.getAs[Long]("last_ts_ms"), r.getAs[Long]("last_count"))).toMap
     }
+    // (suppression map, prune clock). The prune clock: append mode
+    // finalizes a window only once the watermark passes its END, so
+    // every future alert's latest-event stamp sits past (max finalized
+    // window start) — an entry more than `expiry` older than that can
+    // only ever hit the emit-regardless expiry path and is
+    // decision-irrelevant
+    val committed = new java.util.concurrent.atomic.AtomicReference(
+      (restored, Long.MinValue))
     val expiryMs = 600000L
-    // prune clock: append mode finalizes a window only once the
-    // watermark passes its END, so every future alert's latest-event
-    // stamp sits past (max finalized window start) — an entry more
-    // than `expiry` older than that can only ever hit the
-    // emit-regardless expiry path and is decision-irrelevant
-    var maxWindowStartMs = Long.MinValue
     val parsedAll = Parser.parse(lines.filter(
       Parser.fastFilter("fxaauth") || Parser.fastFilter("fxacontent"))).toDF()
-    val auth = parsedAll.filter(col("payloadType") === "fxaauth")
-      .select(col("timestamp"),
-        col("normalized.sourceAddress").as("src"),
-        element_at(col("fields"), "email").as("email"),
-        element_at(col("fields"), "path").as("path"),
-        (element_at(col("fields"), "event_summary").isin(
-          "accountStatusCheckSuccess", "accountStatusCheckBlocked"))
-          .as("is_sc"),
-        lit(false).as("is_content"))
-    val content = parsedAll.filter(col("payloadType") === "fxacontent")
-      .select(col("timestamp"),
-        col("normalized.sourceAddress").as("src"),
-        lit(null).cast("string").as("email"),
-        lit(null).cast("string").as("path"),
-        lit(false).as("is_sc"),
-        lit(true).as("is_content"))
-    val perSrc = auth.unionByName(content)
-      .filter(col("src").isNotNull)
-      .withWatermark("timestamp", watermarkDelay)
-      .groupBy(window(col("timestamp"), cfg.window), col("src"))
-      .agg(
-        count(when(col("is_sc"), 1)).as("n_checks"),
-        // the single-endpoint gate only asks whether distinct paths
-        // == 1, which min == max answers EXACTLY in constant state
-        // (countDistinct(path) = 1 iff >= 1 non-null path and
-        // min == max) — no sketch tolerance at the sharpest gate
-        (count(col("path")) > 0 &&
-          min(col("path")) === max(col("path")))
-          .as("single_path"),
-        // EXACT distinct emails, not HLL++: the alert count feeds the
-        // emit-on-count-change suppressor and the >= threshold gate,
-        // both of which must agree with the batch twin at the
-        // boundary. State per (window, src) is the distinct-email
-        // set — the enumeration being measured, which is also
-        // attacker-controlled fan-out: cfg.distinctStateCap bounds it
-        // (exact below the cap, saturating at it)
-        distinctCount(when(col("is_sc"), col("email")),
-          cfg.resolvedDistinctStateCap).as("n_emails"),
-        max(when(col("is_content"), 1).otherwise(0)).as("has_content"),
-        // the reference's alert stamp: latest qualifying status-check
-        // event (CustomsAccountEnumeration.java:138) — the suppression
-        // clock, NOT the window boundary
-        unix_millis(max(when(col("is_sc"), col("timestamp"))))
-          .as("latest_ts_ms"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("src"), col("n_checks"), col("single_path"), col("n_emails"),
-        col("has_content"), col("latest_ts_ms"))
+    val perSrc = CustomsDetectors.enumerationPerSource(
+      enumerationEvents(
+          fxaFields(parsedAll.filter(col("payloadType") === "fxaauth")),
+          parsedAll)
+        .withWatermark("ts", watermarkDelay),
+      cfg.window, distinct)
     perSrc.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF()
-        // the reference's side-input size gate: a window below the
-        // variance-client floor produces no alerts at all
-        val qualifying = b.filter(col("has_content") === 1)
-          .groupBy(col("window_start_ms"))
-          .agg(countDistinct(col("src")).as("n_clients"))
-          .filter(col("n_clients") >= cfg.minVarianceClients)
-          .select(col("window_start_ms"))
-        val alerts = alert(
-          b.filter(col("has_content") === 0 &&
-              col("n_checks") >= cfg.enumerationThreshold &&
-              col("single_path") &&
-              col("n_emails") >= cfg.enumerationThreshold)
-            .join(broadcast(qualifying), Seq("window_start_ms"), "left_semi"),
+        val alerts = alert(CustomsDetectors.enumerationGate(
+            cfg.enumerationThreshold, Some(cfg.minVarianceClients))(b),
           "account_enumeration", "sourceaddress", col("src"),
           col("n_emails"), col("latest_ts_ms"))
         // count-aware suppression, same decisions as the batch twin's
@@ -569,47 +488,40 @@ object CustomsPipeline {
         // The clock is the alert's latest-qualifying-event stamp
         // (alert_ts_ms carries it, exactly like the batch twin)
         val rows = alerts.collect()
-        val wstarts = batch.toDF().agg(max(col("window_start_ms")))
-          .collect().headOption.flatMap(r =>
-            if (r.isNullAt(0)) None else Some(r.getLong(0)))
-        val (survivors, changed) = suppressState.synchronized {
-          val before = suppressState.size
-          val kept = rows.sortBy(r => (r.getAs[String]("key"),
-              r.getAs[Long]("alert_ts_ms"),
-              r.getAs[Long]("count")))
-            .filter { r =>
-              val (k, t, c) = (r.getAs[String]("key"),
-                r.getAs[Long]("alert_ts_ms"), r.getAs[Long]("count"))
-              val emit = suppressState.get(k) match {
-                case None => true
-                case Some((st, sc)) => t - st > expiryMs || sc != c
-              }
-              if (emit) suppressState(k) = (t, c)
-              emit
-            }
-          // prune decision-irrelevant entries (see clock note above)
-          wstarts.foreach { w => maxWindowStartMs = math.max(maxWindowStartMs, w) }
-          if (maxWindowStartMs != Long.MinValue)
-            suppressState.filterInPlace((_, v) =>
-              maxWindowStartMs - v._1 < expiryMs)
-          (kept, kept.nonEmpty || suppressState.size != before)
-        }
+        val (state, maxWindowStartMs) = committed.get()
+        var next = state
+        val survivors = rows.sortBy(r => (r.getAs[String]("key"),
+            r.getAs[Long]("alert_ts_ms"), r.getAs[Long]("count")))
+          .filter { r =>
+            val (k, t, c) = (r.getAs[String]("key"),
+              r.getAs[Long]("alert_ts_ms"), r.getAs[Long]("count"))
+            val emit = next.get(k).forall { case (st, sc) =>
+              t - st > expiryMs || sc != c }
+            if (emit) next += k -> ((t, c))
+            emit
+          }
+        // prune decision-irrelevant entries (see clock note above)
+        val maxWs = Option(b.agg(max(col("window_start_ms"))).head()
+            .getAs[java.lang.Long](0))
+          .fold(maxWindowStartMs)(w => math.max(w, maxWindowStartMs))
+        if (maxWs != Long.MinValue)
+          next = next.filter { case (_, (t, _)) => maxWs - t < expiryMs }
+        onAlerts(b.sparkSession.createDataFrame(
+          b.sparkSession.sparkContext.parallelize(survivors.toSeq, 1),
+          alerts.schema))
+        committed.set((next, maxWs))
         statePath.foreach { p =>
-          if (changed) {
-            val snap = suppressState.synchronized(suppressState.toSeq)
+          if (next != state) {
             val ss = b.sparkSession
             import ss.implicits._
             // two-rename swap: a crash mid-overwrite must not lose the
             // whole suppression state (Sinks.atomicSnapshotSwap heals
             // its own window on the next write or restore)
             graft.sinks.Sinks.atomicSnapshotSwap(
-              snap.map { case (k, (t, c)) => (k, t, c) }
+              next.toSeq.map { case (k, (t, c)) => (k, t, c) }
                 .toDF("key", "last_ts_ms", "last_count"), p)
           }
         }
-        onAlerts(b.sparkSession.createDataFrame(
-          b.sparkSession.sparkContext.parallelize(survivors.toSeq, 1),
-          alerts.schema))
       }
   }
 

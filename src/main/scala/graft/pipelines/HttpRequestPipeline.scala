@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.filter.EventFilter
 import graft.operators.{Heuristics, Sessionize}
@@ -18,8 +18,8 @@ import graft.parse.Parser
   * it (the reference's InputCollectionCache, §4 "Caching"); each
   * heuristic is one hash-aggregate over the SAME window+key grouping,
   * so at 100 TB the dominant cost is one scan + one shuffle per
-  * distinct grouping, and the NAT suppression is a broadcast
-  * left-anti join on the already-aggregated (tiny) side.
+  * distinct grouping, and the NAT suppression is a row predicate on
+  * the already-aggregated per-client rows.
   */
 object HttpRequestPipeline {
 
@@ -87,16 +87,43 @@ object HttpRequestPipeline {
   /** The one HTTP alert-row projection, shared by the batch and
     * streaming forms: (summary, category, subcategory, severity,
     * sourceaddress, count, window_start_ms). */
-  private def alert(df: DataFrame, subcategory: String, severity: String,
-      countCol: String): DataFrame =
+  private def alert(df: DataFrame, subcategory: Column, severity: String,
+      count: Column): DataFrame =
     df.select(
-      lit(s"${subcategory}_exceeded").as("summary"),
+      concat(subcategory, lit("_exceeded")).as("summary"),
       lit("httprequest").as("category"),
-      lit(subcategory).as("subcategory"),
+      subcategory.as("subcategory"),
       lit(severity).as("severity"),
       col("key").as("sourceaddress"),
-      col(countCol).cast("long").as("count"),
+      count.cast("long").as("count"),
       col("window_start_ms"))
+
+  /** The event columns the windowed HTTP heuristics read. */
+  private def slim(parsed: DataFrame): DataFrame =
+    parsed.select(col("timestamp"),
+      col("normalized.sourceAddress").as("src"),
+      col("normalized.userAgent").as("ua"),
+      col("normalized.requestStatus").as("status"))
+
+  private def perClient(events: DataFrame, cfg: Config,
+      distinct: Column => Column): DataFrame =
+    Heuristics.perClient(events, col("timestamp"), col("src"), col("ua"),
+      col("status"), cfg.window, distinct)
+
+  /** Hard-limit + error-rate alert rows over per-client rows. */
+  private def rateAlerts(perClient: DataFrame, cfg: Config): DataFrame =
+    alert(Heuristics.rateGate(cfg.hardLimit, cfg.errorMaxCount,
+        notGateway(cfg))(perClient),
+      col("subcategory"), "warn", col("count"))
+
+  /** Threshold alert rows over finalized per-client rows. */
+  private def thresholdAlerts(perClient: DataFrame, cfg: Config): DataFrame =
+    alert(Heuristics.thresholdGate(cfg.thresholdModifier)(perClient)
+        .filter(notGateway(cfg)),
+      lit("threshold"), "warn", col("n"))
+
+  private def notGateway(cfg: Config): Column =
+    Heuristics.notGateway(cfg.natMinDistinctUserAgents, cfg.knownGateways)
 
   /** Full batch analysis: raw lines → unioned alert frame.
     *
@@ -112,91 +139,31 @@ object HttpRequestPipeline {
     * longer fits. */
   def analyze(lines: Dataset[String], cfg: Config = Config(),
       cacheParsed: Boolean = true): DataFrame = {
-    val parsed0 = parsedHttp(lines)
     // Optimization r17 (guide §2.3 "project before the exchange",
     // §2.4 "share one exchange"): the four windowed heuristics + the
-    // NAT view all group by the SAME (1-window, sourceAddress) key
-    // and consume only four scalar columns — so (a) the cached frame
-    // carries exactly those columns instead of full Event rows
-    // (raw line + two maps + nested struct: the old cache serialized
-    // the whole envelope five consumers never read), and (b) ONE
-    // fused per-(window, key) aggregate replaces the four separate
-    // aggregations of the same rows (hard-limit n, error-rate 4xx
-    // count, NAT distinct-UA cardinality ride one shuffle; the
-    // threshold mean is an aggregate OVER the per-key frame, as
-    // before). Branch-for-branch equivalence with the former
-    // Heuristics.* calls: same window expression, same grouping, and
-    // the per-branch filters reproduce each heuristic's row set —
-    // count(when(4xx)) differs from the old filter-then-count only on
-    // keys with zero errors, which `errors > errorMaxCount` (>= 0)
-    // excludes exactly as the old filter did. q80's oracle hash is
-    // the proof.
-    val slim0 = parsed0.select(col("timestamp"),
-      col("normalized.sourceAddress").as("__src"),
-      col("normalized.userAgent").as("__ua"),
-      col("normalized.requestStatus").as("__status"))
-    val slim = if (cacheParsed) slim0.cache() else slim0
-    val ts = col("timestamp")
-    val src = col("__src")
-
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val perKey0 = slim
-      .groupBy(unix_millis(window(ts, cfg.window).getField("start"))
-          .as("window_start_ms"),
-        src.as("key"))
-      .agg(count(lit(1)).as("n"),
-        count(when(col("__status").between(400, 499), 1)).as("errors"),
-        countDistinct(col("__ua")).as("n_ua"))
-    // five consumers (NAT view, hard, threshold per-key + per-window
-    // mean, error rate) — cached so the fused aggregation runs once;
-    // bounded by |windows x active keys|, the same class as the old
-    // per-heuristic aggregate outputs
+    // NAT signal all group by the SAME (window, client) key and
+    // consume only four scalar columns — so (a) the cached frame
+    // carries exactly those columns instead of full Event rows, and
+    // (b) ONE per-client aggregate (Heuristics.perClient: request
+    // count, 4xx count and distinct-UA cardinality ride one shuffle)
+    // feeds every decision; the threshold mean is an aggregate OVER
+    // it. The streaming forms run the same aggregate and gates.
+    val slim0 = slim(parsedHttp(lines))
+    val events = if (cacheParsed) slim0.cache() else slim0
+    val perKey0 = perClient(events, cfg, countDistinct(_))
+    // four consumers (hard + error rate, threshold per-key + per-window
+    // mean) — cached so the aggregation runs once; bounded by
+    // |windows x active keys|
     val perKey = if (cacheParsed) perKey0.cache() else perKey0
 
-    // NAT view: sources carrying many distinct user agents in the
-    // window are gateways; the reference's natView suppresses BOTH
-    // threshold and hard-limit alerts (ThresholdAnalysis +
-    // HardLimitAnalysis.java:88-128 each take the view). Known
-    // gateways (ref DetectNat.withKnownGateways) suppress on the key
-    // alone, in every window.
-    val nat = perKey.filter(col("n_ua") >= cfg.natMinDistinctUserAgents)
-      .select(col("window_start_ms"), col("key"))
-    def natGate(df: DataFrame): DataFrame = {
-      val windowed = df.join(broadcast(nat),
-        Seq("window_start_ms", "key"), "left_anti")
-      if (cfg.knownGateways.isEmpty) windowed
-      else windowed.join(broadcast(cfg.knownGateways.toDF("key")),
-        Seq("key"), "left_anti")
-    }
-
-    val hard = alert(
-      natGate(perKey.filter(col("n") > cfg.hardLimit)
-        .select(col("window_start_ms"), col("key"), col("n"))),
-      "hard_limit", "warn", "n")
-
-    val perWindow = perKey.groupBy(col("window_start_ms"))
-      .agg(avg(col("n")).as("mean_n"))
-    val threshold = alert(
-      natGate(perKey.join(broadcast(perWindow), Seq("window_start_ms"))
-        .filter(col("n") >= col("mean_n") * cfg.thresholdModifier &&
-          col("n") >= 1)
-        .select(col("window_start_ms"), col("key"), col("n"),
-          col("mean_n"))),
-      "threshold", "warn", "n")
-
-    val errors = alert(
-      perKey.filter(col("errors") > cfg.errorMaxCount)
-        .select(col("window_start_ms"), col("key"), col("errors")),
-      "error_rate", "warn", "errors")
-
     val sessions = alert(
-      Sessionize.sessionLimit(slim, ts, src, cfg.sessionGapSeconds,
-          cfg.maxSessionEvents)
+      Sessionize.sessionLimit(events, col("timestamp"), col("src"),
+          cfg.sessionGapSeconds, cfg.maxSessionEvents)
         .withColumn("window_start_ms", lit(null).cast("long")),
-      "session_limit", "critical", "max_session_events")
+      lit("session_limit"), "critical", col("max_session_events"))
 
-    hard.unionByName(threshold).unionByName(errors).unionByName(sessions)
+    rateAlerts(perKey, cfg).unionByName(thresholdAlerts(perKey, cfg))
+      .unionByName(sessions)
   }
 
   /** Endpoint-abuse alerts in the reference's FULL composition (ref
@@ -345,37 +312,39 @@ object HttpRequestPipeline {
 
   /** Streaming form of the hard-limit branch: unbounded lines →
     * mapPartitions parse (narrow, streaming-safe) → compiled filter →
-    * watermarked event-time window → alert rows. Run in update mode
-    * for early firings (the reference's accumulating panes) and attach
-    * sinks via Sinks.streamTo / foreachBatch. */
+    * [[Heuristics.hardLimit]] on the watermarked events → alert rows.
+    * Run in update mode for early firings (the reference's
+    * accumulating panes) and attach sinks via Sinks.streamTo /
+    * foreachBatch. */
   def analyzeStream(lines: Dataset[String], cfg: Config = Config(),
-      watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = parsedHttp(lines) // watermark applied by windowedHardLimit
-    alert(graft.streaming.Streaming.windowedHardLimit(parsed, "timestamp",
-        col("normalized.sourceAddress"), cfg.window, watermarkDelay,
-        cfg.hardLimit), "hard_limit", "warn", "n")
-  }
+      watermarkDelay: String = "30 seconds"): DataFrame =
+    alert(Heuristics.hardLimit(
+        parsedHttp(lines).withWatermark("timestamp", watermarkDelay),
+        col("timestamp"), col("normalized.sourceAddress"), cfg.window,
+        cfg.hardLimit),
+      lit("hard_limit"), "warn", col("n"))
 
   /** The composed production shape as ONE streaming query (ref
     * HTTPRequest.java:818-889 expandInputMap: per-resource input →
     * analyses + cfgtick processor → flatten): raw multiplexed lines →
-    * parse → a SINGLE windowed aggregate per (window, client) carrying
-    * the request count, 4xx count and distinct-UA cardinality →
-    * hard-limit and error-rate alerts, unioned with config-tick
-    * alerts parsed from the same stream (ref CfgTickProcessor — ticks
-    * ride the input).
+    * parse → the batch form's per-client aggregate
+    * ([[Heuristics.perClient]], per (window, client): request count,
+    * 4xx count, distinct-UA cardinality) → [[Heuristics.rateGate]]'s
+    * hard-limit and error-rate alerts, unioned with config-tick alerts
+    * parsed from the same stream (ref CfgTickProcessor — ticks ride
+    * the input).
     *
     * NAT gating follows the reference exactly: HardLimitAnalysis
     * consumes the DetectNat view and skips emission for flagged
     * sources (HardLimitAnalysis.java:88-128) and for configured known
     * gateways; ErrorRateAnalysis takes no NAT view. The NAT signal
-    * rides the same aggregate as the counts
-    * (`size(collect_set(ua))` — exact, and one state store instead of
-    * a second aggregation + stream-stream join), so adding it costs
-    * no extra shuffle. Append mode: a window's alerts emit once the
-    * watermark passes its end; later-than-watermark events are
-    * dropped, the streaming twin of the reference's
-    * `withAllowedLateness(ZERO)`.
+    * rides the same aggregate as the counts — HLL++
+    * (`approx_count_distinct(ua, 0.01)`), not a set: it only needs to
+    * clear a single-digit threshold, where the sparse sketch is exact,
+    * and the per-key state stays bounded however many agents a proxy
+    * fans out. Append mode: a window's alerts emit once the watermark
+    * passes its end; later-than-watermark events are dropped, the
+    * streaming twin of the reference's `withAllowedLateness(ZERO)`.
     *
     * Session limits ride this SAME query as a third stateful branch
     * (a `session_window` aggregate unioned with the time-window
@@ -392,32 +361,10 @@ object HttpRequestPipeline {
     * (HTTPRequest.java:182-385). */
   def analyzeStreamFull(lines: Dataset[String], cfg: Config = Config(),
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
     val parsed = parsedHttp(lines)
-    val perClient = parsed
-      .withWatermark("timestamp", watermarkDelay)
-      .groupBy(window(col("timestamp"), cfg.window),
-        col("normalized.sourceAddress").as("key"))
-      .agg(
-        count(lit(1)).as("n"),
-        count(when(col("normalized.requestStatus").between(400, 499), 1))
-          .as("errors"),
-        // HLL++, not collect_set: the NAT signal only needs to clear
-        // a single-digit threshold, where the sparse sketch is exact,
-        // and the per-key state stays bounded no matter how many
-        // distinct agents a proxy fans out
-        approx_count_distinct(col("normalized.userAgent"), 0.01)
-          .as("n_ua"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("key"), col("n"), col("errors"), col("n_ua"))
-    val natFlag = col("n_ua") >= cfg.natMinDistinctUserAgents ||
-      (if (cfg.knownGateways.isEmpty) lit(false)
-       else col("key").isin(cfg.knownGateways: _*))
-    val hard = alert(perClient.filter(col("n") > cfg.hardLimit && !natFlag),
-      "hard_limit", "warn", "n")
-    val errors = alert(perClient.filter(col("errors") > cfg.errorMaxCount),
-      "error_rate", "warn", "errors")
+    val rates = rateAlerts(perClient(
+      slim(parsed).withWatermark("timestamp", watermarkDelay), cfg,
+      approx_count_distinct(_, 0.01)), cfg)
     // session-limit branch: its own keyed session_window state over
     // the same parsed stream; a session emits once the watermark
     // passes its gap (final pane), mirroring the batch
@@ -430,7 +377,7 @@ object HttpRequestPipeline {
       .agg(count(lit(1)).as("n_events"))
       .filter(col("n_events") >= cfg.maxSessionEvents)
       .withColumn("window_start_ms", lit(null).cast("long")),
-      "session_limit", "critical", "n_events")
+      lit("session_limit"), "critical", col("n_events"))
     // second branch over the same source: the cfgtick fast-keyword
     // pushdown prunes non-tick lines before this branch's parse, so
     // the double scan costs one substring probe per line, not two
@@ -446,45 +393,25 @@ object HttpRequestPipeline {
         lit(null).cast("string").as("sourceaddress"),
         lit(null).cast("long").as("count"),
         lit(null).cast("long").as("window_start_ms"))
-    hard.unionByName(errors).unionByName(sessions).unionByName(ticks)
+    rates.unionByName(sessions).unionByName(ticks)
   }
 
   /** The threshold branch of the streaming fan-out, NAT-gated like
     * the batch form (ThresholdAnalysis consumes the DetectNat view):
-    * ONE stateful aggregate carries the per-(window, client) count
-    * AND the distinct-UA NAT signal; when the watermark finalizes a
-    * window, every key of that window lands in the same micro-batch,
-    * so the global per-window mean, the threshold compare, and the
-    * NAT suppression run as a plain batch join inside foreachBatch
-    * (see [[graft.streaming.Streaming.thresholdStream]] for why a
-    * chained agg→agg formulation silently drops the finalized rows).
-    * `onAlerts` receives alert rows in the [[analyze]] schema. Start
-    * this alongside [[analyzeStreamFull]] over the same lines for
-    * the full per-resource fan-out. */
+    * the batch form's per-client aggregate runs as ONE stateful
+    * append-mode aggregate, and [[Heuristics.thresholdGate]] plus the
+    * NAT predicate run in its foreachBatch epilogue, where each
+    * finalized window arrives whole. `onAlerts` receives alert rows in
+    * the [[analyze]] schema. Start this alongside [[analyzeStreamFull]]
+    * over the same lines for the full per-resource fan-out. */
   def thresholdAlertStream(lines: Dataset[String], cfg: Config = Config(),
       watermarkDelay: String = "30 seconds")(onAlerts: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.streaming.OutputMode
-    val perClient = parsedHttp(lines)
-      .withWatermark("timestamp", watermarkDelay)
-      .groupBy(window(col("timestamp"), cfg.window),
-        col("normalized.sourceAddress").as("key"))
-      .agg(count(lit(1)).as("n"),
-        approx_count_distinct(col("normalized.userAgent"), 0.01)
-          .as("n_ua"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("key"), col("n"), col("n_ua"))
-    perClient.writeStream.outputMode(OutputMode.Append())
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    perClient(slim(parsedHttp(lines)).withWatermark("timestamp", watermarkDelay),
+        cfg, approx_count_distinct(_, 0.01))
+      .writeStream
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        val mean = b.groupBy(col("window_start_ms"))
-          .agg(avg(col("n")).as("mean_n"))
-        val natFlag = col("n_ua") >= cfg.natMinDistinctUserAgents ||
-          (if (cfg.knownGateways.isEmpty) lit(false)
-           else col("key").isin(cfg.knownGateways: _*))
-        onAlerts(alert(b.join(broadcast(mean), Seq("window_start_ms"))
-          .filter(col("n") >= col("mean_n") * cfg.thresholdModifier &&
-            !natFlag), "threshold", "warn", "n"))
+        onAlerts(thresholdAlerts(batch.toDF(), cfg))
       }
-  }
 }

@@ -13,7 +13,11 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode,
   * output modes:
   *
   *  - fixed windows + watermark ↔ ref fixed windows w/ lateness 0
-  *    (s/httprequest/HTTPRequest.java:82-89, :162)
+  *    (s/httprequest/HTTPRequest.java:82-89, :162): the windowed
+  *    detectors have no streaming copy here — their batch builders
+  *    (`Heuristics.windowedAgg` and its callers) run unchanged on a
+  *    watermarked frame, and their finalized-window gates run in the
+  *    pipelines' foreachBatch epilogues
   *  - session_window ↔ ref 45-min-gap sessions (:151-163); the
   *    reference's accumulating early-fired panes map to update mode +
   *    downstream suppression (SURVEY.md §2.4 design note)
@@ -28,49 +32,6 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode,
   * expiry timer.
   */
 object Streaming {
-
-  /** Hard-limit heuristic, streaming form: tumbling event-time window
-    * + watermark; run in update mode for early firings. */
-  def windowedHardLimit(df: DataFrame, tsName: String, key: Column,
-      duration: String, watermarkDelay: String, limit: Long): DataFrame =
-    df.withWatermark(tsName, watermarkDelay)
-      .groupBy(window(col(tsName), duration), key.as("key"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > limit)
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("key"), col("n"))
-
-  /** Threshold heuristic, streaming (SURVEY.md §2.5 design note (b) —
-    * the reference's per-window singleton side input): windowed
-    * per-key counts run as ONE stateful aggregate in append mode;
-    * when the watermark crosses a window, ALL of that window's keys
-    * finalize in the same micro-batch, so the per-window mean and the
-    * threshold comparison are a plain batch aggregation+join inside
-    * foreachBatch. (A chained agg→agg→stream-join formulation is
-    * accepted by Spark 4 but the join treats the agg outputs — whose
-    * event time lags the watermark by construction — as late rows and
-    * drops them; the foreachBatch form is both correct and cheaper:
-    * one state store instead of three.)
-    * Returns a DataStreamWriter; `onBatch` receives finalized alert
-    * rows (window_start_ms, key, n, mean_n). */
-  def thresholdStream(df: DataFrame, tsName: String, key: Column,
-      duration: String, watermarkDelay: String, modifier: Double)(
-      onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val perKey = df.withWatermark(tsName, watermarkDelay)
-      .groupBy(window(col(tsName), duration), key.as("key"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("key"), col("n"))
-    perKey.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        val mean = b.groupBy(col("window_start_ms"))
-          .agg(avg(col("n")).as("mean_n"))
-        onBatch(b.join(broadcast(mean), Seq("window_start_ms"))
-          .filter(col("n") >= col("mean_n") * modifier))
-      }
-  }
 
   /** Gap-based session summary, streaming form (native session_window
     * keyed state). Append mode emits a session only once its gap has

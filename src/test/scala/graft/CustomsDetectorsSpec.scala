@@ -317,12 +317,12 @@ class CustomsDetectorsSpec extends AnyFunSuite {
     // variance view contains 6.6.6.6 (it browsed the content server)
     // with enough distinct clients → suppressed
     val varianceHit = Seq("6.6.6.6", "8.8.8.8", "9.9.9.9")
-      .map(a => (t * 1000 - (t * 1000) % 600000, a))
-      .toDF("window_start_ms", "src")
+      .map(a => (new java.sql.Timestamp(t * 1000), a))
+      .toDF("ts", "src")
     val gated = CustomsDetectors.accountEnumeration(fxa,
       col("timestamp"), col("src"), col("email"), col("path"),
       col("is_sc"), "10 minutes", threshold = 5,
-      variance = Some(varianceHit), minVarianceClients = 3).collect()
+      content = Some(varianceHit), minVarianceClients = 3).collect()
     assert(gated.isEmpty)
 
     // same view but below the min-client floor → nobody alerts either
@@ -330,7 +330,7 @@ class CustomsDetectorsSpec extends AnyFunSuite {
     val thin = CustomsDetectors.accountEnumeration(fxa,
       col("timestamp"), col("src"), col("email"), col("path"),
       col("is_sc"), "10 minutes", threshold = 5,
-      variance = Some(varianceHit), minVarianceClients = 99).collect()
+      content = Some(varianceHit), minVarianceClients = 99).collect()
     assert(thin.isEmpty)
   }
 

@@ -907,15 +907,15 @@ class FixtureReplaySpec extends AnyFunSuite {
       "customs_contentserver.txt")).toDF().cache()
     val fxa = parsedFxa(lines("customs_account_status_abuse1.txt"))
       .withColumn("path", element_at(col("fields"), "path"))
-    val variance = CustomsDetectors.contentServerVariance(
-      all.filter(col("payloadType") === "fxacontent"),
-      col("timestamp"), col("normalized.sourceAddress"), "10 minutes")
+    val variance = all.filter(col("payloadType") === "fxacontent")
+      .select(col("timestamp").as("ts"),
+        col("normalized.sourceAddress").as("src"))
     val isStatusCheck = col("summary").isin(
       "accountStatusCheckSuccess", "accountStatusCheckBlocked")
     val gated = CustomsDetectors.accountEnumeration(fxa, col("timestamp"),
       col("src"), col("email"), col("path"), isStatusCheck,
       "10 minutes", threshold = 3,
-      variance = Some(variance), minVarianceClients = 3)
+      content = Some(variance), minVarianceClients = 3)
     val ungated = CustomsDetectors.accountEnumeration(fxa, col("timestamp"),
       col("src"), col("email"), col("path"), isStatusCheck,
       "10 minutes", threshold = 3).collect()
@@ -1480,15 +1480,15 @@ class FixtureReplaySpec extends AnyFunSuite {
       val fxa = parsedFxa(lines("customs_account_status_abuse1.txt",
           "customs_account_status_abuse2.txt"))
         .withColumn("path", element_at(col("fields"), "path"))
-      val variance = CustomsDetectors.contentServerVariance(
-        all.filter(col("payloadType") === "fxacontent"),
-        col("timestamp"), col("normalized.sourceAddress"), "10 minutes")
+      val variance = all.filter(col("payloadType") === "fxacontent")
+        .select(col("timestamp").as("ts"),
+          col("normalized.sourceAddress").as("src"))
       val isStatusCheck = col("summary").isin(
         "accountStatusCheckSuccess", "accountStatusCheckBlocked")
       val gated = CustomsDetectors.accountEnumeration(fxa, col("timestamp"),
         col("src"), col("email"), col("path"), isStatusCheck,
         "10 minutes", threshold = 3,
-        variance = Some(variance), minVarianceClients = 3).collect()
+        content = Some(variance), minVarianceClients = 3).collect()
       // window 1: organic content traffic exists for 10.0.0.2/10.0.0.3
       // but NOT 10.0.0.1 -> only 10.0.0.1 alerts. window 2: the
       // variance view has fewer than 3 distinct clients, so the whole

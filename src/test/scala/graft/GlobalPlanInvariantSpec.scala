@@ -17,12 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * properties (exchange payloads, broadcast directions, no-Window);
   * this spec is the fleet-wide floor. */
 class GlobalPlanInvariantSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-  private val sf = "/root/testdata/sf0.001"
-
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name plans without a CartesianProduct") {
-      val p = fn(spark, sf).queryExecution.executedPlan.toString
+      val p = SparkTestSession.frame(name).queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct"),
         s"$name planned a cartesian join:\n$p")
     }

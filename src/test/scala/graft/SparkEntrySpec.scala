@@ -12,6 +12,17 @@ object SparkTestSession {
     s
   }
 
+  private val frames =
+    scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+
+  /** The named query's frame at sf0.001, built once per test JVM: the
+    * per-query run test and the plan invariant both read it, so the
+    * driver-side frame build (eager jobs included) runs once. */
+  def frame(name: String): org.apache.spark.sql.DataFrame = synchronized {
+    frames.getOrElseUpdate(name,
+      SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
+  }
+
   private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
 
   /** Runs `body` on the RocksDB state store (transformWithState needs
@@ -62,7 +73,7 @@ class SparkEntrySpec extends AnyFunSuite {
 
   for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name runs non-empty at sf0.001") {
-      assert(SparkEntry.queries(name)(spark, sf).count() > 0)
+      assert(SparkTestSession.frame(name).count() > 0)
     }
   }
 

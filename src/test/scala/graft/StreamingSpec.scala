@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Heuristics
 import graft.streaming.Streaming
 
 class StreamingSpec extends AnyFunSuite {
@@ -600,8 +601,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
     val df = in.toDS().toDF("ts", "k")
-    val q = Streaming.windowedHardLimit(df, "ts", col("k"),
-        "1 minute", "0 seconds", limit = 2)
+    val q = Heuristics.hardLimit(df.withWatermark("ts", "0 seconds"),
+        col("ts"), col("k"), "1 minute", limit = 2)
       .writeStream.format("memory").queryName("hl")
       .outputMode(OutputMode.Update()).start()
     try {
@@ -818,11 +819,15 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String)]
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
-    val q = Streaming.thresholdStream(in.toDS().toDF("ts", "k"), "ts",
-        col("k"), "1 minute", "0 seconds", modifier = 2.0) { alerts =>
-      buf ++= alerts.select("key", "n", "mean_n")
-        .as[(String, Long, Double)].collect()
-    }.start()
+    val q = Heuristics.windowedAgg(
+        in.toDS().toDF("ts", "k").withWatermark("ts", "0 seconds"),
+        col("ts"), "1 minute", Seq(col("k").as("key")))(count(lit(1)).as("n"))
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        buf ++= Heuristics.thresholdGate(modifier = 2.0)(b.toDF())
+          .select("key", "n", "mean_n").as[(String, Long, Double)].collect()
+        ()
+      }.start()
     try {
       // window [0,60): x=9 events, y=1, z=2 -> mean 4; x >= 8 alerts
       in.addData((1 to 9).map(i => (ts(i), "x")) ++
@@ -1657,6 +1662,114 @@ class StreamingSpec extends AnyFunSuite {
     val run3 = collectAlerts(Seq(burst(2, 6),
       Seq(authLine(t + 7000, "z@x.com"))))
     assert(run3 == Set(((t + 1205) * 1000L, 6L)))
+  }
+
+  test("streaming enumeration is at-least-once: an alert whose delivery " +
+      "failed is re-emitted after a restart from the same checkpoint and " +
+      "state path") {
+    import spark.implicits._
+    import graft.pipelines.CustomsPipeline
+    val cfg = CustomsPipeline.FullConfig(enumerationThreshold = 5,
+      minVarianceClients = 1)
+    val t = 1699999800L // 10-minute-aligned
+    def authLine(tt: Long, email: String): String = {
+      val iso = java.time.Instant.ofEpochSecond(tt).toString
+      s"""{"insertId":"i","jsonPayload":{"EnvVersion":"2.0","Fields":{""" +
+        s""""agent":"m","email":"$email","errno":0,"method":"post",""" +
+        s""""op":"request.summary","path":"/v1/account/status",""" +
+        s""""remoteAddressChain":"[\\"6.6.6.6\\"]","service":"sync",""" +
+        s""""status":200,"t":12,"uid":"u"},"Logger":"fxa-auth-server",""" +
+        s""""Pid":1,"Severity":6,"Timestamp":${tt}000000000,""" +
+        s""""Type":"request.summary"},"timestamp":"$iso"}"""
+    }
+    val contentLine =
+      s"""{"Timestamp":${t}000000000,"Type":"request","Logger":"fxa-content-server",""" +
+        s""""Hostname":"h","Fields":{"clientaddress":"7.7.7.7","path":"/s",""" +
+        s""""method":"get","status":200}}"""
+    // one window of 5 distinct emails (latest t+4) and a pusher that
+    // closes it: the alert finalizes in the batch after the data batch
+    val dir = java.nio.file.Files.createTempDirectory("enumin")
+    java.nio.file.Files.write(dir.resolve("lines.txt"),
+      scala.jdk.CollectionConverters.SeqHasAsJava(
+        (0 until 5).map(i => authLine(t + i, s"e$i@x.com")) ++
+          Seq(contentLine, authLine(t + 5000, "z@x.com"))).asJava)
+    val statePath = "file://" + java.nio.file.Files
+      .createTempDirectory("enumstate").toString + "/gate"
+    val ckpt = java.nio.file.Files.createTempDirectory("enumckpt").toString
+    def start(onAlerts: org.apache.spark.sql.DataFrame => Unit) =
+      CustomsPipeline.enumerationAlertStream(
+          spark.readStream.textFile(dir.toString), cfg,
+          watermarkDelay = "30 seconds", statePath = Some(statePath))(onAlerts)
+        .option("checkpointLocation", ckpt).start()
+    // first run: the sink fails on the batch that carries the alert
+    val q1 = start { df =>
+      if (!df.isEmpty) throw new IllegalStateException("alert sink down")
+    }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q1.processAllAvailable() finally q1.stop()
+    }
+    // restart from the same checkpoint and state path: the failed batch
+    // replays against the state it started from, so the alert arrives
+    val got = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    val q2 = start { df =>
+      val rows = df.select(col("alert_ts_ms"), col("count"))
+        .as[(Long, Long)].collect()
+      got.synchronized { got ++= rows }
+    }
+    try q2.processAllAvailable() finally q2.stop()
+    assert(got.synchronized(got.toSet) == Set(((t + 4) * 1000L, 5L)))
+  }
+
+  test("NAT gate: a client without an address is never a gateway, so " +
+      "with known gateways set the stream keeps its hard-limit and " +
+      "threshold alerts exactly like the batch pipeline") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipelines.HttpRequestPipeline
+    val cfg = HttpRequestPipeline.Config(hardLimit = 5, errorMaxCount = 100,
+      thresholdModifier = 1.5, natMinDistinctUserAgents = 4,
+      maxSessionEvents = 1000, knownGateways = Seq("2.2.2.2"))
+    // a GLB line with a requestUrl but no remoteIp parses to an
+    // HTTP_REQUEST with a null source address
+    def glb(ip: Option[String], t: String) = {
+      val remote = ip.fold("")(a => s""","remoteIp":"$a"""")
+      s"""{"httpRequest":{"requestMethod":"GET","requestUrl":"https://h/x","status":200$remote,"userAgent":"ua"},"timestamp":"$t","logName":"projects/p/logs/l"}"""
+    }
+    // minute 0: 8 address-less requests and 8 from the known gateway
+    // (both over the hard limit and the 1.5 x 4.5 mean), two quiet
+    // clients; minute 3 moves the watermark past minute 0
+    val lines: Seq[String] =
+      (0 until 8).map(i => glb(None, f"2024-01-01T00:00:$i%02dZ")) ++
+      (0 until 8).map(i => glb(Some("2.2.2.2"), f"2024-01-01T00:00:$i%02dZ")) ++
+      Seq(glb(Some("3.3.3.3"), "2024-01-01T00:00:10Z"),
+        glb(Some("4.4.4.4"), "2024-01-01T00:00:10Z"))
+    val pusher = glb(Some("9.9.9.9"), "2024-01-01T00:03:00Z")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("subcategory"), col("sourceaddress"), col("count"))
+        .as[(String, String, Long)].collect().toSet
+    val in = MemoryStream[String]
+    val q = HttpRequestPipeline.analyzeStreamFull(in.toDS(), cfg,
+        watermarkDelay = "30 seconds")
+      .writeStream.format("memory").queryName("natnullkey")
+      .outputMode(OutputMode.Append()).start()
+    val thresholdRows =
+      scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
+    val tq = HttpRequestPipeline.thresholdAlertStream(in.toDS(), cfg,
+        watermarkDelay = "30 seconds") { df =>
+      val r = rows(df); thresholdRows.synchronized { thresholdRows ++= r }
+    }.start()
+    try {
+      Seq(lines, Seq(pusher)).foreach { b =>
+        in.addData(b: _*); q.processAllAvailable(); tq.processAllAvailable()
+      }
+      val streamed = rows(spark.table("natnullkey")
+          .filter(col("subcategory") =!= "cfgtick")) ++
+        thresholdRows.synchronized(thresholdRows.toSet)
+      val batch = rows(HttpRequestPipeline.analyze((lines :+ pusher).toDS(), cfg))
+      assert(batch == Set(("hard_limit", null, 8L), ("threshold", null, 8L)),
+        s"batch $batch")
+      assert(streamed == batch, s"streamed $streamed")
+    } finally { q.stop(); tq.stop() }
   }
 
   test("continuous customs pipeline e2e: summary + distributed failures + " +
