@@ -29,18 +29,14 @@ import org.apache.spark.sql.functions._
   */
 object Heuristics {
 
-  /** Tumbling event-time window start (epoch-aligned), exposed as epoch
-    * millis BIGINT so results are engine-portable (no tz ambiguity). */
-  private def windowStartMs(ts: Column, duration: String): Column =
-    unix_millis(window(ts, duration).getField("start"))
-
   /** The windowed-aggregate shape every detector builder shares: group
     * on the `window(ts, duration)` struct plus `keys`, then project the
-    * struct's start as epoch-millis `window_start_ms`. Grouping on the
-    * window itself is what lets a watermarked stream finalize the
-    * window in append mode; on a static frame the rows equal grouping
-    * on the projected start. Output: window_start_ms, the keys, the
-    * aggregates. */
+    * struct's start (epoch-aligned tumbling window) as epoch-millis
+    * BIGINT `window_start_ms`, engine-portable with no tz ambiguity.
+    * Grouping on the window itself is what lets a watermarked stream
+    * finalize the window in append mode; on a static frame the rows
+    * equal grouping on the projected start. Output: window_start_ms,
+    * the keys, the aggregates. */
   def windowedAgg(df: DataFrame, ts: Column, duration: String,
       keys: Seq[Column])(aggs: Column*): DataFrame = {
     val g = df.groupBy(window(ts, duration) +: keys: _*)
@@ -131,24 +127,19 @@ object Heuristics {
   }
 
   /** Count matching events (e.g. 4xx) per (window, key); alert where
-    * count > maxErrors. */
+    * count > maxErrors — the [[hardLimit]] over the matching events. */
   def errorRate(df: DataFrame, ts: Column, key: Column, isError: Column,
       duration: String, maxErrors: Long): DataFrame =
-    df.filter(isError)
-      .groupBy(windowStartMs(ts, duration).as("window_start_ms"),
-        key.as("key"))
-      .agg(count(lit(1)).as("errors"))
-      .filter(col("errors") > maxErrors)
+    hardLimit(df.filter(isError), ts, key, duration, maxErrors)
+      .withColumnRenamed("n", "errors")
 
   /** Error fraction per (window, key): alert where errors/total >= minRatio
     * and total >= minCount. One aggregate with a conditional count —
     * no second scan, no join. */
   def statusCodeRate(df: DataFrame, ts: Column, key: Column, isError: Column,
       duration: String, minRatio: Double, minCount: Long): DataFrame =
-    df.groupBy(windowStartMs(ts, duration).as("window_start_ms"),
-        key.as("key"))
-      .agg(count(lit(1)).as("total"),
-        count_if(isError).as("errors"))
+    windowedAgg(df, ts, duration, Seq(key.as("key")))(
+        count(lit(1)).as("total"), count_if(isError).as("errors"))
       .withColumn("ratio", col("errors") / col("total"))
       .filter(col("total") >= minCount && col("ratio") >= minRatio)
 
@@ -162,9 +153,7 @@ object Heuristics {
     val card =
       if (approxRsd > 0) approx_count_distinct(attr, approxRsd)
       else countDistinct(attr)
-    df.groupBy(windowStartMs(ts, duration).as("window_start_ms"),
-        key.as("key"))
-      .agg(card.as("n_distinct"))
+    windowedAgg(df, ts, duration, Seq(key.as("key")))(card.as("n_distinct"))
       .filter(col("n_distinct") >= minDistinct)
   }
 
@@ -198,26 +187,46 @@ object Heuristics {
     * (probability ≈ 2⁻⁵⁶ per key) must not divide by zero — Spark
     * non-ANSI would yield NULL where the DuckDB mirror errors.
     *
+    * [[kmvMembers]], [[kmvSketch]] and [[kmvCounts]] also build
+    * [[kmvOverlap]] and the windowed `Streaming.kmvCardinalityStream`.
+    *
     * Output: (key, n_kept, est_distinct) — n_kept = min(k, exact). */
   def kmvDistinct(df: DataFrame, key: Column, value: Column,
-      k: Int = 32): DataFrame = {
+      k: Int = 32): DataFrame =
+    kmvMembers(df, value, key.as("key")).groupBy(col("key"))
+      .agg(kmvSketch(k))
+      .select(col("key") +: kmvCounts(k): _*)
+
+  /** `keys` plus `h`, the fixed-width 56-bit md5 prefix of `value` —
+    * the KMV set members; null values are not set members. */
+  private[graft] def kmvMembers(df: DataFrame, value: Column,
+      keys: Column*): DataFrame =
+    df.select(keys :+ substring(md5(value.cast("string")), 1, 14).as("h"): _*)
+      .filter(col("h").isNotNull)
+
+  /** The bounded k-min sketch aggregate over [[kmvMembers]]' `h`: a
+    * `mins` struct whose `items` are the k smallest distinct hashes in
+    * ascending order. */
+  private[graft] def kmvSketch(k: Int): Column = {
     require(k >= 3 && k <= 64, "k must be in [3, 64]")
-    val num = (k - 1).toLong * 72057594037927936L // (k-1) * 2^56
-    val kmin = udaf(new graft.functions.KMinValuesAggregator(k))
-    df.select(key.as("key"),
-        substring(md5(value.cast("string")), 1, 14).as("h"))
-      .filter(col("h").isNotNull) // null values are not set members
-      .groupBy(col("key"))
-      .agg(kmin(col("h")).as("mins"))
-      .select(col("key"),
-        size(col("mins.items")).cast("long").as("n_kept"),
-        try_element_at(col("mins.items"), lit(k)).as("kth"))
-      .select(col("key"), col("n_kept"),
-        when(col("kth").isNull, col("n_kept"))
-          .otherwise(expr(
-            s"$num DIV greatest(CAST(conv(kth, 16, 10) AS BIGINT), 1L)"))
-          .as("est_distinct"))
+    udaf(new graft.functions.KMinValuesAggregator(k))
+      .apply(col("h")).as("mins")
   }
+
+  /** The KMV estimate over the sorted hash array named `items`: the
+    * exact count below k, else (k−1)·2^56 DIV the k-th hash, the
+    * divisor floored at 1. */
+  private[graft] def kmvEstimate(items: String, k: Int): Column = {
+    val kth = s"try_element_at($items, $k)"
+    expr(s"CASE WHEN $kth IS NULL THEN CAST(size($items) AS BIGINT) " +
+      s"ELSE ${(k - 1).toLong * 72057594037927936L} " + // (k-1) * 2^56
+      s"DIV greatest(CAST(conv($kth, 16, 10) AS BIGINT), 1L) END")
+  }
+
+  /** The finish over a [[kmvSketch]] column: n_kept, est_distinct. */
+  private[graft] def kmvCounts(k: Int): Seq[Column] = Seq(
+    size(col("mins.items")).cast("long").as("n_kept"),
+    kmvEstimate("mins.items", k).as("est_distinct"))
 
   /** KMV set-overlap sketch — pairwise union / intersection / Jaccard
     * estimates between every two keys' value sets, computed from the
@@ -254,15 +263,9 @@ object Heuristics {
     * est_intersect, jaccard_permille) for key_a < key_b. */
   def kmvOverlap(df: DataFrame, key: Column, value: Column,
       k: Int = 32, maxKeys: Int = 512): DataFrame = {
-    require(k >= 3 && k <= 64, "k must be in [3, 64]")
     require(maxKeys >= 2, "maxKeys must be >= 2")
-    val num = (k - 1).toLong * 72057594037927936L // (k-1) * 2^56
-    val kmin = udaf(new graft.functions.KMinValuesAggregator(k))
-    val sketches = df.select(key.as("key"),
-        substring(md5(value.cast("string")), 1, 14).as("h"))
-      .filter(col("h").isNotNull)
-      .groupBy(col("key"))
-      .agg(kmin(col("h")).as("mins"))
+    val sketches = kmvMembers(df, value, key.as("key")).groupBy(col("key"))
+      .agg(kmvSketch(k))
       .select(col("key"), col("mins.items").as("items"))
     val localRows = sketches.limit(maxKeys + 1).collect()
     require(localRows.length <= maxKeys,
@@ -284,11 +287,7 @@ object Heuristics {
       .withColumn("n_union_kept", size(col("u")).cast("long"))
       .withColumn("n_common", size(array_intersect(col("u"),
         array_intersect(col("items_a"), col("items_b")))).cast("long"))
-      .withColumn("kth", try_element_at(col("u"), lit(k)))
-      .withColumn("est_union",
-        when(col("kth").isNull, col("n_union_kept"))
-          .otherwise(expr(
-            s"$num DIV greatest(CAST(conv(kth, 16, 10) AS BIGINT), 1L)")))
+      .withColumn("est_union", kmvEstimate("u", k))
       .select(col("key_a"), col("key_b"), col("n_union_kept"),
         col("n_common"), col("est_union"),
         // floor(est_union·n_common / n_union_kept) via the exact
@@ -332,10 +331,8 @@ object Heuristics {
     * an analytic lag, emit percent change. */
   def paneDelta(df: DataFrame, ts: Column, classifier: Column,
       duration: String): DataFrame = {
-    val counts = df
-      .groupBy(windowStartMs(ts, duration).as("window_start_ms"),
-        classifier.as("classifier"))
-      .agg(count(lit(1)).as("n"))
+    val counts = windowedAgg(df, ts, duration,
+      Seq(classifier.as("classifier")))(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("classifier"))
       .orderBy(col("window_start_ms"))
     counts

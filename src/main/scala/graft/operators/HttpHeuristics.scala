@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The named HTTPRequest heuristics the reference configures per
@@ -26,28 +26,118 @@ import org.apache.spark.sql.functions._
   * All three are single hash-aggregates per (window, client) over
   * codegen'd conditional counts — the per-group loops of the
   * reference collapse into `count(when...)` columns because the
-  * endpoint lists are static configuration. Ties across endpoints
-  * keep the lowest-index rule, exactly like the reference's
-  * strictly-greater max scan.
+  * endpoint lists are static configuration.
+  *
+  * Each decision is written once — one aggregate column list per
+  * heuristic and one rule pick ([[pickRule]]; ties keep the lowest
+  * index, like the reference's strictly-greater max scan). The forms
+  * differ only in grouping: [[Heuristics.windowedAgg]], analytic
+  * sessions after [[keyedRequests]], or `session_window` in
+  * [[graft.streaming.Streaming.perEndpointErrorRateStream]].
   */
 object HttpHeuristics {
+
+  /** A configured `threshold:method:path` rule ([[pickRule]]). */
+  sealed trait Rule {
+    def method: String; def path: String; def threshold: Long
+  }
 
   /** One monitored endpoint (ref EndpointAbuseAnalysis endpoint
     * config `threshold:method:path`). */
   case class Endpoint(method: String, path: String, threshold: Long)
+    extends Rule
 
   /** One error-rate rule; `path` is a regex
     * (ref PerEndpointErrorRateAnalysis `threshold:method:path`). */
   case class ErrorRule(method: String, path: String, threshold: Long)
+    extends Rule
 
   /** Supporting-object check (ref EndpointAbuseAnalysis.java:280-291). */
   def isSupporting(path: Column): Column =
     Seq(".css", ".js", ".gif", ".jpg", ".ico", ".svg", ".png")
       .map(path.endsWith(_)).reduce(_ || _)
 
-  private def windowStartMs(ts: Column, window: String): Column =
-    unix_millis(org.apache.spark.sql.functions.window(ts, window)
-      .getField("start"))
+  /** The rule pick every endpoint-abuse and per-endpoint error-rate
+    * form finishes with, over aggregated per-rule counts `n_i` (and
+    * latest-match times `t_i` when `latest` names an output): keep the
+    * rows where some n_i meets its rule's threshold, take the highest
+    * qualifying count — greatest() of the qualifying counts, then the
+    * FIRST index attaining it, so the lowest index wins ties like the
+    * reference's strictly-greater max scan — and project the winner's
+    * method, path, count and latest time under the caller's names.
+    * Input columns pass through. */
+  private[graft] def pickRule(grouped: DataFrame, rules: Seq[Rule],
+      method: String, path: String, n: String,
+      latest: Option[String] = None): DataFrame = {
+    val qual = rules.indices.map(i =>
+      when(col(s"n_$i") >= rules(i).threshold, col(s"n_$i")))
+    val maxQual = if (qual.length == 1) qual.head else greatest(qual: _*)
+    val best = rules.indices.foldLeft(lit(null).cast("int")) {
+      (acc, i) => when(acc.isNull && qual(i) === maxQual, i).otherwise(acc)
+    }
+    def winner(field: Int => Column): Column =
+      element_at(array(rules.indices.map(field): _*), col("__best") + 1)
+    grouped.withColumn("__best", best).filter(col("__best").isNotNull)
+      .withColumns((Seq(method -> winner(i => lit(rules(i).method)),
+          path -> winner(i => lit(rules(i).path)),
+          n -> winner(i => col(s"n_$i"))) ++
+        latest.map(_ -> winner(i => col(s"t_$i")))).toMap)
+  }
+
+  /** The reference's keying DoFn (HTTPRequest.java:125-140): requests
+    * missing any keyed field (address, method, path) drop before
+    * sessionizing. Output: __ts, addr, __m, __p, then `extra`. */
+  private[graft] def keyedRequests(df: DataFrame, ts: Column, addr: Column,
+      method: Column, path: Column, extra: Column*): DataFrame =
+    df.select(Seq(ts.as("__ts"), addr.as("addr"), method.as("__m"),
+        path.as("__p")) ++ extra: _*)
+      .filter(col("addr").isNotNull && col("__m").isNotNull &&
+        col("__p").isNotNull)
+
+  /** Aggregate [[keyedRequests]] rows per analytic client session
+    * (`session_id`); `window_max_ts_ms` is Beam's session
+    * `w.maxTimestamp()` (last event + gap − 1 ms), stamped on alerts. */
+  private def perSession(keyed: DataFrame, gapSeconds: Long)
+      (aggs: Column*): DataFrame =
+    Sessionize.assignSessions(keyed, col("__ts"), col("addr"), gapSeconds)
+      .groupBy(col("addr"), col("session_id"))
+      .agg(max(unix_millis(col("__ts"))).as("__last"), aggs: _*)
+      .withColumn("window_max_ts_ms",
+        col("__last") + lit(gapSeconds * 1000L) - lit(1L))
+
+  /** EndpointAbuseAnalysis's per-client aggregate: `n_i` requests to
+    * each monitored (method, path), `n_variance` variance events, and
+    * the latest monitored request's time and agent. */
+  private def endpointAbuseAggs(ts: Column, method: Column, path: Column,
+      url: Column, userAgent: Column, endpoints: Seq[Endpoint],
+      varianceSupportingOnly: Boolean,
+      customVarianceSubstrings: Seq[String]): Seq[Column] = {
+    val monIdx = endpoints.zipWithIndex.foldLeft(lit(null).cast("int")) {
+      case (acc, (e, i)) =>
+        when(method === e.method && path === e.path, i).otherwise(acc)
+    }
+    val customVariance = customVarianceSubstrings
+      .map(s => url.contains(s)).reduceOption(_ || _).getOrElse(lit(false))
+    val varianceEvent = if (!varianceSupportingOnly) monIdx.isNull
+      else monIdx.isNull && (isSupporting(path) || customVariance)
+    val monTs = when(monIdx.isNotNull, unix_millis(ts))
+    endpoints.indices.map(i => count(when(monIdx === i, 1)).as(s"n_$i")) ++
+      Seq(count(when(varianceEvent, 1)).as("n_variance"),
+        max(monTs).as("latest_ts_ms"),
+        max_by(when(monIdx.isNotNull, userAgent), monTs).as("useragent"))
+  }
+
+  /** PerEndpointErrorRateAnalysis's per-client aggregate: per rule,
+    * `n_i` full-match (method, path-regex) errors and `t_i` the latest
+    * one's time. */
+  private[graft] def errorRuleAggs(ts: Column, method: Column,
+      path: Column, rules: Seq[ErrorRule]): Seq[Column] = {
+    val matches = rules.map(r =>
+      method === r.method && path.rlike("^(?:" + r.path + ")$"))
+    rules.indices.map(i => count(when(matches(i), 1)).as(s"n_$i")) ++
+      rules.indices.map(i =>
+        max(when(matches(i), unix_millis(ts))).as(s"t_$i"))
+  }
 
   /** EndpointAbuseAnalysis. Output: (window_start_ms, addr,
     * endpoint_method, endpoint_path, n, latest_ts_ms, useragent).
@@ -65,126 +155,40 @@ object HttpHeuristics {
       method: Column, path: Column, userAgent: Column, window: String,
       endpoints: Seq[Endpoint], varianceSupportingOnly: Boolean = false,
       customVarianceSubstrings: Seq[String] = Nil,
-      url: Option[Column] = None): DataFrame = {
-    val monIdx = endpoints.zipWithIndex.foldLeft(lit(null).cast("int")) {
-      case (acc, (e, i)) =>
-        when(method === e.method && path === e.path, i).otherwise(acc)
-    }
-    val urlCol = url.getOrElse(path)
-    val customVariance = customVarianceSubstrings
-      .map(s => urlCol.contains(s)).reduceOption(_ || _).getOrElse(lit(false))
-    val extendedVarianceEvent =
-      monIdx.isNull && (isSupporting(path) || customVariance)
-    val varianceEvent = if (varianceSupportingOnly) extendedVarianceEvent
-      else monIdx.isNull
-    val counts = endpoints.indices.map(i =>
-      count(when(monIdx === i, 1)).as(s"n_$i"))
-    val aggs = counts ++ Seq(
-      count(when(varianceEvent, 1)).as("n_variance"),
-      max(when(monIdx.isNotNull, unix_millis(ts))).as("latest_ts_ms"),
-      max_by(when(monIdx.isNotNull, userAgent),
-        when(monIdx.isNotNull, unix_millis(ts))).as("useragent"))
-    val grouped = df
-      .groupBy(windowStartMs(ts, window).as("window_start_ms"),
-        addr.as("addr"))
-      .agg(aggs.head, aggs.tail: _*)
-      .filter(col("n_variance") === 0)
-    // argmax over the static endpoint columns: greatest() of the
-    // qualifying counts, then the FIRST index attaining it — lowest
-    // index wins ties, the reference's strictly-greater scan
-    val qual = endpoints.indices.map(i =>
-      when(col(s"n_$i") >= endpoints(i).threshold, col(s"n_$i"))
-        .otherwise(lit(null).cast("long")))
-    val maxQual = if (qual.length == 1) qual.head else greatest(qual: _*)
-    val bestIdx = endpoints.indices.foldLeft(lit(null).cast("int")) {
-      (acc, i) =>
-        when(acc.isNull && qual(i) === maxQual, i).otherwise(acc)
-    }
-    grouped
-      .withColumn("best", bestIdx)
-      .filter(col("best").isNotNull)
-      .withColumn("endpoint_method",
-        endpoints.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, endpoints(i).method).otherwise(acc) })
-      .withColumn("endpoint_path",
-        endpoints.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, endpoints(i).path).otherwise(acc) })
-      .withColumn("n",
-        endpoints.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"n_$i")).otherwise(acc) })
+      url: Option[Column] = None): DataFrame =
+    pickRule(
+        Heuristics.windowedAgg(df, ts, window, Seq(addr.as("addr")))(
+            endpointAbuseAggs(ts, method, path, url.getOrElse(path),
+              userAgent, endpoints, varianceSupportingOnly,
+              customVarianceSubstrings): _*)
+          .filter(col("n_variance") === 0),
+        endpoints, "endpoint_method", "endpoint_path", "n")
       .select(col("window_start_ms"), col("addr"), col("endpoint_method"),
         col("endpoint_path"), col("n"), col("latest_ts_ms"),
         col("useragent"))
-  }
 
   /** EndpointAbuseAnalysis over the reference's actual windowing —
     * per-client session windows (ref HTTPRequest.java:312-325 feeds
     * EndpointAbuseAnalysis through KeyAndWindowForSessionsFireEarly
     * with sessionGapDurationMinutes). Same monitored-count + variance
     * + argmax semantics as [[endpointAbuse]], grouped by (addr,
-    * session) instead of fixed windows; `window_max_ts_ms` is Beam's
-    * session `w.maxTimestamp()` (last session event + gap − 1 ms),
-    * which the reference stamps on the alert. */
+    * session) instead of fixed windows. */
   def endpointAbuseSessions(df: DataFrame, ts: Column, addr: Column,
       method: Column, path: Column, userAgent: Column,
       gapSeconds: Long, endpoints: Seq[Endpoint],
       varianceSupportingOnly: Boolean = false,
       customVarianceSubstrings: Seq[String] = Nil,
       url: Option[Column] = None): DataFrame = {
-    // null keyed fields drop pre-sessionization, as in the keying
-    // DoFn (HTTPRequest.java:125-140; a null UA becomes "unknown")
-    val base = Sessionize.assignSessions(
-      df.select(ts.as("__ts"), addr.as("addr"), method.as("__m"),
-        path.as("__p"), coalesce(userAgent, lit("unknown")).as("__ua"),
-        url.getOrElse(path).as("__u")).filter(col("addr").isNotNull &&
-        col("__m").isNotNull && col("__p").isNotNull),
-      col("__ts"), col("addr"), gapSeconds)
-    val monIdx = endpoints.zipWithIndex.foldLeft(lit(null).cast("int")) {
-      case (acc, (e, i)) =>
-        when(col("__m") === e.method && col("__p") === e.path, i)
-          .otherwise(acc)
-    }
-    val customVariance = customVarianceSubstrings
-      .map(s => col("__u").contains(s)).reduceOption(_ || _)
-      .getOrElse(lit(false))
-    val extendedVarianceEvent =
-      monIdx.isNull && (isSupporting(col("__p")) || customVariance)
-    val varianceEvent = if (varianceSupportingOnly) extendedVarianceEvent
-      else monIdx.isNull
-    val counts = endpoints.indices.map(i =>
-      count(when(monIdx === i, 1)).as(s"n_$i"))
-    val aggs = counts ++ Seq(
-      count(when(varianceEvent, 1)).as("n_variance"),
-      max(when(monIdx.isNotNull, unix_millis(col("__ts"))))
-        .as("latest_ts_ms"),
-      max_by(when(monIdx.isNotNull, col("__ua")),
-        when(monIdx.isNotNull, unix_millis(col("__ts")))).as("useragent"),
-      max(unix_millis(col("__ts"))).as("__last"))
-    val grouped = base.groupBy(col("addr"), col("session_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .filter(col("n_variance") === 0)
-    val qual = endpoints.indices.map(i =>
-      when(col(s"n_$i") >= endpoints(i).threshold, col(s"n_$i"))
-        .otherwise(lit(null).cast("long")))
-    val maxQual = if (qual.length == 1) qual.head else greatest(qual: _*)
-    val bestIdx = endpoints.indices.foldLeft(lit(null).cast("int")) {
-      (acc, i) =>
-        when(acc.isNull && qual(i) === maxQual, i).otherwise(acc)
-    }
-    grouped
-      .withColumn("best", bestIdx)
-      .filter(col("best").isNotNull)
-      .withColumn("endpoint_method",
-        endpoints.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, endpoints(i).method).otherwise(acc) })
-      .withColumn("endpoint_path",
-        endpoints.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, endpoints(i).path).otherwise(acc) })
-      .withColumn("n",
-        endpoints.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"n_$i")).otherwise(acc) })
-      .withColumn("window_max_ts_ms",
-        col("__last") + lit(gapSeconds * 1000L) - lit(1L))
+    // a null UA becomes "unknown" in the keying DoFn
+    val keyed = keyedRequests(df, ts, addr, method, path,
+      coalesce(userAgent, lit("unknown")).as("__ua"),
+      url.getOrElse(path).as("__u"))
+    pickRule(
+        perSession(keyed, gapSeconds)(endpointAbuseAggs(col("__ts"),
+            col("__m"), col("__p"), col("__u"), col("__ua"), endpoints,
+            varianceSupportingOnly, customVarianceSubstrings): _*)
+          .filter(col("n_variance") === 0),
+        endpoints, "endpoint_method", "endpoint_path", "n")
       .select(col("addr"), col("session_id"), col("endpoint_method"),
         col("endpoint_path"), col("n"), col("latest_ts_ms"),
         col("useragent"), col("window_max_ts_ms"))
@@ -197,42 +201,14 @@ object HttpHeuristics {
     * PerEndpointErrorRateAnalysis.java:106-108). */
   def perEndpointErrorRate(df: DataFrame, ts: Column, addr: Column,
       method: Column, path: Column, window: String,
-      rules: Seq[ErrorRule]): DataFrame = {
-    val matches = rules.map(r =>
-      method === r.method && path.rlike("^(?:" + r.path + ")$"))
-    val counts = rules.indices.map(i =>
-      count(when(matches(i), 1)).as(s"n_$i"))
-    val latest = rules.indices.map(i =>
-      max(when(matches(i), unix_millis(ts))).as(s"t_$i"))
-    val grouped = df
-      .groupBy(windowStartMs(ts, window).as("window_start_ms"),
-        addr.as("addr"))
-      .agg((counts ++ latest).head, (counts ++ latest).tail: _*)
-    val qual = rules.indices.map(i =>
-      when(col(s"n_$i") >= rules(i).threshold, col(s"n_$i"))
-        .otherwise(lit(null).cast("long")))
-    val maxQual = if (qual.length == 1) qual.head else greatest(qual: _*)
-    val bestIdx = rules.indices.foldLeft(lit(null).cast("int")) {
-      (acc, i) => when(acc.isNull && qual(i) === maxQual, i).otherwise(acc)
-    }
-    grouped
-      .withColumn("best", bestIdx)
-      .filter(col("best").isNotNull)
-      .withColumn("rule_method",
-        rules.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, rules(i).method).otherwise(acc) })
-      .withColumn("rule_path",
-        rules.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, rules(i).path).otherwise(acc) })
-      .withColumn("n_errors",
-        rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"n_$i")).otherwise(acc) })
-      .withColumn("latest_error_ms",
-        rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"t_$i")).otherwise(acc) })
+      rules: Seq[ErrorRule]): DataFrame =
+    pickRule(
+        Heuristics.windowedAgg(df, ts, window, Seq(addr.as("addr")))(
+          errorRuleAggs(ts, method, path, rules): _*),
+        rules, "rule_method", "rule_path", "n_errors",
+        Some("latest_error_ms"))
       .select(col("window_start_ms"), col("addr"), col("rule_method"),
         col("rule_path"), col("n_errors"), col("latest_error_ms"))
-  }
 
   /** PerEndpointErrorRateAnalysis, faithful session form (ref
     * s/httprequest/HTTPRequest.java:96-165
@@ -246,7 +222,9 @@ object HttpHeuristics {
     * ties — the reference's strictly-greater max scan); the row
     * carries the most recent matching error and the session-window
     * max timestamp (last error + gap − 1 ms, Beam's
-    * `w.maxTimestamp()`).
+    * `w.maxTimestamp()`). The session WINDOW tracks every error event
+    * in the session, matching or not (the reference sessionizes
+    * before rule matching).
     *
     * Input must already be filtered to the error statuses of interest
     * (the reference keeps 400–499). One exchange on addr for the
@@ -254,55 +232,15 @@ object HttpHeuristics {
     * same scan shape as the fixed-window form. */
   def perEndpointErrorRateSessions(df: DataFrame, ts: Column,
       addr: Column, method: Column, path: Column, gapSeconds: Long,
-      rules: Seq[ErrorRule]): DataFrame = {
-    // the reference's keying DoFn drops events missing any of the
-    // keyed fields before sessionizing (HTTPRequest.java:125-140)
-    val base = Sessionize.assignSessions(
-      df.select(ts.as("__ts"), addr.as("addr"), method.as("__m"),
-        path.as("__p")).filter(col("addr").isNotNull &&
-        col("__m").isNotNull && col("__p").isNotNull),
-      col("__ts"), col("addr"), gapSeconds)
-    val matches = rules.map(r =>
-      col("__m") === r.method && col("__p").rlike("^(?:" + r.path + ")$"))
-    val counts = rules.indices.map(i =>
-      count(when(matches(i), 1)).as(s"n_$i"))
-    val latest = rules.indices.map(i =>
-      max(when(matches(i), unix_millis(col("__ts")))).as(s"t_$i"))
-    val aggs = counts ++ latest :+
-      max(unix_millis(col("__ts"))).as("__last")
-    val grouped = base.groupBy(col("addr"), col("session_id"))
-      .agg(aggs.head, aggs.tail: _*)
-    val qual = rules.indices.map(i =>
-      when(col(s"n_$i") >= rules(i).threshold, col(s"n_$i"))
-        .otherwise(lit(null).cast("long")))
-    val maxQual = if (qual.length == 1) qual.head else greatest(qual: _*)
-    val bestIdx = rules.indices.foldLeft(lit(null).cast("int")) {
-      (acc, i) => when(acc.isNull && qual(i) === maxQual, i).otherwise(acc)
-    }
-    grouped
-      .withColumn("best", bestIdx)
-      .filter(col("best").isNotNull)
-      .withColumn("rule_method",
-        rules.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, rules(i).method).otherwise(acc) })
-      .withColumn("rule_path",
-        rules.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, rules(i).path).otherwise(acc) })
-      .withColumn("n_errors",
-        rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"n_$i")).otherwise(acc) })
-      .withColumn("latest_error_ms",
-        rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"t_$i")).otherwise(acc) })
-      // the session WINDOW tracks every error event in the session,
-      // matching or not (the reference sessionizes before rule
-      // matching), so its max timestamp derives from __last
-      .withColumn("window_max_ts_ms",
-        col("__last") + lit(gapSeconds * 1000L) - lit(1L))
+      rules: Seq[ErrorRule]): DataFrame =
+    pickRule(
+        perSession(keyedRequests(df, ts, addr, method, path), gapSeconds)(
+          errorRuleAggs(col("__ts"), col("__m"), col("__p"), rules): _*),
+        rules, "rule_method", "rule_path", "n_errors",
+        Some("latest_error_ms"))
       .select(col("addr"), col("session_id"), col("rule_method"),
         col("rule_path"), col("n_errors"), col("latest_error_ms"),
         col("window_max_ts_ms"))
-  }
 
   /** UserAgentBlocklistAnalysis. `natAddrs`, when given, suppresses
     * clients the NAT detector flagged (broadcast left-anti — the
@@ -317,7 +255,8 @@ object HttpHeuristics {
     val base = df
       .filter(addr.isNotNull && userAgent.isNotNull &&
         !userAgent.contains("Firefox/") && userAgent.rlike(pat))
-      .select(windowStartMs(ts, window).as("window_start_ms"),
+      .select(unix_millis(org.apache.spark.sql.functions.window(ts, window)
+          .getField("start")).as("window_start_ms"),
         addr.as("addr"), userAgent.as("useragent"))
       .distinct()
     natAddrs match {

@@ -474,19 +474,31 @@ object Sampling {
     * non-ANSI cast where the DuckDB mirror (which carries the id
     * natively) errors — an engine divergence. String-keyed corpora
     * should map their ids to longs first (e.g. a dictionary join or
-    * xxhash64), keeping the draw a pure function of the data. */
+    * xxhash64), keeping the draw a pure function of the data.
+    *
+    * [[reservoirSketch]] and [[reservoirRanks]] also build the
+    * windowed [[graft.streaming.Streaming.hashReservoirStream]]. */
   def hashReservoir(df: DataFrame, stratum: Column, id: Column,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    reservoirRanks(df.select(stratum.as("stratum"), reservoirKey(id).as("hk"))
+      .groupBy(col("stratum")).agg(reservoirSketch(k)), "stratum")
+
+  /** The bounded k-min aggregate over the (hash, id) buffer keys `hk`:
+    * a `mins` struct whose `items` are the k smallest in order. */
+  private[graft] def reservoirSketch(k: Int): Column = {
     require(k >= 1 && k <= 4096, "k must be in [1, 4096]")
-    val kmin = udaf(new graft.functions.KMinValuesAggregator(k))
-    df.select(stratum.as("stratum"), reservoirKey(id).as("hk"))
-      .groupBy(col("stratum"))
-      .agg(kmin(col("hk")).as("mins"))
-      .select(col("stratum"),
-        posexplode(col("mins.items")).as(Seq("pos", "item")))
-      .select(col("stratum"), (col("pos") + 1).cast("long").as("rank"),
-        reservoirId(col("item")).as("id"))
+    udaf(new graft.functions.KMinValuesAggregator(k))
+      .apply(col("hk")).as("mins")
   }
+
+  /** The draw out of [[reservoirSketch]] rows: one row per kept entry,
+    * (`keys`, rank 1..k in hash order, id). */
+  private[graft] def reservoirRanks(sketches: DataFrame,
+      keys: String*): DataFrame =
+    sketches.select(keys.map(col) :+
+        posexplode(col("mins.items")).as(Seq("pos", "item")): _*)
+      .select(keys.map(col) ++ Seq((col("pos") + 1).cast("long").as("rank"),
+        reservoirId(col("item")).as("id")): _*)
 
   /** Contract-checked (hash, id) reservoir buffer key — shared by the
     * batch [[hashReservoir]] and the streaming

@@ -401,8 +401,12 @@ object HttpRequestPipeline {
     * the batch form's per-client aggregate runs as ONE stateful
     * append-mode aggregate, and [[Heuristics.thresholdGate]] plus the
     * NAT predicate run in its foreachBatch epilogue, where each
-    * finalized window arrives whole. `onAlerts` receives alert rows in
-    * the [[analyze]] schema. Start this alongside [[analyzeStreamFull]]
+    * finalized window arrives whole. The epilogue evaluates the
+    * finalized batch exactly once (a local checkpoint) before the gate:
+    * every state-store partition of the micro-batch must commit, so
+    * the query cannot hinge on whether `onAlerts` evaluates the lazy
+    * frame it is handed. `onAlerts` receives alert rows in the
+    * [[analyze]] schema. Start this alongside [[analyzeStreamFull]]
     * over the same lines for the full per-resource fan-out. */
   def thresholdAlertStream(lines: Dataset[String], cfg: Config = Config(),
       watermarkDelay: String = "30 seconds")(onAlerts: DataFrame => Unit)
@@ -412,6 +416,6 @@ object HttpRequestPipeline {
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        onAlerts(thresholdAlerts(batch.toDF(), cfg))
+        onAlerts(thresholdAlerts(batch.toDF().localCheckpoint(), cfg))
       }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode,
   StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode,
   TimerValues, ValueState}
+import graft.operators.{Heuristics, HttpHeuristics, Sampling}
 
 /** Structured-Streaming forms of the engine's core operators
   * (SURVEY.md §2.4, §2.6). The batch forms (graft.operators) and these
@@ -17,10 +18,13 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode,
   *    detectors have no streaming copy here — their batch builders
   *    (`Heuristics.windowedAgg` and its callers) run unchanged on a
   *    watermarked frame, and their finalized-window gates run in the
-  *    pipelines' foreachBatch epilogues
+  *    pipelines' foreachBatch epilogues. The sketch and windowed
+  *    monitor streams are `windowedAgg` over the batch operator's own
+  *    aggregate column and finish, no aggregation code of their own
   *  - session_window ↔ ref 45-min-gap sessions (:151-163); the
   *    reference's accumulating early-fired panes map to update mode +
-  *    downstream suppression (SURVEY.md §2.4 design note)
+  *    downstream suppression (SURVEY.md §2.4 design note); the
+  *    per-endpoint stream runs its batch twin's code under it
   *  - transformWithState ([[keyedScan]]: one [[ScanProcessor]] host,
   *    one scan kernel per detector) ↔ ref keyed ValueState +
   *    processing-time Timer (s/alert/AlertSuppressor.java:53-143)
@@ -50,55 +54,30 @@ object Streaming {
     * [[graft.operators.HttpHeuristics.perEndpointErrorRateSessions]]
     * (ref PerEndpointErrorRateAnalysis fed by
     * KeyAndWindowForSessionsFireEarly). Input must already be
-    * filtered to client errors; one `session_window` keyed state per
-    * (addr, session), conditional counts per rule, first-index-wins
-    * argmax. Append mode emits a session once the watermark passes
-    * its gap — the reference's final-pane semantics;
-    * `window_max_ts_ms` (session end − 1 ms) matches the batch form's
-    * last-event + gap − 1 ms. */
+    * filtered to client errors. The batch form's keying
+    * pre-projection, rule aggregate and rule pick run on a
+    * watermarked frame grouped by `session_window` per address, so
+    * the two forms agree by construction. Append mode emits a session
+    * once the watermark passes its gap — the reference's final-pane
+    * semantics; `window_max_ts_ms` (session end − 1 ms) matches the
+    * batch form's last-event + gap − 1 ms. */
   def perEndpointErrorRateStream(df: DataFrame, tsName: String,
       addr: Column, method: Column, path: Column, gap: String,
       watermarkDelay: String,
-      rules: Seq[graft.operators.HttpHeuristics.ErrorRule]): DataFrame = {
-    val base = df.select(col(tsName).as("__ts"), addr.as("addr"),
-        method.as("__m"), path.as("__p"))
-      .filter(col("addr").isNotNull)
+      rules: Seq[HttpHeuristics.ErrorRule]): DataFrame = {
+    val aggs = HttpHeuristics.errorRuleAggs(col("__ts"), col("__m"),
+      col("__p"), rules)
+    val grouped = HttpHeuristics.keyedRequests(df, col(tsName), addr,
+        method, path)
       .withWatermark("__ts", watermarkDelay)
-    val matches = rules.map(r =>
-      col("__m") === r.method && col("__p").rlike("^(?:" + r.path + ")$"))
-    val counts = rules.indices.map(i =>
-      count(when(matches(i), 1)).as(s"n_$i"))
-    val latest = rules.indices.map(i =>
-      max(when(matches(i), unix_millis(col("__ts")))).as(s"t_$i"))
-    val aggs = counts ++ latest
-    val grouped = base
       .groupBy(session_window(col("__ts"), gap), col("addr"))
       .agg(aggs.head, aggs.tail: _*)
-    val qual = rules.indices.map(i =>
-      when(col(s"n_$i") >= rules(i).threshold, col(s"n_$i"))
-        .otherwise(lit(null).cast("long")))
-    val maxQual = if (qual.length == 1) qual.head else greatest(qual: _*)
-    val bestIdx = rules.indices.foldLeft(lit(null).cast("int")) {
-      (acc, i) => when(acc.isNull && qual(i) === maxQual, i).otherwise(acc)
-    }
-    grouped
-      .withColumn("best", bestIdx)
-      .filter(col("best").isNotNull)
+    HttpHeuristics.pickRule(grouped, rules, "rule_method", "rule_path",
+        "n_errors", Some("latest_error_ms"))
       .select(
         unix_millis(col("session_window.start")).as("session_start_ms"),
-        col("addr"),
-        rules.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, rules(i).method).otherwise(acc) }
-          .as("rule_method"),
-        rules.indices.foldLeft(lit(null).cast("string")) { (acc, i) =>
-          when(col("best") === i, rules(i).path).otherwise(acc) }
-          .as("rule_path"),
-        rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"n_$i")).otherwise(acc) }
-          .as("n_errors"),
-        rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
-          when(col("best") === i, col(s"t_$i")).otherwise(acc) }
-          .as("latest_error_ms"),
+        col("addr"), col("rule_method"), col("rule_path"),
+        col("n_errors"), col("latest_error_ms"),
         (unix_millis(col("session_window.end")) - 1)
           .as("window_max_ts_ms"))
   }
@@ -135,26 +114,13 @@ object Streaming {
     * twin's schema plus the window column. */
   def kmvCardinalityStream(df: DataFrame, tsName: String, key: Column,
       value: Column, windowDuration: String, watermarkDelay: String,
-      k: Int = 32): DataFrame = {
-    require(k >= 3 && k <= 64, "k must be in [3, 64]")
-    val num = (k - 1).toLong * 72057594037927936L // (k-1) * 2^56
-    val kmin = udaf(new graft.functions.KMinValuesAggregator(k))
-    df.select(col(tsName), key.as("key"),
-        substring(md5(value.cast("string")), 1, 14).as("h"))
-      .filter(col("h").isNotNull)
-      .withWatermark(tsName, watermarkDelay)
-      .groupBy(window(col(tsName), windowDuration), col("key"))
-      .agg(kmin(col("h")).as("mins"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("key"),
-        size(col("mins.items")).cast("long").as("n_kept"),
-        try_element_at(col("mins.items"), lit(k)).as("kth"))
-      .select(col("window_start_ms"), col("key"), col("n_kept"),
-        when(col("kth").isNull, col("n_kept"))
-          .otherwise(expr(
-            s"$num DIV greatest(CAST(conv(kth, 16, 10) AS BIGINT), 1L)"))
-          .as("est_distinct"))
-  }
+      k: Int = 32): DataFrame =
+    Heuristics.windowedAgg(
+        Heuristics.kmvMembers(df, value, col(tsName), key.as("key"))
+          .withWatermark(tsName, watermarkDelay),
+        col(tsName), windowDuration, Seq(col("key")))(Heuristics.kmvSketch(k))
+      .select(Seq(col("window_start_ms"), col("key")) ++
+        Heuristics.kmvCounts(k): _*)
 
   /** Streaming eval-set maintenance — the windowed form of
     * [[graft.operators.Sampling.hashReservoir]]: a STANDING exact-k
@@ -194,27 +160,20 @@ object Streaming {
       stratum: Column, id: Column, windowDuration: String,
       watermarkDelay: String, k: Int,
       lenient: Boolean = false): DataFrame = {
-    require(k >= 1 && k <= 4096, "k must be in [1, 4096]")
-    val kmin = udaf(new graft.functions.KMinValuesAggregator(k))
     val keyed = df.select(col(tsName), stratum.as("stratum"),
-      (if (lenient) graft.operators.Sampling.reservoirKeyLenient(id)
-       else graft.operators.Sampling.reservoirKey(id)).as("hk"))
+      (if (lenient) Sampling.reservoirKeyLenient(id)
+       else Sampling.reservoirKey(id)).as("hk"))
     val checked =
       if (!lenient) keyed
       else keyed
         .observe("reservoir_contract",
           count(when(col("hk").isNull, 1)).as("reservoir_id_violations"))
         .filter(col("hk").isNotNull)
-    checked
-      .withWatermark(tsName, watermarkDelay)
-      .groupBy(window(col(tsName), windowDuration), col("stratum"))
-      .agg(kmin(col("hk")).as("mins"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("stratum"),
-        posexplode(col("mins.items")).as(Seq("pos", "item")))
-      .select(col("window_start_ms"), col("stratum"),
-        (col("pos") + 1).cast("long").as("rank"),
-        graft.operators.Sampling.reservoirId(col("item")).as("id"))
+    Sampling.reservoirRanks(
+      Heuristics.windowedAgg(checked.withWatermark(tsName, watermarkDelay),
+        col(tsName), windowDuration, Seq(col("stratum")))(
+        Sampling.reservoirSketch(k)),
+      "window_start_ms", "stratum")
   }
 
   /** Streaming language-mix monitor — the ingestion-drift view a
@@ -241,13 +200,12 @@ object Streaming {
     val classify = udf((t: String) =>
       graft.operators.TextAnalysis.langIdKernel(model, penalty, d,
         maxChars)(t).map(_._1))
-    df.select(col(tsName), classify(text).as("pred_lang"))
-      .filter(col("pred_lang").isNotNull) // gramless docs: unclassifiable
-      .withWatermark(tsName, watermarkDelay)
-      .groupBy(window(col(tsName), windowDuration), col("pred_lang"))
-      .agg(count(lit(1)).as("n_docs"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("pred_lang"), col("n_docs"))
+    Heuristics.windowedAgg(
+        df.select(col(tsName), classify(text).as("pred_lang"))
+          .filter(col("pred_lang").isNotNull) // gramless docs: unclassifiable
+          .withWatermark(tsName, watermarkDelay),
+        col(tsName), windowDuration, Seq(col("pred_lang")))(
+      count(lit(1)).as("n_docs"))
   }
 
   /** Streaming language-mix DRIFT alert — [[langIdStream]]'s windowed
@@ -298,14 +256,7 @@ object Streaming {
             java.util.Arrays.asList(carry.collect {
               case ((ws, l), n) if wsSet(ws) || wsSet(ws + windowMs) =>
                 org.apache.spark.sql.Row(ws, l, n)
-            }.toSeq: _*),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("window_start_ms",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("pred_lang",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("n_docs",
-                org.apache.spark.sql.types.LongType))))
+            }.toSeq: _*), batch.schema)
           onAlerts(graft.operators.TextAnalysis.langMixDrift(
               local, windowMs, warnPct, critPct, minCount)
             .filter(col("window_start_ms").isin(wsSet.toSeq: _*)))
@@ -398,12 +349,9 @@ object Streaming {
       windowDuration: String, watermarkDelay: String, topK: Int = 10)
       (onCards: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val counts = df.withWatermark(tsName, watermarkDelay)
-      .groupBy(window(col(tsName), windowDuration),
-        key.as("k"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        col("k"), col("n"))
+    val counts = Heuristics.windowedAgg(
+        df.withWatermark(tsName, watermarkDelay), col(tsName),
+        windowDuration, Seq(key.as("k")))(count(lit(1)).as("n"))
     counts.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) onCards(keySkewEpilogue(batch.toDF(), topK))

@@ -1986,4 +1986,103 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed.map(_._2) == Set(true, false))
     } finally q.stop()
   }
+
+  test("per-endpoint error rate: the session_window stream equals the " +
+      "batch session form on inline lines — tied rules keep the lowest " +
+      "index, and a 4xx with no method cannot bridge two sessions") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.HttpHeuristics
+    import graft.pipelines.HttpRequestPipeline
+    def glb(ip: String, method: Option[String], path: String, sec: Int) = {
+      val m = method.fold("")(x => s""""requestMethod":"$x",""")
+      val t = java.time.Instant.ofEpochSecond(sec.toLong).toString
+      s"""{"httpRequest":{$m"requestUrl":"https://h$path","status":404,"remoteIp":"$ip","userAgent":"ua"},"timestamp":"$t","logName":"projects/p/logs/l"}"""
+    }
+    // rules 0 and 1 tie on 10.0.0.1 (two errors each): rule 0 wins
+    val rules = Seq(HttpHeuristics.ErrorRule("GET", "/y", 2),
+      HttpHeuristics.ErrorRule("GET", "/x", 2),
+      HttpHeuristics.ErrorRule("GET", "/b", 3))
+    val tie = Seq(glb("10.0.0.1", Some("GET"), "/x", 1),
+      glb("10.0.0.1", Some("GET"), "/y", 2),
+      glb("10.0.0.1", Some("GET"), "/x", 3),
+      glb("10.0.0.1", Some("GET"), "/y", 4))
+    // 10.0.0.2: two /b errors, a 90 s quiet gap (> the 60 s session
+    // gap), two more. The method-less 4xx at 55 s sits within 60 s of
+    // both halves: kept, it would merge them into one 4-error session
+    // over rule 2's threshold of 3
+    val bridge = Seq(glb("10.0.0.2", Some("GET"), "/b", 0),
+      glb("10.0.0.2", Some("GET"), "/b", 10),
+      glb("10.0.0.2", None, "/b", 55),
+      glb("10.0.0.2", Some("GET"), "/b", 100),
+      glb("10.0.0.2", Some("GET"), "/b", 110))
+    val flush = glb("203.0.113.9", Some("GET"), "/z", 3600)
+    def errorsOf(ds: org.apache.spark.sql.Dataset[String]) =
+      HttpRequestPipeline.parsedHttp(ds)
+        .filter(col("normalized.requestStatus").between(400, 499))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("addr") =!= "203.0.113.9")
+        .select(col("addr"), col("rule_path"), col("n_errors"),
+          col("latest_error_ms"), col("window_max_ts_ms"))
+        .as[(String, String, Long, Long, Long)].collect().toSet
+    val in = MemoryStream[String]
+    val q = Streaming.perEndpointErrorRateStream(
+        errorsOf(in.toDS()), "timestamp", col("normalized.sourceAddress"),
+        col("normalized.requestMethod"), col("normalized.urlRequestPath"),
+        "60 seconds", "0 seconds", rules)
+      .writeStream.format("memory").queryName("peerainline")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      in.addData(tie ++ bridge: _*); q.processAllAvailable()
+      in.addData(flush); q.processAllAvailable()
+      val streamed = rows(spark.table("peerainline"))
+      val batch = rows(HttpHeuristics.perEndpointErrorRateSessions(
+        errorsOf((tie ++ bridge).toDS()), col("timestamp"),
+        col("normalized.sourceAddress"), col("normalized.requestMethod"),
+        col("normalized.urlRequestPath"), gapSeconds = 60, rules))
+      assert(batch == Set(("10.0.0.1", "/y", 2L, 4000L, 63999L)),
+        s"batch $batch")
+      assert(streamed == batch, s"streamed $streamed vs batch $batch")
+    } finally q.stop()
+  }
+
+  test("thresholdAlertStream: an onAlerts that never evaluates its " +
+      "frame keeps the query alive across micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipelines.HttpRequestPipeline
+    def glb(ip: String, t: String) =
+      s"""{"httpRequest":{"requestMethod":"GET","requestUrl":"https://h/x","status":200,"remoteIp":"$ip","userAgent":"ua"},"timestamp":"$t","logName":"projects/p/logs/l"}"""
+    val in = MemoryStream[String]
+    val q = HttpRequestPipeline.thresholdAlertStream(in.toDS(),
+        HttpRequestPipeline.Config(), watermarkDelay = "30 seconds")(
+        _ => ()).start()
+    try {
+      in.addData((0 until 5).map(i => glb(s"1.1.1.$i",
+        f"2024-01-01T00:00:$i%02dZ")): _*)
+      q.processAllAvailable()
+      in.addData(glb("9.9.9.9", "2024-01-01T00:03:00Z"))
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty, s"${q.exception}")
+    } finally q.stop()
+  }
+
+  test("keySkewStream: an onCards that never evaluates its frame keeps " +
+      "the query alive across micro-batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1700000000L
+    val in = MemoryStream[(Long, Long)]
+    val q = Streaming.keySkewStream(
+        in.toDS().select(timestamp_seconds(col("_1")).as("ts"),
+          col("_2").as("user_id")),
+        "ts", col("user_id"), "10 minutes", "30 seconds")(_ => ()).start()
+    try {
+      in.addData((1 to 5).map(i => (t0 + i, i.toLong % 2)): _*)
+      q.processAllAvailable()
+      in.addData((t0 + 7200, 9L)) // closes the first window
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty, s"${q.exception}")
+    } finally q.stop()
+  }
 }

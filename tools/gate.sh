@@ -1,5 +1,7 @@
 #!/usr/bin/env bash
-# One-command round gate: sbt test + Verify + DuckDB oracle + Bench.
+# One-command round gate: sbt test + Verify + DuckDB oracle + Bench +
+# the declared benchmark workloads (perfbench, seed 1, each must be
+# correct with 0 failed).
 # Exits nonzero the moment any leg goes red, and prints one PASS/FAIL
 # summary line per leg — so loader-class breakage (round 7: a testdata
 # regeneration silently darkened 55/84 queries) is caught the moment it
@@ -53,6 +55,23 @@ case "$BLINE" in
   *) rc=1 ;;
 esac
 leg "bench" $rc
+
+# the benchmark's harness compiles against the engine's pipeline entry
+# points and checks every streamed alert against its batch twin, so a
+# run that is not correct, or that fails an operation, is red here
+for w in customs_stream batch_suite; do
+  echo "== gate: perfbench $w (seed 1) =="
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 \
+    > "$OUT/perfbench-$w.log" 2> "$OUT/perfbench-$w.err"
+  rc=$?
+  PLINE=$(tail -1 "$OUT/perfbench-$w.log")
+  echo "$PLINE" | head -c 400; echo
+  echo "$PLINE" | python3 -c 'import json, sys
+r = json.loads(sys.stdin.read())
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' \
+    || rc=1
+  leg "perfbench-$w" $rc
+done
 
 echo
 echo "== gate summary (logs in $OUT) =="
