@@ -29,8 +29,9 @@ case class KMinBuf(items: Seq[String])
   * aggregator itself only requires k >= 1 — CALLERS enforce the cap
   * their math needs (kmvDistinct/kmvOverlap keep k <= 64 so
   * (k-1)·2^56 stays inside a BIGINT; hashReservoir draws up to
-  * k = 4096 (hash, id) entries; the streaming gates cap at their
-  * configured distinct-state bound). Hashes are fixed-width hex, so
+  * k = 4096 (hash, id) entries; `Heuristics.cappedDistinct` keeps raw
+  * values, not hashes, at the cap of the gate that reads its count).
+  * Hashes are fixed-width hex, so
   * lexicographic String order == numeric order == Spark's UTF8String
   * binary order — but ANY strings work: the k smallest distinct
   * elements under a total order are a pure function of the set, which

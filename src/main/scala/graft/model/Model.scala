@@ -90,130 +90,23 @@ case class Alert(
 
   def meta(key: String): Option[String] =
     metadata.find(_.key == key).map(_.value)
-
-  def withMeta(key: String, value: String): Alert =
-    copy(metadata = metadata :+ AlertMetaEntry(key, value))
 }
 
-/** Well-known alert metadata keys — the full registry of the
-  * reference's AlertMeta.Key enum (ref s/alert/AlertMeta.java:31-248;
-  * template/notification-transport keys included for schema parity
-  * even where the transport itself is out of scope). */
+/** The alert metadata keys this engine reads or writes. The full
+  * registry is the reference's AlertMeta.Key enum (ref
+  * s/alert/AlertMeta.java:31-248); add a key here when code first
+  * uses it. */
 object AlertMeta {
-  val SourceAddress = "sourceaddress"
-  val SourceAddressPrevious = "sourceaddress_previous"
+  val AlertSubcategoryField = "category"
   val Count = "count"
+  val Email = "email"
+  val EmailSimilar = "email_similar"
   val MeanValue = "mean"
+  val NotifyMergeKey = "notify_merge"
+  val SourceAddress = "sourceaddress"
+  val SourceAddresses = "sourceaddresses"
   val ThresholdModifier = "threshold_modifier"
   val WindowTimestamp = "window_timestamp"
-  val Username = "username"
-  val Identity = "identity_key"
-  val Email = "email"
-  val EndpointPattern = "endpoint_pattern"
-  val ErrorCount = "error_count"
-  val UserAgent = "useragent"
-  val NotifyMergeKey = "notify_merge"
-  // addon / AMO
-  val AddonFilename = "addon_filename"
-  val AddonFromApi = "addon_from_api"
-  val AddonGuid = "addon_guid"
-  val AddonId = "addon_id"
-  val AddonSize = "addon_size"
-  val AddonUploadHash = "addon_upload_hash"
-  val AddonUserId = "addon_user_id"
-  val AddonVersion = "addon_version"
-  // alert handling / routing
-  val AlertHandlingSeverity = "alert_handling_severity"
-  val AlertNotificationType = "alert_notification_type"
-  val AlertSubcategoryField = "category"
-  val AlertIoIgnoreEvent = "alertio_ignore_event"
-  val NotifyEmailDirect = "notify_email_direct"
-  val NotifyMergedCount = "notify_merged_count"
-  val NotifySlackDirect = "notify_slack_direct"
-  val NotifySlackSupplementary = "notify_slack_supplementary"
-  val SlackSupplementaryMessage = "slack_supplementary_message"
-  val TemplateNameEmail = "template_name_email"
-  val TemplateNameSlack = "template_name_slack"
-  val TemplateNameSlackCatchall = "template_name_slack_catchall"
-  val EscalateTo = "escalate_to"
-  // auth / identity
-  val AuthAlertType = "auth_alert_type"
-  val IdentityUntracked = "identity_untracked"
-  val EntryKey = "entry_key"
-  val StateActionType = "state_action_type"
-  val Uid = "uid"
-  val Object = "object"
-  // aws / gcp
-  val AwsAccountId = "aws_account_id"
-  val AwsAccountName = "aws_account_name"
-  val AwsRegion = "aws_region"
-  val ProjectId = "project_id"
-  val ProjectNumber = "project_number"
-  val Provider = "provider"
-  val Resource = "resource"
-  val RuleName = "rule_name"
-  // findings
-  val FindingId = "finding_id"
-  val FindingType = "finding_type"
-  val Indicator = "indicator"
-  val Technique = "technique"
-  val UrlToFinding = "url_to_finding"
-  val MatchedMetadataKey = "matched_metadata_key"
-  val MatchedMetadataValue = "matched_metadata_value"
-  val MatchedObject = "matched_object"
-  val MatchedType = "matched_type"
-  // generic measures
-  val Bytes = "bytes"
-  val Description = "description"
-  val DocLink = "doc_link"
-  val EmailContact = "email_contact"
-  val EmailSimilar = "email_similar"
-  val Start = "start"
-  val End = "end"
-  val Endpoint = "endpoint"
-  val ErrorThreshold = "error_threshold"
-  val EventTimestamp = "event_timestamp"
-  val EventTimestampSourceLocal = "event_timestamp_source_local"
-  val InstanceName = "instance_name"
-  val KmDistance = "km_distance"
-  val Method = "method"
-  val MonitoredResource = "monitored_resource"
-  val RealAddressHashActual = "real_address_hash_actual"
-  val RealAddressHashExpected = "real_address_hash_expected"
-  val ReferenceId = "reference_id"
-  val RequestThreshold = "request_threshold"
-  val RestrictedValue = "restricted_value"
-  val SourceAlert = "source_alert"
-  val SourceAddresses = "sourceaddresses"
-  val Status = "status"
-  val Threshold = "threshold"
-  val TimeDeltaSeconds = "time_delta_seconds"
-  val TotalAddressCount = "total_address_count"
-  val TotalAlertCount = "total_alert_count"
-  val WatchlistCreatedBy = "watchlist_created_by"
-  // iprepd
-  val IprepdExempt = "iprepd_exempt"
-  val IprepdExemptCreatedBy = "iprepd_exempt_created_by"
-  val IprepdSuppressRecovery = "iprepd_suppress_recovery"
-  // geo / minFraud enrichment of the source address
-  val SourceAddressAsOrg = "sourceaddress_as_org"
-  val SourceAddressAsn = "sourceaddress_asn"
-  val SourceAddressCity = "sourceaddress_city"
-  val SourceAddressCountry = "sourceaddress_country"
-  val SourceAddressIsAnonymous = "sourceaddress_is_anonymous"
-  val SourceAddressIsAnonymousVpn = "sourceaddress_is_anonymous_vpn"
-  val SourceAddressIsHostingProvider = "sourceaddress_is_hosting_provider"
-  val SourceAddressIsLegitimateProxy = "sourceaddress_is_legitimate_proxy"
-  val SourceAddressIsPublicProxy = "sourceaddress_is_public_proxy"
-  val SourceAddressIsTorExitNode = "sourceaddress_is_tor_exit_node"
-  val SourceAddressIsp = "sourceaddress_isp"
-  val SourceAddressRiskScore = "sourceaddress_riskscore"
-  val SourceAddressTimezone = "sourceaddress_timezone"
-  val SourceAddressPreviousAsOrg = "sourceaddress_previous_as_org"
-  val SourceAddressPreviousAsn = "sourceaddress_previous_asn"
-  val SourceAddressPreviousCity = "sourceaddress_previous_city"
-  val SourceAddressPreviousCountry = "sourceaddress_previous_country"
-  val SourceAddressPreviousIsp = "sourceaddress_previous_isp"
 
   /** Keys whose value is a ", "-joined LIST (ref AlertMeta.java
     * ValueType.LIST declarations — EMAIL :134, EMAIL_SIMILAR :136,

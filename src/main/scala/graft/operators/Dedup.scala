@@ -512,17 +512,6 @@ object Dedup {
       .filter(col("n_shared_fp") >= minShared)
   }
 
-  /** MinHash signatures: for each of `numHashes` seeded permutations,
-    * the signature is the lexicographic min of md5(seed:shingle) over
-    * the doc's shingle set. Output: (doc_id, seed, sig). */
-  def minhashSignatures(df: DataFrame, id: Column, text: Column, n: Int,
-      numHashes: Int): DataFrame =
-    explodedShingles(df, id, text, n)
-      .select(col("doc_id"), col("s"),
-        explode(sequence(lit(1), lit(numHashes))).as("seed"))
-      .groupBy(col("doc_id"), col("seed"))
-      .agg(min(md5(concat(col("seed"), lit(":"), col("s")))).as("sig"))
-
   /** The chunked-minhash signature ARRAY per doc — the signature
     * scheme [[minhashLshPairs]] documents, factored out so the
     * symmetric (corpus self-join) and asymmetric

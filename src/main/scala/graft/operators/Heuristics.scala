@@ -85,19 +85,33 @@ object Heuristics {
       .filter(col("n") >= col("mean_n") * modifier && col("n") >= minCount)
   }
 
+  /** The one capped distinct counter of the streaming gates: a bounded
+    * [[graft.functions.KMinValuesAggregator]] over the RAW values (no
+    * hashing: the `cap` smallest distinct elements of a set count the
+    * set exactly below `cap`). The count is min(cap, true distinct),
+    * per-key state holds at most `cap` values, and nulls are not
+    * counted. A `>= threshold` gate with threshold <= cap therefore
+    * decides exactly as an exact count would, in batch and stream
+    * alike (Structured Streaming has no exact distinct aggregate). */
+  def cappedDistinct(cap: Int): Column => Column = {
+    val kmin = udaf(new graft.functions.KMinValuesAggregator(cap))
+    v => size(kmin(v).getField("items")).cast("long")
+  }
+
   /** The HTTP per-(window, client) aggregate the hard-limit,
     * error-rate, threshold and NAT decisions all read: request count
-    * `n`, 4xx count `errors` and distinct user agents `n_ua`. The
-    * distinct counter is the caller's: exact `countDistinct` in batch;
-    * a stream passes a sketch, since Structured Streaming has no
-    * distinct aggregate. */
+    * `n`, 4xx count `errors` and distinct user agents `n_ua`. `n_ua` is
+    * [[cappedDistinct]] at cap = `natMinUserAgents` (at least 1): its
+    * one reader is [[notGateway]]'s `n_ua >= natMinUserAgents`, which
+    * the capped count decides exactly, and the per-key state holds at
+    * most that many agents however many a proxy fans out. */
   def perClient(df: DataFrame, ts: Column, key: Column, userAgent: Column,
-      status: Column, duration: String,
-      distinct: Column => Column = countDistinct(_)): DataFrame =
+      status: Column, duration: String, natMinUserAgents: Long): DataFrame =
     windowedAgg(df, ts, duration, Seq(key.as("key")))(
       count(lit(1)).as("n"),
       count(when(status.between(400, 499), 1)).as("errors"),
-      distinct(userAgent).as("n_ua"))
+      cappedDistinct(natMinUserAgents.max(1L).min(Int.MaxValue).toInt)(
+        userAgent).as("n_ua"))
 
   /** The NAT gate as a row predicate over [[perClient]] rows: true where
     * the client is NOT a gateway, i.e. it carries fewer than

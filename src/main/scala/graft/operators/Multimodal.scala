@@ -54,9 +54,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Typed metadata carried alongside the payload. */
-  case class MediaMeta(kind: String, declaredBytes: Long)
-
   case class MediaRow(media_id: Long, kind: String, bytes: Array[Byte])
 
   case class MediaFeatures(

@@ -56,41 +56,6 @@ object Similarity {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
 
-  /** Embedding hygiene gate — the faiss-prep sanity pass every ANN
-    * index build runs first: a NaN/Inf component poisons every dot
-    * product it touches, a zero vector breaks cosine normalization,
-    * and a wrong-dimension vector breaks the index outright. Per
-    * vector: dimension count, exact-zero component count,
-    * non-finite component count, the quantized integer norm² (the
-    * family's exact-arithmetic convention), and the composite
-    * `healthy` gate (expected dims, all finite, non-degenerate norm).
-    *
-    * Scale shape: map-only — every statistic is a per-row Column
-    * fold fused into the scan; the gate drops into any downstream
-    * filter. norm_sq_q is computed over the FINITE components only
-    * (non-finite values zeroed before quantization): NaN/Inf
-    * arithmetic is exactly where engines diverge, so the one float
-    * hazard is removed before the integer path — and the gate
-    * already rejects such rows via n_nonfinite.
-    *
-    * Output: (vec_id, dims, n_zero, n_nonfinite, norm_sq_q, healthy). */
-  def embeddingHealth(df: DataFrame, id: Column, vec: Column,
-      expectedDims: Int): DataFrame = {
-    val sanitized = transform(vec, e =>
-      when(isnan(e) || abs(e) === lit(Float.PositiveInfinity), lit(0.0f))
-        .otherwise(e))
-    val q = quantize(sanitized)
-    df.select(id.as("vec_id"),
-        size(vec).cast("long").as("dims"),
-        size(filter(vec, e => e === 0.0f)).cast("long").as("n_zero"),
-        size(filter(vec, e => isnan(e) || abs(e) === lit(Float.PositiveInfinity)))
-          .cast("long").as("n_nonfinite"),
-        dotQ(q, q).as("norm_sq_q"))
-      .withColumn("healthy",
-        col("dims") === expectedDims && col("n_nonfinite") === 0 &&
-          col("norm_sq_q") > 0)
-  }
-
   /** cosine = dot / sqrt(na*nb), all operands exact integers. */
   private def cosine(dot: Column, na: Column, nb: Column): Column =
     dot / sqrt((na * nb).cast("double"))

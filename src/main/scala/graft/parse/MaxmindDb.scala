@@ -1,6 +1,5 @@
 package graft.parse
 
-import java.nio.file.{Files, Paths}
 import graft.model.Geo
 import graft.util.CidrUtil
 
@@ -194,9 +193,6 @@ object MaxmindDb {
   private val Marker: Array[Byte] =
     Array(0xab.toByte, 0xcd.toByte, 0xef.toByte) ++
       "MaxMind.com".getBytes("UTF-8")
-
-  def fromFile(path: String): MaxmindDb =
-    new MaxmindDb(Files.readAllBytes(Paths.get(path)))
 
   private def path(m: Map[String, Any], keys: String*): Option[Any] =
     keys.foldLeft(Option[Any](m)) {

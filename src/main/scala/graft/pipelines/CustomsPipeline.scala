@@ -154,57 +154,18 @@ object CustomsPipeline {
       velocityMonitorOnlyMaxKmPerSecond: Option[Double] = None,
       velocityMonitorOnlyMinDistanceKm: Double = 0,
       monitoredAddrs: Seq[String] = Nil,
-      monitoredAccounts: Seq[String] = Nil,
-      /** Cap on the streaming gates' per-(window, key) distinct-set
-        * state. The default (-1 = AUTO) resolves to 4× the largest
-        * configured gate threshold (see [[resolvedDistinctStateCap]])
-        * — flood-bounded out of the box, because unbounded per-key
-        * state is linear in an ATTACKER-CONTROLLED quantity (a
-        * deliberate high-cardinality flood of distinct emails/sources
-        * inflates the state store until the watermark closes the
-        * window). A positive cap switches to a bounded k-min distinct
-        * counter: exact below the cap, saturating AT it, state ≤ cap
-        * values per key — so every `>= threshold` gate decides
-        * identically as long as cap >= threshold (enforced), while
-        * the emitted count (and therefore the count-change
-        * suppressor) saturates once a key exceeds the cap. 0 opts
-        * into exact `collect_set` for deployments where batch-twin
-        * count parity at ANY fan-out matters more than flood-bounded
-        * state. */
-      distinctStateCap: Int = -1) {
+      monitoredAccounts: Seq[String] = Nil) {
 
-    /** The cap the streaming gates actually run with: the explicit
-      * value when >= 0, else (AUTO) 4× the largest gate threshold —
-      * provably gate-identical (every `>= threshold` decision is
-      * unchanged while cap >= threshold) with headroom for the
-      * emitted count to stay exact well past the alert boundary. */
-    def resolvedDistinctStateCap: Int =
-      if (distinctStateCap >= 0) distinctStateCap
-      else (4L * math.max(enumerationThreshold, srcFailDistThreshold))
-        .min(Int.MaxValue).toInt
-  }
-
-  /** Distinct-cardinality aggregate for the streaming gates: exact
-    * `collect_set` size by default; with `cap > 0`, the bounded
-    * [[graft.functions.KMinValuesAggregator]] keeps the cap-smallest
-    * DISTINCT raw values (no hashing — the k smallest distinct
-    * elements of a set count the set exactly below k), so
-    * size(items) == min(cap, true distinct) and state is bounded by
-    * construction. Nulls are not set members in either form. The cap
-    * must not sit below the gate's threshold, or a saturated count
-    * could no longer decide it. */
-  private def distinctCount(cfg: FullConfig, threshold: Long,
-      thresholdName: String): Column => Column = {
-    val cap = cfg.resolvedDistinctStateCap
-    require(cap == 0 || cap >= threshold,
-      s"distinctStateCap=$cap below $thresholdName=$threshold: a " +
-        "saturated count could no longer decide the gate")
-    v =>
-      if (cap <= 0) size(collect_set(v)).cast("long")
-      else {
-        val kmin = udaf(new graft.functions.KMinValuesAggregator(cap))
-        size(kmin(v).getField("items")).cast("long")
-      }
+    /** The cap of the streaming gates' distinct counter
+      * ([[Heuristics.cappedDistinct]]): 4× the larger gate threshold.
+      * Per-(window, key) state is linear in an attacker-controlled
+      * quantity (a flood of distinct emails or sources) unless capped;
+      * at this cap every `>= threshold` gate decides as the exact batch
+      * count does, and the emitted count stays exact up to 4× the
+      * threshold before it saturates. */
+    def streamDistinctCap: Int =
+      (4L * math.max(enumerationThreshold, srcFailDistThreshold))
+        .max(1L).min(Int.MaxValue).toInt
   }
 
   private val StatusChecks =
@@ -366,10 +327,11 @@ object CustomsPipeline {
     *
     *  - per-class summary counts (15m windowed aggregate);
     *  - source-login-failure-distributed (windowed aggregate per
-    *    account; distinct sources counted EXACTLY via collect_set, so
-    *    the gate and the alert count agree with the batch twin at the
-    *    threshold boundary — HLL++ has no sparse mode, and the
-    *    suppression/count parity contract is exact);
+    *    account; distinct sources counted by
+    *    [[Heuristics.cappedDistinct]] at `cfg.streamDistinctCap`, exact
+    *    below the cap, so the gate and the alert count agree with the
+    *    batch twin at the threshold boundary while per-key state stays
+    *    bounded under a flood);
     *  - the stateless status-comparator and monitored-activity
     *    broadcast joins (stream-static, no state).
     *
@@ -388,15 +350,14 @@ object CustomsPipeline {
   def analyzeStreamFull(lines: Dataset[String],
       cfg: FullConfig = FullConfig(),
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val distinct = distinctCount(cfg, cfg.srcFailDistThreshold,
-      "srcFailDistThreshold")
     // the watermark is assigned on the UNFILTERED parsed stream, so
     // every event of the resource advances it — a watermark placed
     // after a branch's filter would stall the whole query's (global,
     // min-of-branches) watermark whenever that event class goes quiet
     val fxa = fxaStreamFields(lines)
       .withWatermark("timestamp", watermarkDelay)
-    summaryAlerts(fxa).unionByName(srcFailDistAlerts(fxa, cfg, distinct))
+    summaryAlerts(fxa).unionByName(srcFailDistAlerts(fxa, cfg,
+        Heuristics.cappedDistinct(cfg.streamDistinctCap)))
       .unionByName(comparatorAlerts(comparatorHits(fxa, cfg)))
       .unionByName(monitoredAlerts(fxa, cfg))
   }
@@ -410,12 +371,11 @@ object CustomsPipeline {
     * and [[CustomsDetectors.enumerationGate]] (a second, window-level
     * aggregation) as a foreachBatch epilogue over the finalized
     * windows. Distinct emails are counted exactly BELOW
-    * `cfg.resolvedDistinctStateCap` and saturate AT it (the bounded
-    * k-min counter; 0 opts back into unbounded exact collect_set), so
-    * every gate decides identically to the batch twin at the
-    * threshold boundary, and the emitted count agrees with it for any
-    * key under the cap. `onAlerts` receives each finalized batch's
-    * alert rows.
+    * `cfg.streamDistinctCap` and saturate AT it
+    * ([[Heuristics.cappedDistinct]]), so every gate decides identically
+    * to the batch twin at the threshold boundary, and the emitted count
+    * agrees with it for any key under the cap. `onAlerts` receives
+    * each finalized batch's alert rows.
     *
     * `statePath`, when set, makes the suppression gate RESTART-SAFE:
     * the (key → lastTs, lastCount) map is snapshotted to parquet
@@ -437,8 +397,6 @@ object CustomsPipeline {
     import org.apache.spark.sql.streaming.OutputMode
     import org.apache.spark.sql.types.{LongType, StringType, StructField,
       StructType}
-    val distinct = distinctCount(cfg, cfg.enumerationThreshold,
-      "enumerationThreshold")
     // AlertSuppressorCount(600) state (ref
     // CustomsAccountEnumeration.java:153): one (lastTs, lastCount)
     // pair per source that has ALERTED — bounded by the alert volume,
@@ -474,7 +432,7 @@ object CustomsPipeline {
           fxaFields(parsedAll.filter(col("payloadType") === "fxaauth")),
           parsedAll)
         .withWatermark("ts", watermarkDelay),
-      cfg.window, distinct)
+      cfg.window, Heuristics.cappedDistinct(cfg.streamDistinctCap))
     perSrc.writeStream.outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF()

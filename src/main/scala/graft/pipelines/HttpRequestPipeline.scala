@@ -105,10 +105,9 @@ object HttpRequestPipeline {
       col("normalized.userAgent").as("ua"),
       col("normalized.requestStatus").as("status"))
 
-  private def perClient(events: DataFrame, cfg: Config,
-      distinct: Column => Column): DataFrame =
+  private def perClient(events: DataFrame, cfg: Config): DataFrame =
     Heuristics.perClient(events, col("timestamp"), col("src"), col("ua"),
-      col("status"), cfg.window, distinct)
+      col("status"), cfg.window, cfg.natMinDistinctUserAgents)
 
   /** Hard-limit + error-rate alert rows over per-client rows. */
   private def rateAlerts(perClient: DataFrame, cfg: Config): DataFrame =
@@ -150,7 +149,7 @@ object HttpRequestPipeline {
     // it. The streaming forms run the same aggregate and gates.
     val slim0 = slim(parsedHttp(lines))
     val events = if (cacheParsed) slim0.cache() else slim0
-    val perKey0 = perClient(events, cfg, countDistinct(_))
+    val perKey0 = perClient(events, cfg)
     // four consumers (hard + error rate, threshold per-key + per-window
     // mean) — cached so the aggregation runs once; bounded by
     // |windows x active keys|
@@ -310,20 +309,6 @@ object HttpRequestPipeline {
       }
   }
 
-  /** Streaming form of the hard-limit branch: unbounded lines →
-    * mapPartitions parse (narrow, streaming-safe) → compiled filter →
-    * [[Heuristics.hardLimit]] on the watermarked events → alert rows.
-    * Run in update mode for early firings (the reference's
-    * accumulating panes) and attach sinks via Sinks.streamTo /
-    * foreachBatch. */
-  def analyzeStream(lines: Dataset[String], cfg: Config = Config(),
-      watermarkDelay: String = "30 seconds"): DataFrame =
-    alert(Heuristics.hardLimit(
-        parsedHttp(lines).withWatermark("timestamp", watermarkDelay),
-        col("timestamp"), col("normalized.sourceAddress"), cfg.window,
-        cfg.hardLimit),
-      lit("hard_limit"), "warn", col("n"))
-
   /** The composed production shape as ONE streaming query (ref
     * HTTPRequest.java:818-889 expandInputMap: per-resource input →
     * analyses + cfgtick processor → flatten): raw multiplexed lines →
@@ -338,10 +323,10 @@ object HttpRequestPipeline {
     * consumes the DetectNat view and skips emission for flagged
     * sources (HardLimitAnalysis.java:88-128) and for configured known
     * gateways; ErrorRateAnalysis takes no NAT view. The NAT signal
-    * rides the same aggregate as the counts — HLL++
-    * (`approx_count_distinct(ua, 0.01)`), not a set: it only needs to
-    * clear a single-digit threshold, where the sparse sketch is exact,
-    * and the per-key state stays bounded however many agents a proxy
+    * rides the same aggregate as the counts: the distinct-agent count
+    * capped at the NAT threshold ([[Heuristics.cappedDistinct]]), exact
+    * below it, so the gate decides as the batch form does, and the
+    * per-key state holds at most that many agents however many a proxy
     * fans out. Append mode: a window's alerts emit once the watermark
     * passes its end; later-than-watermark events are dropped, the
     * streaming twin of the reference's `withAllowedLateness(ZERO)`.
@@ -363,8 +348,7 @@ object HttpRequestPipeline {
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val parsed = parsedHttp(lines)
     val rates = rateAlerts(perClient(
-      slim(parsed).withWatermark("timestamp", watermarkDelay), cfg,
-      approx_count_distinct(_, 0.01)), cfg)
+      slim(parsed).withWatermark("timestamp", watermarkDelay), cfg), cfg)
     // session-limit branch: its own keyed session_window state over
     // the same parsed stream; a session emits once the watermark
     // passes its gap (final pane), mirroring the batch
@@ -412,7 +396,7 @@ object HttpRequestPipeline {
       watermarkDelay: String = "30 seconds")(onAlerts: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     perClient(slim(parsedHttp(lines)).withWatermark("timestamp", watermarkDelay),
-        cfg, approx_count_distinct(_, 0.01))
+        cfg)
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>

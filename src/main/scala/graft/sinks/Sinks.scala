@@ -369,11 +369,6 @@ object Sinks {
     }
   }
 
-  /** Dev/test sink. */
-  final class ConsoleWriter(limit: Int = 20) extends AlertWriter {
-    def write(alerts: DataFrame): Unit = alerts.show(limit, false)
-  }
-
   /** Collecting sink for specs (driver-side buffer — test only). */
   final class CollectingWriter extends AlertWriter {
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]

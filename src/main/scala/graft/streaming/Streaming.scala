@@ -94,14 +94,13 @@ object Streaming {
 
   /** Windowed per-key distinct-cardinality monitor on the KMV sketch —
     * the streaming form of [[graft.operators.Heuristics.kmvDistinct]]
-    * for HIGH-cardinality regimes, completing the distinct-count
-    * triad: exact `collect_set` where decision parity demands it (the
-    * customs gates — state linear in the measured fan-out),
-    * `approx_count_distinct` where only Spark ever reads the number,
-    * and THIS where state must stay bounded at any cardinality AND
-    * the result must be engine-portable: per (window, key) the state
-    * is ≤ k 14-hex hashes (vs HLL's opaque engine-specific registers
-    * and collect_set's unbounded set), merged incrementally across
+    * for HIGH-cardinality regimes. The streaming gates (customs and
+    * the HTTP NAT check) need only a decision at a threshold, so they
+    * count with [[graft.operators.Heuristics.cappedDistinct]]: exact
+    * below a cap, saturating at it. THIS is for when the number itself
+    * is wanted at any cardinality, with bounded state, and must be
+    * engine-portable: per (window, key) the state is ≤ k 14-hex hashes
+    * (vs HLL's opaque engine-specific registers), merged incrementally across
     * micro-batches by the same order-insensitive
     * [[graft.functions.KMinValuesAggregator]] the batch form uses —
     * so a finalized window's sketch (and estimate) is BIT-IDENTICAL

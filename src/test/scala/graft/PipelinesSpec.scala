@@ -83,10 +83,14 @@ class PipelinesSpec extends AnyFunSuite {
 
   test("httprequest streaming form: unbounded lines to windowed alerts") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    val alerts = HttpRequestPipeline.analyzeStream(in.toDS(),
-      HttpRequestPipeline.Config(hardLimit = 5), watermarkDelay = "0 seconds")
+    val alerts = graft.operators.Heuristics.hardLimit(
+        HttpRequestPipeline.parsedHttp(in.toDS())
+          .withWatermark("timestamp", "0 seconds"),
+        col("timestamp"), col("normalized.sourceAddress"), "1 minute", 5)
+      .select(col("key").as("sourceaddress"), col("n").as("count"))
     val q = alerts.writeStream.format("memory").queryName("httpstream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
     try {

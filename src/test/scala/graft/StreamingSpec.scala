@@ -1482,39 +1482,29 @@ class StreamingSpec extends AnyFunSuite {
     } finally { eq.stop(); q.stop() }
   }
 
-  test("distinctStateCap AUTO default: the streaming gates ship " +
-      "flood-bounded — the resolved cap is 4x the largest gate " +
-      "threshold, explicit values win, and 0 stays the exact opt-in") {
+  test("streamDistinctCap is 4x the larger customs gate threshold") {
     import graft.pipelines.CustomsPipeline.FullConfig
     // default thresholds: enumeration 5, srcFailDist 3 -> 20
-    assert(FullConfig().resolvedDistinctStateCap == 20)
-    // the larger threshold drives the auto cap
+    assert(FullConfig().streamDistinctCap == 20)
+    // the larger threshold drives the cap
     assert(FullConfig(enumerationThreshold = 2, srcFailDistThreshold = 7)
-      .resolvedDistinctStateCap == 28)
-    // explicit cap and the exact opt-in pass through untouched
-    assert(FullConfig(distinctStateCap = 6).resolvedDistinctStateCap == 6)
-    assert(FullConfig(distinctStateCap = 0).resolvedDistinctStateCap == 0)
-    // the auto cap always satisfies the gates' require (cap >= every
-    // threshold) by construction — 4x the max
+      .streamDistinctCap == 28)
+    // the cap sits at or above every threshold by construction
     val c = FullConfig(enumerationThreshold = 1000,
       srcFailDistThreshold = 999)
-    assert(c.resolvedDistinctStateCap >= c.enumerationThreshold &&
-      c.resolvedDistinctStateCap >= c.srcFailDistThreshold)
+    assert(c.streamDistinctCap >= c.enumerationThreshold &&
+      c.streamDistinctCap >= c.srcFailDistThreshold)
   }
 
-  test("distinctStateCap bounds the streaming gates' per-key set state: " +
-      "decisions and counts identical to exact below the cap, a flood " +
-      "key saturates AT the cap (still alerting), and a cap below the " +
-      "threshold is rejected up front") {
+  test("capped distinct counter: customs gates exact below the cap, " +
+      "a flood saturates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.pipelines.CustomsPipeline
-    // cap == enumerationThreshold: the tightest legal cap — exactly
-    // where the ADVICE's "threshold+1 preserves decisions" intuition
-    // is sharpest (n_kept == cap <=> distinct >= cap >= threshold)
+    // thresholds 5 and 3: the derived cap is 4 x 5 = 20
     val cfg = CustomsPipeline.FullConfig(enumerationThreshold = 5,
-      minVarianceClients = 1, srcFailDistThreshold = 3,
-      distinctStateCap = 5)
+      minVarianceClients = 1, srcFailDistThreshold = 3)
+    assert(cfg.streamDistinctCap == 20)
     val t = 1700000000L
     def authLine(tt: Long, path: String, status: Int, email: String,
         addr: String, errno: Int = 0): String = {
@@ -1533,24 +1523,24 @@ class StreamingSpec extends AnyFunSuite {
         s""""method":"get","status":200}}"""
     val lines: Seq[String] =
       // src A: exactly-threshold 5 distinct emails -> alert, count 5
-      // (below-the-cap EXACT path: identical to the uncapped gate)
+      // (below-the-cap EXACT path: identical to an exact count)
       (0 until 5).map(i => authLine(t + i, "/v1/account/status", 200,
         s"a$i@x.com", "6.6.6.6")) ++
       // src B: 4 distinct emails -> silent (exact below cap)
       (0 until 5).map(i => authLine(t + i, "/v1/account/status", 200,
         s"b${math.min(i, 3)}@x.com", "6.6.6.7")) ++
-      // src F: a 20-distinct-email FLOOD, split across two
+      // src F: a 25-distinct-email FLOOD, split across two
       // micro-batches so the bounded state must merge incrementally
-      // -> alerts with count SATURATED at the cap (the documented
-      // trade: the exact form would carry 20 and 20 set members)
+      // -> alerts with count SATURATED at the cap of 20 (an exact
+      // count would carry 25 and hold 25 set members)
       (0 until 12).map(i => authLine(t + i, "/v1/account/status", 200,
         s"f$i@x.com", "6.6.6.8")) ++
       Seq(contentLine(t)) ++
       // email X: 3 failures, 3 distinct srcs (== srcFailDistThreshold,
-      // below cap 5 -> exact count 3)
+      // below the cap -> exact count 3)
       (0 until 3).map(i => authLine(t + i, "/v1/account/login", 400,
         "x@x.com", s"1.2.3.$i", errno = 103))
-    val floodTail = (12 until 20).map(i => authLine(t + i,
+    val floodTail = (12 until 25).map(i => authLine(t + i,
       "/v1/account/status", 200, s"f$i@x.com", "6.6.6.8"))
     val pusher = authLine(t + 7200, "/v1/account/status", 200,
       "z@x.com", "3.3.3.3")
@@ -1577,24 +1567,10 @@ class StreamingSpec extends AnyFunSuite {
             "source_login_failure_distributed")).collect().toSeq)
       assert(streamed == Set(
         ("account_enumeration", "6.6.6.6", 5L),
-        ("account_enumeration", "6.6.6.8", 5L), // saturated: true 20
+        ("account_enumeration", "6.6.6.8", 20L), // saturated: true 25
         ("source_login_failure_distributed", "x@x.com", 3L)),
         s"streamed $streamed")
     } finally { eq.stop(); q.stop() }
-    // a cap that cannot decide the gate is a config error, up front
-    val bad = CustomsPipeline.FullConfig(enumerationThreshold = 5,
-      distinctStateCap = 4)
-    val ex1 = intercept[IllegalArgumentException] {
-      CustomsPipeline.enumerationAlertStream(
-        spark.emptyDataset[String], bad) { _ => () }
-    }
-    assert(ex1.getMessage.contains("distinctStateCap"))
-    val bad2 = CustomsPipeline.FullConfig(srcFailDistThreshold = 3,
-      distinctStateCap = 2)
-    val ex2 = intercept[IllegalArgumentException] {
-      CustomsPipeline.analyzeStreamFull(spark.emptyDataset[String], bad2)
-    }
-    assert(ex2.getMessage.contains("distinctStateCap"))
   }
 
   test("streaming enumeration suppression survives a query restart when " +
@@ -1768,6 +1744,68 @@ class StreamingSpec extends AnyFunSuite {
       val batch = rows(HttpRequestPipeline.analyze((lines :+ pusher).toDS(), cfg))
       assert(batch == Set(("hard_limit", null, 8L), ("threshold", null, 8L)),
         s"batch $batch")
+      assert(streamed == batch, s"streamed $streamed")
+    } finally { q.stop(); tq.stop() }
+  }
+
+  test("NAT gate on a bounded counter: a 50-agent gateway and a client " +
+      "one agent under the NAT threshold (plus null agents) decide as the " +
+      "batch pipeline, and the per-client state stays small per row") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipelines.HttpRequestPipeline
+    val cfg = HttpRequestPipeline.Config(hardLimit = 10, errorMaxCount = 100,
+      thresholdModifier = 1.5, natMinDistinctUserAgents = 4,
+      maxSessionEvents = 1000)
+    def glb(ip: String, ua: Option[String], t: String) = {
+      val agent = ua.fold("")(a => s""","userAgent":"$a"""")
+      s"""{"httpRequest":{"requestMethod":"GET","requestUrl":"https://h/x","status":200,"remoteIp":"$ip"$agent},"timestamp":"$t","logName":"projects/p/logs/l"}"""
+    }
+    // minute 0: 1.1.1.1 is a gateway with 50 distinct agents; 2.2.2.2
+    // carries natMin - 1 = 3 agents plus null-agent rows (nulls are not
+    // agents), so it is no gateway; three quiet clients shape the mean
+    val lines: Seq[String] =
+      (0 until 50).map(i => glb("1.1.1.1", Some(s"agent$i"),
+        f"2024-01-01T00:00:${i % 60}%02dZ")) ++
+      (0 until 12).map(i => glb("2.2.2.2", Some(s"ua${i % 3}"),
+        f"2024-01-01T00:00:$i%02dZ")) ++
+      (0 until 6).map(i => glb("2.2.2.2", None,
+        f"2024-01-01T00:00:${20 + i}%02dZ")) ++
+      Seq("3.3.3.3", "4.4.4.4", "5.5.5.5").map(ip =>
+        glb(ip, Some("ua"), "2024-01-01T00:00:40Z"))
+    val pusher = glb("9.9.9.9", Some("ua"), "2024-01-01T00:03:00Z")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("subcategory"), col("sourceaddress"), col("count"))
+        .as[(String, String, Long)].collect().toSet
+    val in = MemoryStream[String]
+    val q = HttpRequestPipeline.analyzeStreamFull(in.toDS(), cfg,
+        watermarkDelay = "30 seconds")
+      .writeStream.format("memory").queryName("natbounded")
+      .outputMode(OutputMode.Append()).start()
+    val thresholdRows =
+      scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
+    val tq = HttpRequestPipeline.thresholdAlertStream(in.toDS(), cfg,
+        watermarkDelay = "30 seconds") { df =>
+      val r = rows(df); thresholdRows.synchronized { thresholdRows ++= r }
+    }.start()
+    try {
+      in.addData(lines: _*); q.processAllAvailable(); tq.processAllAvailable()
+      // the threshold sibling's one state operator is the per-client
+      // aggregate; its minute-0 rows are still open here. An HLL++
+      // buffer at rsd 0.01 alone is ~13 KB per row
+      val ops = tq.lastProgress.stateOperators.filter(_.numRowsTotal > 0)
+      assert(ops.length == 1, ops.mkString(", "))
+      val bytesPerRow = ops.head.memoryUsedBytes / ops.head.numRowsTotal
+      assert(ops.head.numRowsTotal == 5 && bytesPerRow < 4096,
+        s"${ops.head.numRowsTotal} rows, $bytesPerRow bytes per row")
+      in.addData(pusher); q.processAllAvailable(); tq.processAllAvailable()
+      val streamed = rows(spark.table("natbounded")
+          .filter(col("subcategory") =!= "cfgtick")) ++
+        thresholdRows.synchronized(thresholdRows.toSet)
+      val batch = rows(HttpRequestPipeline.analyze((lines :+ pusher).toDS(), cfg))
+      // 2.2.2.2's 18 requests (mean 71 / 5 = 14.2, x 1.5 = 21.3) trip
+      // the hard limit only; the gateway's 50 trip nothing
+      assert(batch == Set(("hard_limit", "2.2.2.2", 18L)), s"batch $batch")
       assert(streamed == batch, s"streamed $streamed")
     } finally { q.stop(); tq.stop() }
   }

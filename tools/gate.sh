@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # One-command round gate: sbt test + Verify + DuckDB oracle + Bench +
-# the declared benchmark workloads (perfbench, seed 1, each must be
-# correct with 0 failed).
+# the perfbench workloads customs_stream, batch_suite and http_stream
+# (seed 1, each must be correct with 0 failed).
 # Exits nonzero the moment any leg goes red, and prints one PASS/FAIL
 # summary line per leg — so loader-class breakage (round 7: a testdata
 # regeneration silently darkened 55/84 queries) is caught the moment it
@@ -58,8 +58,10 @@ leg "bench" $rc
 
 # the benchmark's harness compiles against the engine's pipeline entry
 # points and checks every streamed alert against its batch twin, so a
-# run that is not correct, or that fails an operation, is red here
-for w in customs_stream batch_suite; do
+# run that is not correct, or that fails an operation, is red here.
+# http_stream is not a declared workload, but it is the batch-twin
+# check of the HTTP streams (analyzeStreamFull, thresholdAlertStream)
+for w in customs_stream batch_suite http_stream; do
   echo "== gate: perfbench $w (seed 1) =="
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 \
     > "$OUT/perfbench-$w.log" 2> "$OUT/perfbench-$w.err"
