@@ -577,13 +577,12 @@ object SparkEntry {
         .orderBy(col("uid"), col("ts_ms"), col("actual"))
     }),
 
-    // §2.5 CustomsActivityForMonitoredAccounts: broadcast monitored-
-    // account list semi-join (ref s/customs/
-    // CustomsActivityForMonitoredAccounts.java:51-126; same broadcast
-    // shape as CustomsStatusComparator.java:89-182 keyed by address)
+    // §2.5 CustomsActivityForMonitoredAccounts: monitored-account
+    // list as a literal-set probe (ref s/customs/
+    // CustomsActivityForMonitoredAccounts.java:51-126; same probe as
+    // CustomsStatusComparator.java:89-182 keyed by address)
     "q47_monitored_activity" -> ((s, dir) => {
-      import s.implicits._
-      val monitored = s.createDataset((0 until 10000 by 17).map(i => s"user$i"))
+      val monitored = (0 until 10000 by 17).map(i => s"user$i")
       val e = Tables.events(s, dir)
         .filter(col("event_type").isin("view", "error"))
         .withColumn("email", concat(lit("user"), col("user_id")))
@@ -1158,10 +1157,8 @@ object SparkEntry {
     // the Datastore state CustomsStatusComparator.java:155-166
     // writes becomes a broadcast per-email min-flag-ts aggregate)
     "q81_at_risk_failure" -> ((s, dir) => {
-      import s.implicits._
       import operators.CustomsDetectors
-      val monitored =
-        s.createDataset(Seq("10.9.0.1", "10.9.0.2", "10.9.0.3"))
+      val monitored = Seq("10.9.0.1", "10.9.0.2", "10.9.0.3")
       val e = Tables.events(s, dir)
         .withColumn("email", concat(lit("user"), col("user_id") % 500))
         .withColumn("src",

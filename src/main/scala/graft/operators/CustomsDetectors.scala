@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Functions
@@ -231,13 +231,14 @@ object CustomsDetectors {
   }
 
   /** CustomsStatusComparator: status-check events whose source address
-    * appears on a (small, broadcast) monitored-address list. */
+    * is on the monitored-address list, a literal-set probe (`isin`; a
+    * hashed `InSet` above Catalyst's conversion threshold). */
   def statusComparator(df: DataFrame, ts: Column, addr: Column,
-      email: Column, monitoredAddrs: Dataset[String]): DataFrame =
+      email: Column, monitoredAddrs: Seq[String]): DataFrame =
     df.select(unix_millis(ts).as("ts_ms"), addr.as("src"),
         email.as("email"))
-      .filter(col("src").isNotNull && col("email").isNotNull)
-      .join(broadcast(monitoredAddrs.toDF("src")), Seq("src"), "left_semi")
+      .filter(col("src").isNotNull && col("email").isNotNull &&
+        col("src").isin(monitoredAddrs: _*))
 
   /** CustomsLoginFailureForAtRiskAccount (ref s/customs/
     * CustomsLoginFailureForAtRiskAccount.java:63-150): login failures
@@ -268,15 +269,15 @@ object CustomsDetectors {
   }
 
   /** CustomsActivityForMonitoredAccounts: login activity for accounts
-    * on a (small, broadcast) monitored-account list. */
+    * on the monitored-account list (the same literal-set probe as
+    * [[statusComparator]]). */
   def monitoredActivity(df: DataFrame, ts: Column, email: Column,
       addr: Column, action: Column,
-      monitoredAccounts: Dataset[String]): DataFrame =
+      monitoredAccounts: Seq[String]): DataFrame =
     df.select(unix_millis(ts).as("ts_ms"), email.as("email"),
         addr.as("src"), action.as("action"))
-      .filter(col("email").isNotNull && col("src").isNotNull)
-      .join(broadcast(monitoredAccounts.toDF("email")), Seq("email"),
-        "left_semi")
+      .filter(col("email").isNotNull && col("src").isNotNull &&
+        col("email").isin(monitoredAccounts: _*))
 
   /** CustomsSummary: per-class event counts over fixed windows. */
   def summary(df: DataFrame, ts: Column, cls: Column,

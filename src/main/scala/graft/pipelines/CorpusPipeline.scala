@@ -497,7 +497,8 @@ object CorpusPipeline {
     * dominate within-batch matches in the emitted evidence (the
     * index copy is the older one).
     *
-    * This is a foreachBatch sibling by design, like the repo's other
+    * This is a foreachBatch sibling by design, hosted by
+    * [[graft.streaming.Streaming.finalized]] like the repo's other
     * cross-batch-state streams (README "Deploying the streaming
     * engine"): the index join is a batch join against a stored
     * table, which no append-mode stateful operator expresses. The
@@ -532,148 +533,144 @@ object CorpusPipeline {
       (onDecisions: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    docs.select(id.as("doc_id"), text.as("t"))
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.types._
-        // heal-then-read (a compaction crash between its two renames
-        // leaves <dir>.old with no live dir; reading that as "empty
-        // index" would silently re-admit previously-seen docs)
-        def readOr(dir: String, schema: StructType): DataFrame =
-          graft.sinks.Sinks.readSnapshotOr(spark, dir, schema)
-        val hashSchema = StructType(Seq(
-          StructField("chash", StringType), StructField("doc_id", LongType)))
-        val bandSchema = StructType(Seq(
-          StructField("bkey", StringType), StructField("doc_id", LongType),
-          StructField("sig", ArrayType(StringType))))
-        val chunkSchema = StructType(Seq(
-          StructField("chunk_md5", StringType),
-          StructField("doc_id", LongType)))
-        val idxHashes = readOr(s"$indexDir/hashes", hashSchema)
-        val idxBands = readOr(s"$indexDir/bands", bandSchema)
-        val idxChunks = readOr(s"$indexDir/chunks", chunkSchema)
+    graft.streaming.Streaming.finalized(
+        docs.select(id.as("doc_id"), text.as("t"))) { b =>
+      val spark = b.sparkSession
+      import org.apache.spark.sql.types._
+      // heal-then-read (a compaction crash between its two renames
+      // leaves <dir>.old with no live dir; reading that as "empty
+      // index" would silently re-admit previously-seen docs)
+      def readOr(dir: String, schema: StructType): DataFrame =
+        graft.sinks.Sinks.readSnapshotOr(spark, dir, schema)
+      val hashSchema = StructType(Seq(
+        StructField("chash", StringType), StructField("doc_id", LongType)))
+      val bandSchema = StructType(Seq(
+        StructField("bkey", StringType), StructField("doc_id", LongType),
+        StructField("sig", ArrayType(StringType))))
+      val chunkSchema = StructType(Seq(
+        StructField("chunk_md5", StringType),
+        StructField("doc_id", LongType)))
+      val idxHashes = readOr(s"$indexDir/hashes", hashSchema)
+      val idxBands = readOr(s"$indexDir/bands", bandSchema)
+      val idxChunks = readOr(s"$indexDir/chunks", chunkSchema)
 
-        val b = batch.toDF().persist()
-        val withHash = b.withColumn("chash",
-          md5(graft.functions.Functions.unicodeNormalize(col("t"))))
-        // exact: against the index, then within the batch (lower id wins)
-        val exIdx = withHash.join(idxHashes
-            .select(col("chash"), lit(true).as("hit_idx")).distinct(),
-          Seq("chash"), "left")
-        val batchMin = withHash.groupBy(col("chash"))
-          .agg(min(col("doc_id")).as("first_id"))
-        val exact = exIdx.join(batchMin, Seq("chash"))
-          .select(col("doc_id"), col("t"),
-            (coalesce(col("hit_idx"), lit(false)) ||
-              col("doc_id") > col("first_id")).as("exact_dup"))
-        // near: banded sigs of the batch vs the index's banded rows
-        val sigs = Dedup.minhashSigArray(b, col("doc_id"), col("t"), n,
-          numHashes, org.apache.spark.storage.StorageLevel.NONE).persist()
-        val banded = Dedup.bandedSigs(sigs, numHashes, bands)
-        val candIdx = banded.alias("x")
-          .join(idxBands.alias("y"), col("x.bkey") === col("y.bkey"))
-          .select(col("x.doc_id").as("doc_id"),
-            col("y.doc_id").as("old_id"),
-            col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
-          .dropDuplicates("doc_id", "old_id")
-        // within-batch near pairs: the symmetric operator, higher id
-        // flagged against the lower; an explicit is_index priority in
-        // the max_by key below makes already-indexed matches win
-        // n_match ties over same-batch ones (the evidence invariant:
-        // a doc near-duping BOTH the corpus and a batch sibling
-        // should cite the corpus), then lowest old_id
-        val candBatch = Dedup.minhashLshPairs(b, col("doc_id"),
-            col("t"), n, numHashes, bands, minEstJaccard = 0.0,
-            org.apache.spark.storage.StorageLevel.NONE)
-          .select(col("doc_b").as("doc_id"), col("doc_a").as("old_id"),
-            col("n_match"), col("est_jaccard"),
-            lit(false).as("is_index"))
-        val scoredIdx = candIdx
-          .withColumn("n_match",
-            size(filter(zip_with(col("sig_a"), col("sig_b"),
-              (a, c) => a === c), x => x)).cast("long"))
-          .withColumn("est_jaccard", col("n_match") / lit(numHashes.toDouble))
-          .select(col("doc_id"), col("old_id"), col("n_match"),
-            col("est_jaccard"), lit(true).as("is_index"))
-        val best = scoredIdx.union(candBatch)
-          .filter(col("est_jaccard") >= minEstJaccard)
-          .groupBy(col("doc_id"))
-          .agg(max_by(struct(col("old_id"), col("n_match"),
-              col("est_jaccard")),
-            struct(col("n_match"), col("is_index"), -col("old_id"))).as("bst"))
-          .select(col("doc_id"), col("bst.old_id").as("near_dup_of"),
-            col("bst.n_match").as("n_match"),
-            col("bst.est_jaccard").as("est_jaccard"))
-        // chunk screen: a doc most of whose gear chunks already exist
-        // in the corpus (or an earlier batch sibling) is shifted byte
-        // duplication even when no single pair clears the minhash bar.
-        // Distinct chunk hashes only — repeated boilerplate inside one
-        // doc counts once
-        val bChunks = Dedup.gearChunks(b, col("doc_id"), col("t"),
-            chunkMaskBits, chunkWindow)
-          .select(col("doc_id"), col("chunk_md5")).distinct().persist()
-        val nChunks = bChunks.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_chunks"))
-        // retried appends can double-write index rows — dedup the
-        // donor side before counting (duplicate candidates, never
-        // wrong decisions, same note as the hash/band tables)
-        val chunkDonors = idxChunks
-          .select(col("chunk_md5"), col("doc_id").as("old_id"),
-            lit(true).as("is_index")).distinct()
-          .union(bChunks.select(col("chunk_md5"),
-            col("doc_id").as("old_id"), lit(false).as("is_index")))
-        val chunkHits = bChunks.join(chunkDonors, Seq("chunk_md5"))
-          .filter(col("is_index") || col("old_id") < col("doc_id"))
-        val chunkBest = chunkHits
-          .groupBy(col("doc_id"), col("old_id"), col("is_index"))
-          .agg(count(lit(1)).as("n_shared"))
-          .groupBy(col("doc_id"))
-          .agg(max_by(col("old_id"), struct(col("n_shared"),
-            col("is_index"), -col("old_id"))).as("best_old"))
-        val chunkScreen = chunkHits.groupBy(col("doc_id"))
-          .agg(countDistinct(col("chunk_md5")).as("n_hit"))
-          .join(chunkBest, Seq("doc_id"))
-          .join(nChunks, Seq("doc_id"))
-          .filter(col("n_hit") >= lit(minChunkOverlap) * col("n_chunks"))
-          .select(col("doc_id"), col("best_old").as("chunk_dup_of"),
-            (col("n_hit") / col("n_chunks")).as("chunk_overlap"))
-        // localCheckpoint (eager), NOT persist: the appends below write
-        // to the very paths this plan reads, and Spark's write-path
-        // recache would otherwise re-evaluate `kept` AGAINST THE ROWS
-        // JUST APPENDED — a doc would see its own hash land and flip
-        // to exact_dup, emptying the bands append. Truncating the
-        // lineage pins the decisions to this batch's pre-append view.
-        val decisions = exact.join(best, Seq("doc_id"), "left")
-          .join(chunkScreen, Seq("doc_id"), "left")
-          .withColumn("keep", !col("exact_dup") &&
-            col("near_dup_of").isNull && col("chunk_dup_of").isNull)
-          .localCheckpoint(true)
-        onDecisions(decisions.select(col("doc_id"), col("exact_dup"),
-          col("near_dup_of"), col("n_match"), col("est_jaccard"),
-          col("chunk_dup_of"), col("chunk_overlap"), col("keep")))
-        // index only the kept docs
-        val kept = decisions.filter(col("keep")).select(col("doc_id"))
-        withHash.join(kept, Seq("doc_id"))
-          .select(col("chash"), col("doc_id"))
-          .write.mode("append").parquet(s"$indexDir/hashes")
-        Dedup.bandedSigs(sigs.join(kept, Seq("doc_id")), numHashes, bands)
-          .select(col("bkey"), col("doc_id"), col("sig"))
-          .write.mode("append").parquet(s"$indexDir/bands")
-        bChunks.join(kept, Seq("doc_id"))
-          .select(col("chunk_md5"), col("doc_id"))
-          .write.mode("append").parquet(s"$indexDir/chunks")
-        decisions.unpersist(); sigs.unpersist(); bChunks.unpersist()
-        b.unpersist()
-        // small-files control (see scaladoc): rewrite any index table
-        // whose part-file count crossed the threshold
-        for ((table, key) <- Seq("hashes" -> "chash", "bands" -> "bkey",
-            "chunks" -> "chunk_md5")) {
-          val dir = s"$indexDir/$table"
-          if (graft.sinks.Sinks.parquetFileCount(spark, dir) > compactAt)
-            graft.sinks.Sinks.compactParquetDir(spark, dir, key, compactTo)
-        }
-        ()
+      val withHash = b.withColumn("chash",
+        md5(graft.functions.Functions.unicodeNormalize(col("t"))))
+      // exact: against the index, then within the batch (lower id wins)
+      val exIdx = withHash.join(idxHashes
+          .select(col("chash"), lit(true).as("hit_idx")).distinct(),
+        Seq("chash"), "left")
+      val batchMin = withHash.groupBy(col("chash"))
+        .agg(min(col("doc_id")).as("first_id"))
+      val exact = exIdx.join(batchMin, Seq("chash"))
+        .select(col("doc_id"), col("t"),
+          (coalesce(col("hit_idx"), lit(false)) ||
+            col("doc_id") > col("first_id")).as("exact_dup"))
+      // near: banded sigs of the batch vs the index's banded rows
+      val sigs = Dedup.minhashSigArray(b, col("doc_id"), col("t"), n,
+        numHashes, org.apache.spark.storage.StorageLevel.NONE).persist()
+      val banded = Dedup.bandedSigs(sigs, numHashes, bands)
+      val candIdx = banded.alias("x")
+        .join(idxBands.alias("y"), col("x.bkey") === col("y.bkey"))
+        .select(col("x.doc_id").as("doc_id"),
+          col("y.doc_id").as("old_id"),
+          col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
+        .dropDuplicates("doc_id", "old_id")
+      // within-batch near pairs: the symmetric operator, higher id
+      // flagged against the lower; an explicit is_index priority in
+      // the max_by key below makes already-indexed matches win
+      // n_match ties over same-batch ones (the evidence invariant:
+      // a doc near-duping BOTH the corpus and a batch sibling
+      // should cite the corpus), then lowest old_id
+      val candBatch = Dedup.minhashLshPairs(b, col("doc_id"),
+          col("t"), n, numHashes, bands, minEstJaccard = 0.0,
+          org.apache.spark.storage.StorageLevel.NONE)
+        .select(col("doc_b").as("doc_id"), col("doc_a").as("old_id"),
+          col("n_match"), col("est_jaccard"),
+          lit(false).as("is_index"))
+      val scoredIdx = candIdx
+        .withColumn("n_match",
+          size(filter(zip_with(col("sig_a"), col("sig_b"),
+            (a, c) => a === c), x => x)).cast("long"))
+        .withColumn("est_jaccard", col("n_match") / lit(numHashes.toDouble))
+        .select(col("doc_id"), col("old_id"), col("n_match"),
+          col("est_jaccard"), lit(true).as("is_index"))
+      val best = scoredIdx.union(candBatch)
+        .filter(col("est_jaccard") >= minEstJaccard)
+        .groupBy(col("doc_id"))
+        .agg(max_by(struct(col("old_id"), col("n_match"),
+            col("est_jaccard")),
+          struct(col("n_match"), col("is_index"), -col("old_id"))).as("bst"))
+        .select(col("doc_id"), col("bst.old_id").as("near_dup_of"),
+          col("bst.n_match").as("n_match"),
+          col("bst.est_jaccard").as("est_jaccard"))
+      // chunk screen: a doc most of whose gear chunks already exist
+      // in the corpus (or an earlier batch sibling) is shifted byte
+      // duplication even when no single pair clears the minhash bar.
+      // Distinct chunk hashes only — repeated boilerplate inside one
+      // doc counts once
+      val bChunks = Dedup.gearChunks(b, col("doc_id"), col("t"),
+          chunkMaskBits, chunkWindow)
+        .select(col("doc_id"), col("chunk_md5")).distinct().persist()
+      val nChunks = bChunks.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_chunks"))
+      // retried appends can double-write index rows — dedup the
+      // donor side before counting (duplicate candidates, never
+      // wrong decisions, same note as the hash/band tables)
+      val chunkDonors = idxChunks
+        .select(col("chunk_md5"), col("doc_id").as("old_id"),
+          lit(true).as("is_index")).distinct()
+        .union(bChunks.select(col("chunk_md5"),
+          col("doc_id").as("old_id"), lit(false).as("is_index")))
+      val chunkHits = bChunks.join(chunkDonors, Seq("chunk_md5"))
+        .filter(col("is_index") || col("old_id") < col("doc_id"))
+      val chunkBest = chunkHits
+        .groupBy(col("doc_id"), col("old_id"), col("is_index"))
+        .agg(count(lit(1)).as("n_shared"))
+        .groupBy(col("doc_id"))
+        .agg(max_by(col("old_id"), struct(col("n_shared"),
+          col("is_index"), -col("old_id"))).as("best_old"))
+      val chunkScreen = chunkHits.groupBy(col("doc_id"))
+        .agg(countDistinct(col("chunk_md5")).as("n_hit"))
+        .join(chunkBest, Seq("doc_id"))
+        .join(nChunks, Seq("doc_id"))
+        .filter(col("n_hit") >= lit(minChunkOverlap) * col("n_chunks"))
+        .select(col("doc_id"), col("best_old").as("chunk_dup_of"),
+          (col("n_hit") / col("n_chunks")).as("chunk_overlap"))
+      // localCheckpoint (eager), NOT persist: the appends below write
+      // to the very paths this plan reads, and Spark's write-path
+      // recache would otherwise re-evaluate `kept` AGAINST THE ROWS
+      // JUST APPENDED — a doc would see its own hash land and flip
+      // to exact_dup, emptying the bands append. Truncating the
+      // lineage pins the decisions to this batch's pre-append view.
+      val decisions = exact.join(best, Seq("doc_id"), "left")
+        .join(chunkScreen, Seq("doc_id"), "left")
+        .withColumn("keep", !col("exact_dup") &&
+          col("near_dup_of").isNull && col("chunk_dup_of").isNull)
+        .localCheckpoint(true)
+      onDecisions(decisions.select(col("doc_id"), col("exact_dup"),
+        col("near_dup_of"), col("n_match"), col("est_jaccard"),
+        col("chunk_dup_of"), col("chunk_overlap"), col("keep")))
+      // index only the kept docs
+      val kept = decisions.filter(col("keep")).select(col("doc_id"))
+      withHash.join(kept, Seq("doc_id"))
+        .select(col("chash"), col("doc_id"))
+        .write.mode("append").parquet(s"$indexDir/hashes")
+      Dedup.bandedSigs(sigs.join(kept, Seq("doc_id")), numHashes, bands)
+        .select(col("bkey"), col("doc_id"), col("sig"))
+        .write.mode("append").parquet(s"$indexDir/bands")
+      bChunks.join(kept, Seq("doc_id"))
+        .select(col("chunk_md5"), col("doc_id"))
+        .write.mode("append").parquet(s"$indexDir/chunks")
+      decisions.unpersist(); sigs.unpersist(); bChunks.unpersist()
+      // small-files control (see scaladoc): rewrite any index table
+      // whose part-file count crossed the threshold
+      for ((table, key) <- Seq("hashes" -> "chash", "bands" -> "bkey",
+          "chunks" -> "chunk_md5")) {
+        val dir = s"$indexDir/$table"
+        if (graft.sinks.Sinks.parquetFileCount(spark, dir) > compactAt)
+          graft.sinks.Sinks.compactParquetDir(spark, dir, key, compactTo)
       }
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.Functions
 import graft.parse.Parser
@@ -208,28 +208,21 @@ object CustomsPipeline {
       col("n_src"))
 
   /** Status-comparator hits: also the at-risk account state. */
-  private def comparatorHits(fxa: DataFrame, cfg: FullConfig): DataFrame = {
-    val spark = fxa.sparkSession
-    import spark.implicits._
+  private def comparatorHits(fxa: DataFrame, cfg: FullConfig): DataFrame =
     CustomsDetectors.statusComparator(
       fxa.filter(col("summary") === "accountStatusCheckSuccess"),
-      col("timestamp"), col("src"), col("email"),
-      spark.createDataset(cfg.monitoredAddrs))
-  }
+      col("timestamp"), col("src"), col("email"), cfg.monitoredAddrs)
 
   private def comparatorAlerts(hits: DataFrame): DataFrame =
     alert(hits, "status_comparator", "sourceaddress", col("src"), lit(1),
       col("ts_ms"))
 
-  private def monitoredAlerts(fxa: DataFrame, cfg: FullConfig): DataFrame = {
-    val spark = fxa.sparkSession
-    import spark.implicits._
+  private def monitoredAlerts(fxa: DataFrame, cfg: FullConfig): DataFrame =
     alert(CustomsDetectors.monitoredActivity(
         fxa.filter(col("summary").isin("loginSuccess", "loginFailure")),
         col("timestamp"), col("email"), col("src"), col("summary"),
-        spark.createDataset(cfg.monitoredAccounts)),
+        cfg.monitoredAccounts),
       "activity_monitor", "email", col("email"), lit(1), col("ts_ms"))
-  }
 
   /** The full customs suite over ONE parsed+cached frame — the Spark
     * form of the reference's ~12-transform wiring (ref Customs.java:
@@ -353,9 +346,14 @@ object CustomsPipeline {
     // the watermark is assigned on the UNFILTERED parsed stream, so
     // every event of the resource advances it — a watermark placed
     // after a branch's filter would stall the whole query's (global,
-    // min-of-branches) watermark whenever that event class goes quiet
+    // min-of-branches) watermark whenever that event class goes quiet.
+    // Catalyst moves a branch filter that does not read the event time
+    // below the watermark; filters never cross an observation, so this
+    // one keeps every parsed event on the clock (without it, status
+    // checks from unlisted addresses would stop advancing it)
     val fxa = fxaStreamFields(lines)
       .withWatermark("timestamp", watermarkDelay)
+      .observe("customs_events", count(lit(1)).as("n_events"))
     summaryAlerts(fxa).unionByName(srcFailDistAlerts(fxa, cfg,
         Heuristics.cappedDistinct(cfg.streamDistinctCap)))
       .unionByName(comparatorAlerts(comparatorHits(fxa, cfg)))
@@ -394,9 +392,9 @@ object CustomsPipeline {
       watermarkDelay: String = "30 seconds",
       statePath: Option[String] = None)(onAlerts: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.streaming.OutputMode
     import org.apache.spark.sql.types.{LongType, StringType, StructField,
       StructType}
+    import graft.streaming.Streaming
     // AlertSuppressorCount(600) state (ref
     // CustomsAccountEnumeration.java:153): one (lastTs, lastCount)
     // pair per source that has ALERTED — bounded by the alert volume,
@@ -433,54 +431,50 @@ object CustomsPipeline {
           parsedAll)
         .withWatermark("ts", watermarkDelay),
       cfg.window, Heuristics.cappedDistinct(cfg.streamDistinctCap))
-    perSrc.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        val alerts = alert(CustomsDetectors.enumerationGate(
-            cfg.enumerationThreshold, Some(cfg.minVarianceClients))(b),
-          "account_enumeration", "sourceaddress", col("src"),
-          col("n_emails"), col("latest_ts_ms"))
-        // count-aware suppression, same decisions as the batch twin's
-        // suppressCountGate: emit iff no state, strictly past expiry,
-        // or the count changed; overwrite state on every emission.
-        // The clock is the alert's latest-qualifying-event stamp
-        // (alert_ts_ms carries it, exactly like the batch twin)
-        val rows = alerts.collect()
-        val (state, maxWindowStartMs) = committed.get()
-        var next = state
-        val survivors = rows.sortBy(r => (r.getAs[String]("key"),
-            r.getAs[Long]("alert_ts_ms"), r.getAs[Long]("count")))
-          .filter { r =>
-            val (k, t, c) = (r.getAs[String]("key"),
-              r.getAs[Long]("alert_ts_ms"), r.getAs[Long]("count"))
-            val emit = next.get(k).forall { case (st, sc) =>
-              t - st > expiryMs || sc != c }
-            if (emit) next += k -> ((t, c))
-            emit
-          }
-        // prune decision-irrelevant entries (see clock note above)
-        val maxWs = Option(b.agg(max(col("window_start_ms"))).head()
-            .getAs[java.lang.Long](0))
-          .fold(maxWindowStartMs)(w => math.max(w, maxWindowStartMs))
-        if (maxWs != Long.MinValue)
-          next = next.filter { case (_, (t, _)) => maxWs - t < expiryMs }
-        onAlerts(b.sparkSession.createDataFrame(
-          b.sparkSession.sparkContext.parallelize(survivors.toSeq, 1),
-          alerts.schema))
-        committed.set((next, maxWs))
-        statePath.foreach { p =>
-          if (next != state) {
-            val ss = b.sparkSession
-            import ss.implicits._
-            // two-rename swap: a crash mid-overwrite must not lose the
-            // whole suppression state (Sinks.atomicSnapshotSwap heals
-            // its own window on the next write or restore)
-            graft.sinks.Sinks.atomicSnapshotSwap(
-              next.toSeq.map { case (k, (t, c)) => (k, t, c) }
-                .toDF("key", "last_ts_ms", "last_count"), p)
-          }
+    Streaming.finalized(perSrc) { b =>
+      val alerts = alert(CustomsDetectors.enumerationGate(
+          cfg.enumerationThreshold, Some(cfg.minVarianceClients))(b),
+        "account_enumeration", "sourceaddress", col("src"),
+        col("n_emails"), col("latest_ts_ms"))
+      // count-aware suppression per source, the kernel of the keyed
+      // Streaming.suppressCount, on microseconds (the map and its
+      // snapshot keep milliseconds). The clock is the alert's
+      // latest-qualifying-event stamp (alert_ts_ms carries it, exactly
+      // like the batch twin suppressCountGate)
+      val (state, maxWindowStartMs) = committed.get()
+      var next = state
+      val survivors = alerts.collect().groupBy(_.getAs[String]("key"))
+        .toSeq.sortBy(_._1).flatMap { case (k, rows) =>
+          val (st, out) = Streaming.suppressCountScan[Row](
+            expiryMs * 1000L, _.getAs[Long]("alert_ts_ms") * 1000L,
+            _.getAs[Long]("count"))(next.get(k).map { case (t, c) =>
+              Streaming.CountState(t * 1000L, c) }, rows.toSeq)
+          st.foreach(s => next += k -> ((s.lastEmitUs / 1000L, s.lastCount)))
+          out
+        }
+      // prune decision-irrelevant entries (see clock note above)
+      val maxWs = Option(b.agg(max(col("window_start_ms"))).head()
+          .getAs[java.lang.Long](0))
+        .fold(maxWindowStartMs)(w => math.max(w, maxWindowStartMs))
+      if (maxWs != Long.MinValue)
+        next = next.filter { case (_, (t, _)) => maxWs - t < expiryMs }
+      onAlerts(b.sparkSession.createDataFrame(
+        b.sparkSession.sparkContext.parallelize(survivors, 1),
+        alerts.schema))
+      committed.set((next, maxWs))
+      statePath.foreach { p =>
+        if (next != state) {
+          val ss = b.sparkSession
+          import ss.implicits._
+          // two-rename swap: a crash mid-overwrite must not lose the
+          // whole suppression state (Sinks.atomicSnapshotSwap heals
+          // its own window on the next write or restore)
+          graft.sinks.Sinks.atomicSnapshotSwap(
+            next.toSeq.map { case (k, (t, c)) => (k, t, c) }
+              .toDF("key", "last_ts_ms", "last_count"), p)
         }
       }
+    }
   }
 
   /** Streaming at-risk login-failure chain — comparator flags and
@@ -497,11 +491,10 @@ object CustomsPipeline {
     import graft.streaming.Streaming
     val fxa = fxaStreamFields(lines)
       .filter(col("src").isNotNull && col("email").isNotNull)
-    val monitored = typedLit(cfg.monitoredAddrs)
     val ev = fxa.select(col("email").as("key"),
         unix_micros(col("timestamp")).as("tsUs"),
         when(col("summary") === "accountStatusCheckSuccess" &&
-            array_contains(monitored, col("src")), "flag")
+            col("src").isin(cfg.monitoredAddrs: _*), "flag")
           .when(col("summary") === "loginFailure", "fail")
           .as("kind"))
       .filter(col("kind").isNotNull)

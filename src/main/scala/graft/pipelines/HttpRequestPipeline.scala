@@ -384,22 +384,15 @@ object HttpRequestPipeline {
     * the batch form (ThresholdAnalysis consumes the DetectNat view):
     * the batch form's per-client aggregate runs as ONE stateful
     * append-mode aggregate, and [[Heuristics.thresholdGate]] plus the
-    * NAT predicate run in its foreachBatch epilogue, where each
-    * finalized window arrives whole. The epilogue evaluates the
-    * finalized batch exactly once (a local checkpoint) before the gate:
-    * every state-store partition of the micro-batch must commit, so
-    * the query cannot hinge on whether `onAlerts` evaluates the lazy
-    * frame it is handed. `onAlerts` receives alert rows in the
-    * [[analyze]] schema. Start this alongside [[analyzeStreamFull]]
+    * NAT predicate run in its
+    * [[graft.streaming.Streaming.finalized]] epilogue, where each
+    * finalized window arrives whole. `onAlerts` receives alert rows in
+    * the [[analyze]] schema. Start this alongside [[analyzeStreamFull]]
     * over the same lines for the full per-resource fan-out. */
   def thresholdAlertStream(lines: Dataset[String], cfg: Config = Config(),
       watermarkDelay: String = "30 seconds")(onAlerts: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    perClient(slim(parsedHttp(lines)).withWatermark("timestamp", watermarkDelay),
-        cfg)
-      .writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        onAlerts(thresholdAlerts(batch.toDF().localCheckpoint(), cfg))
-      }
+    graft.streaming.Streaming.finalized(perClient(
+        slim(parsedHttp(lines)).withWatermark("timestamp", watermarkDelay),
+        cfg))(b => onAlerts(thresholdAlerts(b, cfg)))
 }

@@ -369,13 +369,10 @@ object Sinks {
     }
   }
 
-  /** Collecting sink for specs (driver-side buffer — test only). */
-  final class CollectingWriter extends AlertWriter {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    def write(alerts: DataFrame): Unit = buf ++= alerts.collect()
-  }
-
-  /** Attach a writer to a streaming alert frame via foreachBatch. */
+  /** Attach a writer to a streaming alert frame via foreachBatch: a sink
+    * adapter whose writer evaluates each micro-batch once (its one
+    * write), so unlike a [[graft.streaming.Streaming.finalized]]
+    * epilogue it needs no checkpoint. */
   def streamTo(alerts: DataFrame, writer: AlertWriter)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     alerts.writeStream.foreachBatch {

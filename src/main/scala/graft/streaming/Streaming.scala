@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
-  SparkSession}
+  Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ListState, OutputMode,
-  StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ListState,
+  OutputMode, StatefulProcessor, StatefulProcessorWithInitialState,
+  TTLConfig, TimeMode, TimerValues, ValueState}
 import graft.operators.{Heuristics, HttpHeuristics, Sampling}
 
 /** Structured-Streaming forms of the engine's core operators
@@ -18,7 +18,7 @@ import graft.operators.{Heuristics, HttpHeuristics, Sampling}
   *    detectors have no streaming copy here — their batch builders
   *    (`Heuristics.windowedAgg` and its callers) run unchanged on a
   *    watermarked frame, and their finalized-window gates run in the
-  *    pipelines' foreachBatch epilogues. The sketch and windowed
+  *    pipelines' [[finalized]] epilogues. The sketch and windowed
   *    monitor streams are `windowedAgg` over the batch operator's own
   *    aggregate column and finish, no aggregation code of their own
   *  - session_window ↔ ref 45-min-gap sessions (:151-163); the
@@ -175,6 +175,25 @@ object Streaming {
       "window_start_ms", "stratum")
   }
 
+  /** The one host of every `foreachBatch` epilogue: `frame` in append
+    * mode, each micro-batch handed to `epilogue` as an eager local
+    * checkpoint. Inside `foreachBatch` a stateful frame is lazy: every
+    * action on it re-runs its stateful plan, reloading and re-committing
+    * the state store, and an epilogue that never acts on it commits
+    * nothing, which Spark 4.1 rejects
+    * (`STATE_STORE_COMMIT_VALIDATION_FAILED`). The checkpoint runs each
+    * batch's plan exactly once per batch id, the condition of Structured
+    * Streaming's exactly-once state, whatever the epilogue does; its
+    * actions read the checkpointed rows, which a write back to a path
+    * the frame reads leaves unchanged. The context cleaner frees the
+    * blocks once the frame is unreachable. */
+  def finalized(frame: DataFrame)(epilogue: DataFrame => Unit)
+      : DataStreamWriter[Row] =
+    frame.writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        epilogue(batch.toDF().localCheckpoint())
+      }
+
   /** Streaming language-mix monitor — the ingestion-drift view a
     * multilingual corpus build watches (is the crawl's language mix
     * moving?): classify each arriving document with the PRE-TRAINED
@@ -211,7 +230,7 @@ object Streaming {
     * counts compared window-over-window (the monitor on top of the
     * monitor: q164's composition as a standing query). Drift needs
     * each window's PREDECESSOR, which finalized in an EARLIER
-    * micro-batch, so the compare runs as a foreachBatch epilogue over
+    * micro-batch, so the compare runs as a [[finalized]] epilogue over
     * finalized windows (the enumerationAlertStream pattern) with a
     * driver-side carry of the trailing window's counts — bounded by
     * ≤ 2·|langs| entries after pruning, the documented
@@ -233,40 +252,35 @@ object Streaming {
       model: Map[String, Map[String, Long]], penalty: Int, d: Int,
       windowMs: Long, watermarkDelay: String, warnPct: Int,
       critPct: Int, minCount: Long, maxChars: Int = 4096)
-      (onAlerts: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.streaming.OutputMode
+      (onAlerts: DataFrame => Unit): DataStreamWriter[Row] = {
     require(windowMs > 0, "windowMs must be positive")
     val counts = langIdStream(df, tsName, text, model, penalty, d,
       s"$windowMs milliseconds", watermarkDelay, maxChars)
     val carry = scala.collection.mutable.Map[(Long, String), Long]()
-    counts.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          val sp = batch.sparkSession
-          rows.foreach { r =>
-            carry((r.getLong(0), r.getString(1))) = r.getLong(2)
-          }
-          // only THIS batch's newly-finalized windows can alert;
-          // their predecessors are in the carry (or this batch)
-          val wsSet = rows.map(_.getLong(0)).toSet
-          val local = sp.createDataFrame(
-            java.util.Arrays.asList(carry.collect {
-              case ((ws, l), n) if wsSet(ws) || wsSet(ws + windowMs) =>
-                org.apache.spark.sql.Row(ws, l, n)
-            }.toSeq: _*), batch.schema)
-          onAlerts(graft.operators.TextAnalysis.langMixDrift(
-              local, windowMs, warnPct, critPct, minCount)
-            .filter(col("window_start_ms").isin(wsSet.toSeq: _*)))
-          // prune: windows finalize in watermark order, so any entry
-          // older than the newest finalized window can only ever be
-          // the predecessor of an ALREADY-finalized one
-          val maxWs = carry.keys.map(_._1).max
-          carry.filterInPlace { case ((ws, _), _) => ws >= maxWs }
+    finalized(counts) { batch =>
+      val rows = batch.collect()
+      if (rows.nonEmpty) {
+        rows.foreach { r =>
+          carry((r.getLong(0), r.getString(1))) = r.getLong(2)
         }
-        ()
+        // only THIS batch's newly-finalized windows can alert;
+        // their predecessors are in the carry (or this batch)
+        val wsSet = rows.map(_.getLong(0)).toSet
+        val local = batch.sparkSession.createDataFrame(
+          java.util.Arrays.asList(carry.collect {
+            case ((ws, l), n) if wsSet(ws) || wsSet(ws + windowMs) =>
+              Row(ws, l, n)
+          }.toSeq: _*), batch.schema)
+        onAlerts(graft.operators.TextAnalysis.langMixDrift(
+            local, windowMs, warnPct, critPct, minCount)
+          .filter(col("window_start_ms").isin(wsSet.toSeq: _*)))
+        // prune: windows finalize in watermark order, so any entry
+        // older than the newest finalized window can only ever be
+        // the predecessor of an ALREADY-finalized one
+        val maxWs = carry.keys.map(_._1).max
+        carry.filterInPlace { case ((ws, _), _) => ws >= maxWs }
       }
+    }
   }
 
   /** Streaming quality-mix monitor — the SHIPPED LLR classifier
@@ -321,7 +335,7 @@ object Streaming {
   /** Streaming key-skew monitor — the in-flight form of
     * [[graft.operators.Skew.keySkewCardBy]]: per-window per-key
     * counts under a watermark (Append mode — a window's counts
-    * finalize exactly once, together), with a foreachBatch epilogue
+    * finalize exactly once, together), with a [[finalized]] epilogue
     * folding each finalized window's counts into its skew card and
     * handing the card rows to `onCards`. The NAT-flood alarm is the
     * card itself: `hot_fold_x1000` crossing a provisioning threshold
@@ -346,17 +360,12 @@ object Streaming {
     * source IP) RAISES with the xxhash64 remediation. */
   def keySkewStream(df: DataFrame, tsName: String, key: Column,
       windowDuration: String, watermarkDelay: String, topK: Int = 10)
-      (onCards: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val counts = Heuristics.windowedAgg(
+      (onCards: DataFrame => Unit): DataStreamWriter[Row] =
+    finalized(Heuristics.windowedAgg(
         df.withWatermark(tsName, watermarkDelay), col(tsName),
-        windowDuration, Seq(key.as("k")))(count(lit(1)).as("n"))
-    counts.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) onCards(keySkewEpilogue(batch.toDF(), topK))
-        ()
-      }
-  }
+        windowDuration, Seq(key.as("k")))(count(lit(1)).as("n"))) { b =>
+      if (!b.isEmpty) onCards(keySkewEpilogue(b, topK))
+    }
 
   /** [[keySkewStream]]'s foreachBatch epilogue as a NAMED batch
     * function: finalized (window_start_ms, k, n) counts → one skew
@@ -542,23 +551,34 @@ object Streaming {
       expirySeconds: Long): Dataset[EmittedCount] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val expiryUs = expirySeconds * 1000000L
     keyedScan[KeyedCount, CountState, EmittedCount](ds, _.key,
-        "lastEmit") { (key, st0, events) =>
-      var st = st0
-      val out = Seq.newBuilder[EmittedCount]
-      // (ts, count) sort — same tie discipline as the batch twin
-      // (Stateful.suppressCount): equal-ts events replay smaller
-      // count first, so emit-on-change fires deterministically
-      events.sortBy(e => (e.tsUs, e.count)).foreach { e =>
-        if (st.forall(s => e.tsUs - s.lastEmitUs > expiryUs ||
-            e.count != s.lastCount)) {
-          st = Some(CountState(e.tsUs, e.count))
-          out += EmittedCount(key, e.tsUs, e.count)
-        }
-      }
-      (st, out.result())
+        "lastEmit") { (key, st, events) =>
+      val (next, out) = suppressCountScan[KeyedCount](
+        expirySeconds * 1000000L, _.tsUs, _.count)(st, events)
+      (next, out.map(e => EmittedCount(key, e.tsUs, e.count)))
     }
+  }
+
+  /** One key's AlertSuppressorCount decisions, shared by
+    * [[suppressCount]] and `CustomsPipeline.enumerationAlertStream`:
+    * events in (ts, count) order (the batch twin's ties: equal-ts events
+    * replay the smaller count first); emit iff no state, strictly more
+    * than `expiryUs` past the last emission, or a different count; each
+    * emission overwrites the state. Returns the final state and the
+    * emitted events. */
+  def suppressCountScan[E](expiryUs: Long, tsUs: E => Long,
+      count: E => Long)(st0: Option[CountState], events: Seq[E])
+      : (Option[CountState], Seq[E]) = {
+    var st = st0
+    val out = Seq.newBuilder[E]
+    events.sortBy(e => (tsUs(e), count(e))).foreach { e =>
+      if (st.forall(s => tsUs(e) - s.lastEmitUs > expiryUs ||
+          count(e) != s.lastCount)) {
+        st = Some(CountState(tsUs(e), count(e)))
+        out += e
+      }
+    }
+    (st, out.result())
   }
 
   // -- element-count early firing (assume-role correlation) --------------

@@ -352,13 +352,13 @@ class CustomsDetectorsSpec extends AnyFunSuite {
     val cmp = CustomsDetectors.statusComparator(
       fxa.filter(col("summary") === "accountStatusCheckSuccess"),
       col("timestamp"), col("src"), col("email"),
-      spark.createDataset(Seq("5.5.5.5"))).collect()
+      Seq("5.5.5.5")).collect()
     assert(cmp.map(_.getAs[String]("email")).toSet == Set("a@x.com"))
 
     val act = CustomsDetectors.monitoredActivity(
       fxa.filter(col("summary").isin("loginSuccess", "loginFailure")),
       col("timestamp"), col("email"), col("src"), col("summary"),
-      spark.createDataset(Seq("mon@x.com"))).collect()
+      Seq("mon@x.com")).collect()
     assert(act.length == 2)
     assert(act.map(_.getAs[String]("action")).toSet ==
       Set("loginSuccess", "loginFailure"))

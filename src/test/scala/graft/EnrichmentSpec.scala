@@ -93,7 +93,12 @@ class EnrichmentSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val writer = new Sinks.CollectingWriter
+    // a driver-side buffer: each micro-batch collected once
+    val writer = new Sinks.AlertWriter {
+      val buf = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      def write(alerts: org.apache.spark.sql.DataFrame): Unit =
+        buf ++= alerts.collect()
+    }
     val q = Sinks.streamTo(in.toDS().toDF("subcategory", "n"), writer).start()
     try {
       in.addData(("hard_limit", 7L))

@@ -1209,7 +1209,7 @@ class FixtureReplaySpec extends AnyFunSuite {
   test("customs_status_comparator1+2: monitored-address hit then at-risk login failure (ref TestCustoms#statusComparatorTest)") {
     val spark2 = spark
     import spark2.implicits._
-    val monitored = fixture("customs_status_comparator_address_list.txt").toDS()
+    val monitored = fixture("customs_status_comparator_address_list.txt")
     val fxa = parsedFxa(lines("customs_status_comparator1.txt",
         "customs_status_comparator2.txt"))
       .withColumn("path", element_at(col("fields"), "path"))
@@ -1241,7 +1241,7 @@ class FixtureReplaySpec extends AnyFunSuite {
       import spark2.implicits._
       // the same fixture content through the streaming at-risk state op:
       // batch 1 = comparator hits (flags), batch 2 = login failures
-      val monitored = fixture("customs_status_comparator_address_list.txt").toDS()
+      val monitored = fixture("customs_status_comparator_address_list.txt")
       val b1 = parsedFxa(lines("customs_status_comparator1.txt"))
       val flagged = CustomsDetectors.statusComparator(
         b1.filter(col("summary").isin("accountStatusCheckSuccess",
@@ -1854,7 +1854,7 @@ class FixtureReplaySpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val accounts =
-      fixture("customs_activity_for_monitored_accounts_account_list.txt").toDS()
+      fixture("customs_activity_for_monitored_accounts_account_list.txt")
     // no XFF selector in this detector: the normalized source is the
     // last chain element (127.0.0.1), exactly what the reference
     // asserts as SOURCEADDRESS

@@ -14,11 +14,12 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("monitored-list detectors broadcast the list side") {
+  test("monitored-list detectors probe the list as a literal set, with " +
+      "no join") {
     val p = plan(SparkEntry.queries("q47_monitored_activity")(spark, sf))
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
-      s"monitored list should broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"))
+    assert(p.contains("INSET"), s"monitored list should be an InSet probe:\n$p")
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"monitored list should not be joined:\n$p")
   }
 
   test("account enumeration: variance gate joins stay keyed, clients broadcast") {

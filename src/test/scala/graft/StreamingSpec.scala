@@ -1266,11 +1266,16 @@ class StreamingSpec extends AnyFunSuite {
 
     // the multiplexed input: (resource, line) pairs, one monitored
     // resource consumed through its branch, cfg ticks riding the
-    // same stream (ref Input.compositeInputAdapter + CfgTickProcessor)
+    // same stream (ref Input.compositeInputAdapter + CfgTickProcessor).
+    // One MemoryStream per query, fed the same pairs: a MemoryStream
+    // trims its buffer on every commit, so a second query reading the
+    // same one could find a batch already trimmed away
+    def muxLines(in: MemoryStream[(String, String)]) =
+      graft.sources.Multiplex.branch(in.toDF().toDF("resource", "value"),
+        "test")
     val in = MemoryStream[(String, String)]
-    val mux = in.toDF().toDF("resource", "value")
-    val testLines = graft.sources.Multiplex.branch(mux, "test")
-    val alerts = HttpRequestPipeline.analyzeStreamFull(testLines, cfg,
+    val thresholdIn = MemoryStream[(String, String)]
+    val alerts = HttpRequestPipeline.analyzeStreamFull(muxLines(in), cfg,
       watermarkDelay = "30 seconds")
     val q = alerts.writeStream.format("memory").queryName("httpe2e")
       .outputMode(OutputMode.Append()).start()
@@ -1279,7 +1284,7 @@ class StreamingSpec extends AnyFunSuite {
     // per-resource parse)
     val thresholdRows =
       scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
-    val tq = HttpRequestPipeline.thresholdAlertStream(testLines, cfg,
+    val tq = HttpRequestPipeline.thresholdAlertStream(muxLines(thresholdIn), cfg,
         watermarkDelay = "30 seconds") { df =>
       val rows = df.select(col("subcategory"), col("sourceaddress"),
           col("count"), coalesce(col("window_start_ms"), lit(-1L)))
@@ -1288,7 +1293,9 @@ class StreamingSpec extends AnyFunSuite {
     }.start()
     try {
       Seq(batch1, batch2, batch3, batch4).foreach { b =>
-        in.addData(b.map(l => ("test", l)) :+ (("other", glb("9.9.9.9", 200, "ua", "2024-01-01T00:00:00Z"))): _*)
+        val pairs = b.map(l => ("test", l)) :+ (("other", glb("9.9.9.9", 200, "ua", "2024-01-01T00:00:00Z")))
+        in.addData(pairs: _*)
+        thresholdIn.addData(pairs: _*)
         q.processAllAvailable()
         tq.processAllAvailable()
       }
@@ -2122,5 +2129,108 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(q.isActive && q.exception.isEmpty, s"${q.exception}")
     } finally q.stop()
+  }
+
+  test("every foreachBatch epilogue runs its micro-batch's stateful plan " +
+      "once: one state-store stage per batch, whatever the epilogue " +
+      "evaluates") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageCompleted, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+    import graft.pipelines.{CustomsPipeline, HttpRequestPipeline}
+    // completed stages carrying a StateStoreRDD, per (query id, batch
+    // id): the streaming engine stamps both on every job a micro-batch
+    // submits, the epilogue's jobs included
+    val batchOf = scala.collection.mutable.Map[Int, (String, String)]()
+    val counts = scala.collection.mutable.Map[(String, String), Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).foreach { p =>
+          val b = (p.getProperty("sql.streaming.queryId"),
+            p.getProperty("streaming.sql.batchId"))
+          if (b._1 != null && b._2 != null)
+            batchOf.synchronized(batchOf(e.stageInfo.stageId) = b)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.failureReason.isEmpty &&
+            e.stageInfo.rddInfos.exists(_.name.contains("StateStoreRDD")))
+          batchOf.synchronized(batchOf.get(e.stageInfo.stageId)).foreach {
+            b => counts.synchronized(counts(b) = counts.getOrElse(b, 0) + 1)
+          }
+    }
+    def perBatch(name: String, writer: DataStreamWriter[Row],
+        in: MemoryStream[String], batches: Seq[Seq[String]],
+        out: scala.collection.mutable.ArrayBuffer[Row]): Unit = {
+      val q: StreamingQuery = writer.start()
+      try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val got = counts.synchronized(counts.collect {
+        case ((id, b), n) if id == q.id.toString => b.toLong -> n }.toMap)
+      assert(out.synchronized(out.nonEmpty), s"$name emitted nothing")
+      assert(got.size >= batches.size && got.values.forall(_ == 1),
+        s"$name: state-store stages per micro-batch $got")
+    }
+    def collecting(out: scala.collection.mutable.ArrayBuffer[Row])
+        : DataFrame => Unit = df => {
+      val rows = df.collect(); out.synchronized { out ++= rows } }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // enumeration: a window of 5 distinct emails and a content client,
+      // closed by a later line (the gate's broadcast side, its main side
+      // and the prune clock all read the finalized batch)
+      val t = 1699999800L
+      def authLine(tt: Long, email: String): String = {
+        val iso = java.time.Instant.ofEpochSecond(tt).toString
+        s"""{"insertId":"i","jsonPayload":{"EnvVersion":"2.0","Fields":{""" +
+          s""""agent":"m","email":"$email","errno":0,"method":"post",""" +
+          s""""op":"request.summary","path":"/v1/account/status",""" +
+          s""""remoteAddressChain":"[\\"6.6.6.6\\"]","service":"sync",""" +
+          s""""status":200,"t":12,"uid":"u"},"Logger":"fxa-auth-server",""" +
+          s""""Pid":1,"Severity":6,"Timestamp":${tt}000000000,""" +
+          s""""Type":"request.summary"},"timestamp":"$iso"}"""
+      }
+      val content =
+        s"""{"Timestamp":${t}000000000,"Type":"request","Logger":"fxa-content-server",""" +
+          s""""Hostname":"h","Fields":{"clientaddress":"7.7.7.7","path":"/s",""" +
+          s""""method":"get","status":200}}"""
+      val enumIn = MemoryStream[String]
+      val enumOut = scala.collection.mutable.ArrayBuffer[Row]()
+      perBatch("enumerationAlertStream",
+        CustomsPipeline.enumerationAlertStream(enumIn.toDS(),
+          CustomsPipeline.FullConfig(enumerationThreshold = 5,
+            minVarianceClients = 1))(collecting(enumOut)),
+        enumIn, Seq((0 until 5).map(i => authLine(t + i, s"e$i@x.com")) :+
+          content, Seq(authLine(t + 5000, "z@x.com"))), enumOut)
+      // threshold: five clients in one window, closed by a later request
+      def glb(ip: String, ts: String) =
+        s"""{"httpRequest":{"requestMethod":"GET","requestUrl":"https://h/x","status":200,"remoteIp":"$ip","userAgent":"ua"},"timestamp":"$ts","logName":"projects/p/logs/l"}"""
+      val httpIn = MemoryStream[String]
+      val httpOut = scala.collection.mutable.ArrayBuffer[Row]()
+      perBatch("thresholdAlertStream",
+        HttpRequestPipeline.thresholdAlertStream(httpIn.toDS(),
+          HttpRequestPipeline.Config())(collecting(httpOut)),
+        httpIn, Seq((0 until 5).map(i => glb(s"1.1.1.$i",
+            f"2024-01-01T00:00:$i%02dZ")) ++
+          (0 until 20).map(_ => glb("1.1.1.9", "2024-01-01T00:00:30Z")),
+          Seq(glb("9.9.9.9", "2024-01-01T00:03:00Z"))), httpOut)
+      // key skew: an onCards that collects, on a batch that finalizes
+      // a window (the skip-when-empty probe reads the same batch)
+      val skewIn = MemoryStream[String]
+      val skewOut = scala.collection.mutable.ArrayBuffer[Row]()
+      perBatch("keySkewStream",
+        Streaming.keySkewStream(
+          skewIn.toDS().select(
+            timestamp_seconds(split(col("value"), ",")(0).cast("long"))
+              .as("ts"),
+            split(col("value"), ",")(1).cast("long").as("user_id")),
+          "ts", col("user_id"), "10 minutes", "30 seconds")(
+          collecting(skewOut)),
+        skewIn, Seq((1 to 5).map(i => s"${1700000000L + i},${i % 2}"),
+          Seq(s"${1700000000L + 7200},9")), skewOut)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -65,13 +65,18 @@ for w in customs_stream batch_suite http_stream; do
   echo "== gate: perfbench $w (seed 1) =="
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 \
     > "$OUT/perfbench-$w.log" 2> "$OUT/perfbench-$w.err"
-  rc=$?
+  prc=$?
+  rc=$prc
   PLINE=$(tail -1 "$OUT/perfbench-$w.log")
   echo "$PLINE" | head -c 400; echo
   echo "$PLINE" | python3 -c 'import json, sys
 r = json.loads(sys.stdin.read())
 sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' \
     || rc=1
+  if [ "$rc" -ne 0 ]; then
+    echo "perfbench $w exited $prc; last 30 lines of its stderr:"
+    tail -30 "$OUT/perfbench-$w.err"
+  fi
   leg "perfbench-$w" $rc
 done
 
